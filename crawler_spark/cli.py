@@ -57,9 +57,6 @@ def build_parser() -> argparse.ArgumentParser:
     ap.add_argument("--lazy-robots", action="store_true",
                     help="no pre-warmed robots table: fetch {host}/robots.txt "
                          "through the fetcher the first wave a host appears")
-    ap.add_argument("--politeness-salt", type=int, default=0,
-                    help=">0 enables the salted per-host selection pre-prune "
-                         "(J5 skew guard; 16-64 for Zipf frontiers)")
     ap.add_argument("--recrawl-ttl", type=int, default=0,
                     help=">0: instead of a fresh crawl, re-fetch URLs from "
                          "the --checkpoint-dir store whose last successful "
@@ -174,7 +171,6 @@ def main(argv: list[str] | None = None) -> int:
         max_depth=args.max_depth, max_pages=args.max_pages,
         max_waves=args.max_waves, blacklist=tuple(args.blacklist),
         shuffle_partitions=args.shuffle_partitions,
-        politeness_salt=args.politeness_salt,
         snapshot_keep=args.snapshot_keep,
         checkpoint_dir=args.checkpoint_dir, stop_flag_path=args.stop_flag)
 

@@ -19,9 +19,9 @@ Scale note: 64-bit keys over 10^10 URLs expect ~3 birthday collisions
 (n^2/2^65) — a collision silently drops one URL, matching the accepted
 practice for web-crawl dedup; the test-scale oracle equality is unaffected
 (collision probability ~1e-11 at 1e4 URLs). The partitioned bitset is sized
-from bits/key so the 10^10 design point shards into `bloom_parts` broadcast
-pieces; at cluster scale the probe-side would lazy-load only its partition's
-bitset from the snapshot store instead of a full broadcast (same layout).
+from bits/key so the 10^10 design point shards into `SeenBloom.n_parts`
+pieces; past `SeenBloom.BROADCAST_MAX_BYTES` the probe side lazy-loads only
+its partitions' bitsets from spill files instead of a full broadcast.
 """
 
 from __future__ import annotations
@@ -133,7 +133,8 @@ BLOOM_SCHEMA = StructType([
 
 def build_bloom_parts(seen: DataFrame, n_parts: int, keys_per_part: int,
                       fpp: float) -> DataFrame:
-    """Partial aggregate: per salted partition, a Bloom bitset over url_hash.
+    """Partial aggregate: per pmod(url_hash, n_parts) partition, a Bloom
+    bitset over url_hash.
     applyInPandas per part (UDAF-shaped partial; driver OR-merge is final)."""
     m_probe = BloomFilter(keys_per_part, fpp)          # fixes (m, k) for all parts
 
@@ -155,11 +156,20 @@ def build_bloom_parts(seen: DataFrame, n_parts: int, keys_per_part: int,
 
 
 class SeenBloom:
-    """Driver-held merged bloom state: {part -> bitset}, broadcast to probes."""
+    """Driver-held merged bloom state: {part -> bitset}, broadcast to probes.
 
-    def __init__(self, n_parts: int, keys_per_part: int, fpp: float):
+    Owns its geometry (the defaults are the wave loop's) and its probe
+    distribution: given a `spill_root`, a filter whose merged bitsets exceed
+    BROADCAST_MAX_BYTES is probed from per-part spill files under it instead
+    of a full broadcast. At 10^10 keys/fpp=0.01 the filter is ~12 GB — never
+    broadcast that."""
+
+    BROADCAST_MAX_BYTES = 64 << 20
+
+    def __init__(self, n_parts: int = 32, keys_per_part: int = 1 << 14,
+                 fpp: float = 0.01, spill_root: str | None = None):
         # power-of-2 so Spark's pmod(signed long) and numpy's uint64-% agree
-        assert n_parts & (n_parts - 1) == 0, "bloom_parts must be a power of 2"
+        assert n_parts & (n_parts - 1) == 0, "n_parts must be a power of 2"
         self.n_parts = n_parts
         self.keys_per_part = keys_per_part
         self.fpp = fpp
@@ -177,6 +187,7 @@ class SeenBloom:
         self._ver: dict[int, int] = {}     # per-part last-spilled version
         self._dirty: set[int] = set()      # parts changed since last spill
         self.spill_dir: str | None = None
+        self.spill_root = spill_root
 
     def merge_from(self, bloom_rows: list) -> None:
         """Final aggregate: OR new per-partition bitsets into driver state.
@@ -238,7 +249,9 @@ class SeenBloom:
     #   * broadcast (default): every executor receives ALL part bitsets.
     #     Fine while the merged filter is small; at the 10^10-key/fpp=0.01
     #     design point it is ~12 GB — too big to ship to every executor.
-    #   * spilled (partition-local): `spill(dir)` writes one blob per part
+    #   * spilled (partition-local): entered by `broadcast()` once the
+    #     filter outgrows BROADCAST_MAX_BYTES and a `spill_root` is set, or
+    #     by an explicit `spill(dir)`. It writes one blob per part
     #     to a shared store (the snapshot dir in this repo; an object store
     #     at cluster scale) and the broadcast carries only geometry + path.
     #     Each task lazy-loads exactly the partitions its Arrow batch
@@ -303,6 +316,11 @@ class SeenBloom:
 
     def broadcast(self, spark: SparkSession):
         if self._bc is None:
+            # size-bounded probe distribution: past the broadcast budget,
+            # switch to partition-local spill files under spill_root
+            if (self.spill_root and not self._spill_base
+                    and self.total_bytes() > self.BROADCAST_MAX_BYTES):
+                self.spill(self.spill_root)
             # self-healing: a merge after a spill leaves dirty parts whose
             # on-disk bitsets are stale — re-spill them before any probe
             # ships, so a forgotten explicit spill() can never serve a

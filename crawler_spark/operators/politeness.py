@@ -6,22 +6,18 @@ model each wave is a nominal `spec.wave_ms` time slice; a host accrues
 ``spec.tokens_for(crawl_delay)`` tokens per wave (capped) and spends one per
 fetch. Token state lives in the `hosts` table, so it survives checkpoints.
 
-Selection runs as ``groupBy(host).applyInPandas`` (grouped-map, per north_rule)
-— per host: sort pending by (priority, depth, url_canon), flag the first
-``floor(tokens)``. Token *spend* is applied afterwards from the final
-selection counts, because the global page budget (W3) may truncate after
-per-host selection; the oracle (tests/oracle.py) spends identically.
+Selection is one path: ``select_batch_salted`` — a (host, salt) window
+pre-prune (the J5 skew guard: a Zipf head host's pending set splits over
+``SKEW_SALT`` uniform groups, each keeping only its top-``floor(tokens)``
+rows) followed by a per-host window rank over the bounded survivors, flagging
+the first ``floor(tokens)`` by (priority, depth, url_canon). No Python runs.
+Token *spend* is applied afterwards from the final selection counts, because
+the global page budget (W3) may truncate after per-host selection; the
+oracle (tests/oracle.py) spends identically.
 
-Skew note: groupBy(host) shuffles on the raw host key. Zipf-headed hosts make
-a hot partition; selection cost is O(pending-per-host log) inside one group,
-so the wave loop pre-salts ONLY the shuffle placement via
-``spark.sql.adaptive`` + `shuffle.partitions`; the group itself must stay
-whole (a bucket is per-host state). The cap on damage is that a host's
-pending set is bounded by its discovered URLs — at cluster scale a hot host's
-group is still one task; if that ever dominates, split selection into
-(window rank <= tokens) which needs no grouped UDF — kept here as
-`select_by_window` and used when spec.per_host_tokens is whole-numbered and
-state-free selection suffices.
+``select_batch`` (the grouped-map ``groupBy(host).applyInPandas`` token
+bucket) stays only as the reference that tests/test_politeness.py and
+tests/test_skew.py prove the window rank and the salted selection equal to.
 """
 
 from __future__ import annotations
@@ -63,6 +59,8 @@ def refill_tokens(pending: DataFrame, hosts: DataFrame | None,
 
 def select_batch(pending: DataFrame, tokens: DataFrame) -> DataFrame:
     """Flag the per-host batch: groupBy(host).applyInPandas token bucket.
+    Reference selector for the equality tests; the wave loop runs
+    select_batch_salted.
 
     Input: pending ⨝ tokens on host. Output: pending columns + `selected`.
     Deterministic: stable sort on (priority, depth, url_canon).
@@ -84,9 +82,9 @@ def select_batch(pending: DataFrame, tokens: DataFrame) -> DataFrame:
 
 
 def select_by_window(pending: DataFrame, tokens: DataFrame) -> DataFrame:
-    """UDF-free equivalent of select_batch for the pure-rank case: a window
-    row_number per host vs floor(tokens). Same output contract. Kept as the
-    no-Python hot path; property-tested equal to select_batch."""
+    """UDF-free equivalent of select_batch: a window row_number per host vs
+    floor(tokens). Same output contract; property-tested equal to
+    select_batch. The per-host rank step of select_batch_salted."""
     w = Window.partitionBy("host").orderBy("priority", "depth", "url_canon")
     return (pending.join(F.broadcast(tokens), "host", "left_outer")
             .withColumn("_rn", F.row_number().over(w))
@@ -104,7 +102,13 @@ def spend_tokens(tokens: DataFrame, final_selected: DataFrame) -> DataFrame:
                              ).alias("tokens")))
 
 
-def prune_salted(pending: DataFrame, tokens: DataFrame, n_salt: int = 16) -> DataFrame:
+# Salt groups of the selection pre-prune: bounds a hot host's window group to
+# SKEW_SALT * tokens rows. Selection-equal for every value (tests/test_skew.py).
+SKEW_SALT = 16
+
+
+def prune_salted(pending: DataFrame, tokens: DataFrame,
+                 n_salt: int = SKEW_SALT) -> DataFrame:
     """Skew guard (north_rule J5): per-(host, salt) top-`tokens` pre-prune.
 
     The (host, salt) window shuffles on a uniform composite key, so a Zipf
@@ -123,16 +127,15 @@ def prune_salted(pending: DataFrame, tokens: DataFrame, n_salt: int = 16) -> Dat
 
 
 def select_batch_salted(pending: DataFrame, tokens: DataFrame,
-                        n_salt: int = 16, use_pandas: bool = False) -> DataFrame:
-    """Skew-hardened selection with the same output contract as select_batch
-    (every pending row + `selected` flag).
+                        n_salt: int = SKEW_SALT) -> DataFrame:
+    """The wave loop's selection, with the same output contract as
+    select_batch (every pending row + `selected` flag).
 
-    Pipeline: salted pre-prune (uniform shuffle) -> per-host top-k over the
-    BOUNDED pruned set (window rank by default; the grouped-map token bucket
-    when use_pandas) -> broadcast the small selected-key set back onto
+    Pipeline: salted pre-prune (uniform shuffle) -> per-host window rank over
+    the BOUNDED pruned set -> broadcast the small selected-key set back onto
     pending (map-side join, no shuffle of the full frontier)."""
     pruned = prune_salted(pending, tokens, n_salt)
-    flagged = (select_batch if use_pandas else select_by_window)(pruned, tokens)
+    flagged = select_by_window(pruned, tokens)
     sel = (flagged.where(F.col("selected"))
            .select("url_hash").withColumn("_sel", F.lit(True)))
     out = (pending.join(F.broadcast(sel), "url_hash", "left_outer")

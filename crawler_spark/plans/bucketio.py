@@ -21,7 +21,9 @@ parquet deltas because bucketed tables need a session catalog entry and the
 resume contract must survive process death by path alone; a real cluster
 deployment registers the compacted `seen` snapshot as a bucketed catalog
 table at each compaction (seen_compact_every) and reads it back through the
-catalog. This module implements exactly that write/read/join shape, and
+catalog. This module implements exactly that write/read/join shape —
+`run_crawl` does not call it, so the loop's anti-join still plans against
+the plain parquet `seen` every wave — and
 tests/test_bucketio.py pins BOTH the correctness (bucketed anti-join ==
 plain anti-join) and the PLAN property (exactly one Exchange — the
 candidate side — and zero Sort on the bucketed side).

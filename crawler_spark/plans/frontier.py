@@ -4,8 +4,8 @@ Mirror of the reference's drain-and-refill crawl loop
 (spider::Website::crawl_concurrent, SURVEY.md §3.4), re-expressed over tables:
 
     wave W:
-      frontier(pending) ── refill tokens ── groupBy(host).applyInPandas
-        token-bucket select (W2) ── global budget top-k (W3)
+      frontier(pending) ── refill tokens ── salted pre-prune + per-host
+        window rank vs tokens (W2/J5) ── global budget top-k (W3)
       selected ── fetch join / UDF (S5) ── mapInPandas span parse (P2)
       200-pages ── explode link spans ── scope/asset/blacklist filters (F2-F8)
         ── robots gate (F5/J2) ── wave dedup (A2) ── bloom probe + exact
@@ -17,10 +17,12 @@ Determinism contract (SURVEY.md §5.3): equal URL-seen set, equal per-wave URL
 sets, per-document span-sequence equality, all asserted against the
 single-threaded oracle in tests/test_crawl_e2e.py.
 
-Exactly two wide shuffles per wave (groupBy(host) selection; casefold wave
-dedup) — robots/tokens joins are broadcast, the seen anti-join is
-bloom-prefiltered and AQE-planned, and the fetch join's page side is the only
-large probe (scan-pruned by the selected batch's hash keys at Iceberg scale).
+Each wave stage has one code path. Selection shuffles on the uniform (host,
+salt) key and then on host over the pruned rows; admission shuffles once on
+the casefold key — robots/tokens joins are broadcast, the seen anti-join is
+bloom-prefiltered (once `seen` passes spec.bloom_min_seen) and AQE-planned,
+and the fetch join's page side is the only large probe (scan-pruned by the
+selected batch's hash keys at Iceberg scale).
 """
 
 from __future__ import annotations
@@ -82,10 +84,11 @@ class CrawlRun:
 
 
 def _admit(spark: SparkSession, cands: DataFrame, seen: DataFrame | None,
-           bloom: SeenBloom | None, robots: DataFrame | None,
-           spec: CrawlJobSpec, seed_hosts: list[str], wave: int,
+           bloom: SeenBloom | None, spec: CrawlJobSpec,
+           seed_hosts: list[str], wave: int,
            host_priorities: DataFrame | None = None) -> DataFrame:
-    """Admission pipeline: filters -> wave dedup -> seen anti-join.
+    """Admission pipeline: filters -> wave dedup -> seen anti-join. The
+    robots gate follows in run_crawl (`_admit_gated`).
 
     cands: (url_canon, depth, priority). Returns new frontier rows
     (priority, depth, url_canon, url_hash, host, discovered_wave) — the
@@ -93,9 +96,9 @@ def _admit(spark: SparkSession, cands: DataFrame, seen: DataFrame | None,
     tests/oracle.py::admit.
     """
     # Cheap JVM-codegen predicates run PRE-dedup (shrink the shuffle);
-    # the vectorized-Python robots gate runs LAST, after dedup AND the seen
-    # anti-join, so it prices only truly-new unique URLs (~5% of a wave's
-    # outlinks) instead of the full link fan-out. The per-URL predicates
+    # the vectorized-Python robots gate runs after this function, past dedup
+    # AND the seen anti-join, so it prices only truly-new unique URLs (~5% of
+    # a wave's outlinks) instead of the full link fan-out. The per-URL predicates
     # commute, and tests/oracle.py applies them in this same order.
     c = (cands
          .where(F.col("url_canon") != "")
@@ -141,10 +144,6 @@ def _admit(spark: SparkSession, cands: DataFrame, seen: DataFrame | None,
                          F.col("priority")
                          + F.coalesce(F.col("host_boost"), F.lit(0.0)))
              .drop("host_boost"))
-    # F5: robots gate on the deduped, novel representatives only
-    if spec.respect_robots_txt and robots is not None:
-        c = (gate_frontier(c, robots)
-             .where(F.col("robots_ok")).drop("robots_ok"))
     return c.select("priority", "depth", "url_canon", "url_hash", "host") \
             .withColumn("discovered_wave", F.lit(wave))
 
@@ -164,12 +163,14 @@ def run_crawl(spark: SparkSession, spec: CrawlJobSpec, fetcher,
     `store` — MemoryStore (default) or SnapDirStore for resumable snapshots.
     `resume` — continue from the store's latest committed wave: state tables
     (frontier/seen/hosts) reload from the last manifest, the bloom prefilter
-    is rebuilt from `seen`, and accumulated deltas (documents/fetch_log) are
-    re-attached; the continued run is bit-identical to an uninterrupted one
-    (north_rule; tested in tests/test_resume.py).
+    reloads from its snapshot (or is rebuilt from `seen`), and accumulated
+    deltas (documents/fetch_log) are re-attached; the continued run is
+    bit-identical to an uninterrupted one (north_rule; tested in
+    tests/test_resume.py).
     """
     store = store or (SnapDirStore(spark, spec.checkpoint_dir)
                       if spec.checkpoint_dir else MemoryStore())
+    resumable = getattr(store, "resumable", False)
     robots = None
     if robots_src is not None:
         robots = build_robots_table(robots_src, agent=spec.agent) \
@@ -192,11 +193,40 @@ def run_crawl(spark: SparkSession, spec: CrawlJobSpec, fetcher,
         robots = (rules if robots is None else robots.unionByName(rules)) \
             .localCheckpoint(eager=True)
 
-    def _gate(c: DataFrame) -> DataFrame:
+    def _admit_gated(cands: DataFrame, seen_df: DataFrame | None,
+                     wave_no: int) -> DataFrame:
+        """Admission of every wave, wave 0 included: _admit, then the lazy
+        robots fetch for the admitted hosts, then the F5 robots gate on the
+        deduped, novel representatives only. The gated rows keep _admit's
+        column order (snapshot fingerprints hash struct(*columns))."""
+        c = _admit(spark, cands, seen_df, bloom, spec, seed_hosts, wave_no,
+                   host_priorities=host_priorities)
+        if lazy_robots:
+            c = c.localCheckpoint(eager=True)
+            _ensure_robots(c, wave_no)
         if spec.respect_robots_txt and robots is not None:
-            return (gate_frontier(c, robots)
-                    .where(F.col("robots_ok")).drop("robots_ok"))
+            c = (gate_frontier(c, robots)
+                 .where(F.col("robots_ok")).select(*c.columns))
         return c
+
+    def _merge_bloom(delta: DataFrame | None, full: DataFrame,
+                     n_seen: int) -> None:
+        """The one Bloom activation/merge site. Below spec.bloom_min_seen the
+        filter is pure overhead (one applyInPandas + collect per wave) — the
+        exact anti-join carries dedup alone, with identical results. Once
+        `seen` (n_seen rows) crosses the threshold, build from the FULL seen
+        table once, then OR in each wave's admissions (`delta`). At the
+        10^10 design point the filter is active from minute one."""
+        nonlocal bloom_active
+        if bloom_active:
+            src = delta
+        elif n_seen >= spec.bloom_min_seen:
+            src, bloom_active = full, True
+        else:
+            return
+        if src is not None:
+            bloom.merge_from(build_bloom_parts(
+                src, bloom.n_parts, bloom.keys_per_part, bloom.fpp).collect())
 
     # seed hosts define the crawl scope (F2-F4) in both fresh and resumed runs
     if initial_frontier is not None:
@@ -216,15 +246,18 @@ def run_crawl(spark: SparkSession, spec: CrawlJobSpec, fetcher,
                          seeds_canon.select(host_col(F.col("url_canon")).alias("host"))
                          .distinct().collect()})
 
-    bloom = SeenBloom(spec.bloom_parts,
-                      keys_per_part=1 << 14, fpp=spec.bloom_fpp) if spec.use_bloom else None
+    # Until _merge_bloom activates it the bloom holds no parts, and
+    # anti_join_seen runs exact. Its spill files (past SeenBloom's broadcast
+    # budget) live next to a resumable store's snapshots.
+    bloom = SeenBloom(spill_root=(os.path.join(store.root, "_bloom_spill")
+                                  if resumable else None))
     bloom_active = False
     run = CrawlRun(spec=spec)
     docs_parts: list[DataFrame] = []
     log_parts: list[DataFrame] = []
     tot_errors = tot_bytes = 0   # job-lifetime counters (restored on resume)
 
-    last = store.latest_wave() if (resume and getattr(store, "resumable", False)) else None
+    last = store.latest_wave() if (resume and resumable) else None
     if resume and last is None:
         raise ValueError("resume=True but the store has no committed wave "
                          "(missing/empty checkpoint_dir manifest)")
@@ -233,18 +266,16 @@ def run_crawl(spark: SparkSession, spec: CrawlJobSpec, fetcher,
     if last is not None:
         # --- resume: reload state committed at the end of wave `last` ---
         pending = store.read_full("frontier", last)
-        seen = (store.read_seen(last) if hasattr(store, "read_seen")
-                else store.read_full("seen", last))
-        man0 = store.manifest(last)
-        seen_base = int(man0.get("extra", {}).get("seen_base_wave", last))
-        seen_rows = int(man0.get("extra", {}).get("seen_rows", 0)
-                        or man0.get("tables", {}).get("seen", {}).get("rows", 0)
+        seen = store.read_seen(last)
+        man = store.manifest(last)
+        seen_base = int(man.get("extra", {}).get("seen_base_wave", last))
+        seen_rows = int(man.get("extra", {}).get("seen_rows", 0)
+                        or man.get("tables", {}).get("seen", {}).get("rows", 0)
                         or seen.count())
         try:
             hosts = store.read_full("hosts", last)
         except Exception:
             hosts = None                   # killed before wave-0 commit
-        man = store.manifest(last)
         run.n_fetched = int(man.get("extra", {}).get("n_fetched", 0))
         tot_errors = int(man.get("extra", {}).get("tot_errors", 0))
         tot_bytes = int(man.get("extra", {}).get("tot_bytes", 0))
@@ -258,15 +289,14 @@ def run_crawl(spark: SparkSession, spec: CrawlJobSpec, fetcher,
                     .localCheckpoint(eager=True)
             except Exception:
                 _ensure_robots(pending, last + 1)
-        if bloom is not None:
-            # reload the committed prefilter bitsets; geometry mismatch or a
-            # checkpoint from a pre-bloom-snapshot layout -> rebuilt from
-            # `seen` by _maybe_activate_bloom below (identical bits)
-            try:
-                bloom_active = bloom.load_rows(
-                    store.read_full("bloom", last).collect())
-            except Exception:
-                bloom_active = False
+        # reload the committed prefilter bitsets; geometry mismatch or a
+        # checkpoint from a pre-bloom-snapshot layout -> rebuilt from
+        # `seen` by _merge_bloom below (identical bits)
+        try:
+            bloom_active = bloom.load_rows(
+                store.read_full("bloom", last).collect())
+        except Exception:
+            bloom_active = False
         docs0 = store.read_delta_union("documents", last)
         log0 = store.read_delta_union("fetch_log", last)
         if docs0 is not None:
@@ -303,12 +333,7 @@ def run_crawl(spark: SparkSession, spec: CrawlJobSpec, fetcher,
                                 F.lit(0.0).alias("priority")))
             seeds_canon = seeds_canon.unionByName(sm_canon)
         # --- wave-0 admission: seeds (S3) ---
-        pending = _admit(spark, seeds_canon, None, None, robots, spec,
-                         seed_hosts, 0, host_priorities=host_priorities)
-        if lazy_robots:
-            pending = pending.localCheckpoint(eager=True)
-            _ensure_robots(pending, 0)
-            pending = _gate(pending)
+        pending = _admit_gated(seeds_canon, None, 0)
         seen = pending.select("url_hash", "url_canon", "host",
                               F.lit(0).alias("wave"))
         hosts = None
@@ -324,30 +349,7 @@ def run_crawl(spark: SparkSession, spec: CrawlJobSpec, fetcher,
     if last is None:
         seen_rows = n_pending
 
-    # Adaptive sketch activation: below bloom_min_seen the filter is pure
-    # overhead (one applyInPandas + collect per wave) — the exact anti-join
-    # carries dedup alone, with identical results. Once `seen` crosses the
-    # threshold, build from the FULL seen table once, then merge per-wave
-    # deltas. At the 10^10 design point the filter is active from minute one.
-    def _maybe_activate_bloom() -> None:
-        nonlocal bloom_active
-        if bloom is not None and not bloom_active and seen_rows >= spec.bloom_min_seen:
-            bloom.merge_from(build_bloom_parts(
-                seen, bloom.n_parts, bloom.keys_per_part, bloom.fpp).collect())
-            bloom_active = True
-
-    def _maybe_spill_bloom() -> None:
-        # Size-bounded probe distribution: past the broadcast budget, write
-        # per-part bitsets next to the snapshots and let each probe task
-        # lazy-load only its partitions (dedup.SeenBloom spilled mode) —
-        # probe memory ∝ parts touched per task, not n_parts.
-        if (bloom is not None and bloom_active
-                and getattr(store, "root", None)
-                and bloom.total_bytes() > spec.bloom_broadcast_max_bytes):
-            bloom.spill(os.path.join(store.root, "_bloom_spill"))
-
-    _maybe_activate_bloom()
-    _maybe_spill_bloom()
+    _merge_bloom(None, seen, seen_rows)
 
     while n_pending > 0 and wave < spec.max_waves:
         if spec.stop_flag_path and os.path.exists(spec.stop_flag_path):
@@ -367,15 +369,8 @@ def run_crawl(spark: SparkSession, spec: CrawlJobSpec, fetcher,
         tokens = politeness.refill_tokens(pending, hosts, robots, spec)
         tokens = tokens.localCheckpoint(eager=True)   # reused: select + spend
         _mark("tokens")
-        if spec.politeness_salt > 0:
-            flagged = politeness.select_batch_salted(
-                pending, tokens, spec.politeness_salt,
-                use_pandas=(spec.politeness_impl == "pandas"))
-        elif spec.politeness_impl == "pandas":
-            flagged = politeness.select_batch(pending, tokens)
-        else:
-            flagged = politeness.select_by_window(pending, tokens)
-        flagged = flagged.localCheckpoint(eager=True)
+        flagged = politeness.select_batch_salted(pending, tokens) \
+            .localCheckpoint(eager=True)
         _mark("select")
         selected = flagged.where(F.col("selected")).drop("selected")
         # --- W3/F7: global budget (top-k, TakeOrderedAndProject) ---
@@ -428,16 +423,8 @@ def run_crawl(spark: SparkSession, spec: CrawlJobSpec, fetcher,
             .select(F.col("s.media_ref").alias("url_canon"),
                     (F.col("depth") + 1).alias("depth"),
                     F.lit(0.0).alias("priority")))
-        new_pre = _admit(spark, links, seen, bloom if bloom_active else None,
-                         None if lazy_robots else robots, spec, seed_hosts,
-                         wave + 1,
-                         host_priorities=host_priorities) \
+        new_rows = _admit_gated(links, seen, wave + 1) \
             .localCheckpoint(eager=True)
-        if lazy_robots:
-            _ensure_robots(new_pre, wave + 1)
-            new_rows = _gate(new_pre).localCheckpoint(eager=True)
-        else:
-            new_rows = new_pre
         _mark("admit")
         pending_next = rest.unionByName(new_rows)
         seen_delta_df = new_rows.select("url_hash", "url_canon", "host",
@@ -513,22 +500,11 @@ def run_crawl(spark: SparkSession, spec: CrawlJobSpec, fetcher,
         # table covers this wave's admissions — the filter must remain a
         # superset of `seen` keys, or a resumed probe would call a seen URL
         # "definitely new" and re-admit it (correctness, not just perf).
-        if bloom is not None:
-            if bloom_active and n_new:
-                bloom.merge_from(build_bloom_parts(
-                    new_rows, bloom.n_parts, bloom.keys_per_part,
-                    bloom.fpp).collect())
-            elif not bloom_active and seen_rows + n_new >= spec.bloom_min_seen:
-                bloom.merge_from(build_bloom_parts(
-                    seen_next, bloom.n_parts, bloom.keys_per_part,
-                    bloom.fpp).collect())
-                bloom_active = True
-            _maybe_spill_bloom()
-        delta_mode = (getattr(store, "resumable", False)
-                      and spec.seen_compact_every > 0)
+        _merge_bloom(new_rows if n_new else None, seen_next, seen_rows + n_new)
+        delta_mode = resumable and spec.seen_compact_every > 0
         compact_now = delta_mode and ((wave + 1) % spec.seen_compact_every == 0)
         full_tables = {"frontier": pending_next, "hosts": hosts}
-        if getattr(store, "resumable", False):
+        if resumable:
             # §4.3: robots cache + bloom partitions commit with the wave so
             # resume restores them instead of re-fetching / re-scanning seen.
             # Both are tiny next to frontier/seen (one row per host; one
@@ -571,7 +547,7 @@ def run_crawl(spark: SparkSession, spec: CrawlJobSpec, fetcher,
         # deletes; the document/fetch_log history (the output corpus) is
         # never rewritten mid-crawl. Resume only needs the latest manifest,
         # which is always retained.
-        if spec.snapshot_keep > 0 and hasattr(store, "expire"):
+        if resumable and spec.snapshot_keep > 0:
             store.expire(keep_last=spec.snapshot_keep, compact_deltas=False)
         _mark("commit_bloom")
         wave_metrics["stage_sec"] = stage_t

@@ -460,16 +460,3 @@ class SnapDirStore:
             "bytes_freed": max(0, bytes_before - bytes_after),
         }
 
-
-class IcebergStore:
-    """Iceberg backend (config-switched; requires iceberg-spark-runtime on the
-    classpath — absent in this sandbox, see SURVEY.md §4.3). Same contract:
-    one snapshot per wave, resume = read latest snapshot."""
-
-    resumable = True
-
-    def __init__(self, spark: SparkSession, catalog: str, namespace: str):
-        raise NotImplementedError(
-            "no Iceberg runtime jar in sandbox; production: writeTo("
-            f"'{catalog}.{namespace}.<table>').createOrReplace() per wave, "
-            "wave id stamped via snapshot summary properties")

@@ -12,6 +12,14 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _driver_memory() -> str:
+    """Half of physical RAM, capped at 48g. In local mode the driver JVM is
+    the only executor, so a heap larger than the machine gets the JVM
+    OOM-killed by the kernel once it grows."""
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(48 << 10, ram // 2 >> 20)}m"
+
+
 def get_spark(app: str = "crawler_spark", master: str | None = None,
               shuffle_partitions: int = 32, extra: dict | None = None) -> SparkSession:
     b = SparkSession.builder.appName(app)
@@ -20,7 +28,7 @@ def get_spark(app: str = "crawler_spark", master: str | None = None,
     confs = {
         # local-mode driver == the one executor JVM; the 1g default heap OOMs
         # on wave-sized span tables (must be set before JVM launch)
-        "spark.driver.memory": "48g",
+        "spark.driver.memory": _driver_memory(),
         "spark.driver.maxResultSize": "4g",
         "spark.sql.shuffle.partitions": str(shuffle_partitions),
         "spark.sql.adaptive.enabled": "true",

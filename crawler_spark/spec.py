@@ -40,35 +40,14 @@ class CrawlJobSpec:
     wave_ms: int = 1000                  # nominal wall-clock slice one wave models
     per_host_tokens: float = 8.0         # token refill per host per wave
     token_cap: float = 16.0              # bucket capacity
-    politeness_impl: str = "window"      # "window" (rank, no Python — default)
-                                         # or "pandas" (grouped-map bucket);
-                                         # provably equal selections, property-
-                                         # tested in tests/test_politeness.py
-    politeness_salt: int = 16            # >0: salted pre-prune before per-host
-                                         # selection (J5 skew guard) — ON by
-                                         # default: a Zipf head host otherwise
-                                         # lands its whole pending set in one
-                                         # window task. Selection-equal to the
-                                         # unsalted path (tests/test_skew.py);
-                                         # 0 disables (saves one shuffle on
-                                         # frontiers known to be skew-free)
 
     # -- engine knobs --
-    use_bloom: bool = True               # Bloom prefilter before exact anti-join
-    bloom_fpp: float = 0.01
-    bloom_parts: int = 32                # salted bloom partitions
-    bloom_min_seen: int = 100_000        # build/probe only once `seen` exceeds
-                                         # this — below it the sketch is pure
-                                         # overhead (anti-join stays exact
-                                         # either way, results identical)
-    bloom_broadcast_max_bytes: int = 64 << 20
-                                         # merged-bitset size above which the
-                                         # probe switches from full broadcast
-                                         # to partition-local spill files
-                                         # (SeenBloom.spill): each task lazy-
-                                         # loads only the parts it probes. At
-                                         # 10^10 keys/fpp=0.01 the filter is
-                                         # ~12 GB — never broadcast that.
+    bloom_min_seen: int = 100_000        # build/probe the seen Bloom only once
+                                         # `seen` exceeds this — below it the
+                                         # sketch is pure overhead (anti-join
+                                         # stays exact either way, results
+                                         # identical). Geometry and broadcast-
+                                         # vs-spill live in dedup.SeenBloom.
     shuffle_partitions: int = 32
     checkpoint_dir: str = ""             # '' = in-memory state only (no snapshots)
     seen_compact_every: int = 8          # snapshot `seen` as per-wave deltas,

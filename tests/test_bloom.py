@@ -141,9 +141,10 @@ def test_spilled_probe_is_partition_local(spark, seen_and_cands, tmp_path):
     assert got == want
 
 
-def test_crawl_with_forced_spill_bit_identical(spark, small_cfg, tmp_path):
+def test_crawl_with_forced_spill_bit_identical(spark, small_cfg, tmp_path,
+                                               monkeypatch):
     """End-to-end: a crawl whose bloom is forced into spilled (partition-
-    local) probe mode from the first wave (bloom_broadcast_max_bytes=0)
+    local) probe mode from the first wave (SeenBloom.BROADCAST_MAX_BYTES=0)
     produces the exact same seen set, fetch count, and committed snapshots
     as the full-broadcast crawl — the probe distribution mode is a pure
     physical-layout choice, invisible to results."""
@@ -164,10 +165,9 @@ def test_crawl_with_forced_spill_bit_identical(spark, small_cfg, tmp_path):
     run_bc = run_crawl(spark, dataclasses.replace(base, checkpoint_dir=d_bc),
                        fetcher, robots_src=robots_df)
     d_sp = str(tmp_path / "sp")
-    run_sp = run_crawl(
-        spark, dataclasses.replace(base, checkpoint_dir=d_sp,
-                                   bloom_broadcast_max_bytes=0),
-        fetcher, robots_src=robots_df)
+    monkeypatch.setattr(SeenBloom, "BROADCAST_MAX_BYTES", 0)
+    run_sp = run_crawl(spark, dataclasses.replace(base, checkpoint_dir=d_sp),
+                       fetcher, robots_src=robots_df)
 
     import os
     assert os.path.isdir(os.path.join(d_sp, "_bloom_spill"))   # spill engaged

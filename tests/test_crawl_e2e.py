@@ -44,11 +44,10 @@ def _assert_equal(oracle, run, got):
                   "blacklist": (r"/p1[12]$",)}, id="subdomains-tld-blacklist"),
     pytest.param({"per_host_tokens": 2.0, "token_cap": 4.0}, id="tight-politeness"),
     pytest.param({"max_pages": 15}, id="global-budget"),
-    pytest.param({"delay_ms": 400, "use_bloom": False}, id="delay-no-bloom"),
+    pytest.param({"delay_ms": 400, "bloom_min_seen": 1 << 62},
+                 id="delay-no-bloom"),
     pytest.param({"bloom_min_seen": 0}, id="bloom-forced-active"),
-    pytest.param({"politeness_impl": "pandas"}, id="grouped-map-politeness"),
-    pytest.param({"politeness_salt": 8, "per_host_tokens": 3.0},
-                 id="salted-politeness"),
+    pytest.param({"per_host_tokens": 3.0}, id="salted-politeness"),
 ])
 def test_engine_matches_oracle(spark, small_cfg, spec_kw):
     spec = CrawlJobSpec(seeds=tuple(gen_seeds(small_cfg)), max_waves=20, **spec_kw)

@@ -84,7 +84,7 @@ def test_admit_folds_boost_additively(spark):
                                "host string, host_boost double")
     spec = CrawlJobSpec(seeds=("http://a.com/",), respect_robots_txt=False)
     rows = {r["url_canon"]: r["priority"]
-            for r in _admit(spark, cands, None, None, None, spec,
+            for r in _admit(spark, cands, None, None, spec,
                             ["a.com", "b.com"], 1,
                             host_priorities=hp).collect()}
     assert rows == {"http://a.com/X": -2.25,   # least(0, -2 refs) - 0.25

@@ -233,11 +233,9 @@ def test_bloom_partitions_restored_on_resume(spark, crawl_env, tmp_path):
     k = store.latest_wave()
     assert "bloom" in store.manifest(k)["tables"]
 
-    restored = SeenBloom(base.bloom_parts, keys_per_part=1 << 14,
-                         fpp=base.bloom_fpp)
+    restored = SeenBloom()           # the wave loop's default geometry
     assert restored.load_rows(store.read_full("bloom", k).collect())
-    rebuilt = SeenBloom(base.bloom_parts, keys_per_part=1 << 14,
-                        fpp=base.bloom_fpp)
+    rebuilt = SeenBloom()
     rebuilt.merge_from(build_bloom_parts(
         store.read_seen(k), rebuilt.n_parts, rebuilt.keys_per_part,
         rebuilt.fpp).collect())
