@@ -18,18 +18,17 @@ Dedup is two-stage:
 Scale note: 64-bit keys over 10^10 URLs expect ~3 birthday collisions
 (n^2/2^65) — a collision silently drops one URL, matching the accepted
 practice for web-crawl dedup; the test-scale oracle equality is unaffected
-(collision probability ~1e-11 at 1e4 URLs). The partitioned bitset is sized
-from bits/key so the 10^10 design point shards into `SeenBloom.n_parts`
-pieces; past `SeenBloom.BROADCAST_MAX_BYTES` the probe side lazy-loads only
-its partitions' bitsets from spill files instead of a full broadcast.
+(collision probability ~1e-11 at 1e4 URLs). The wave loop's filter has a
+fixed geometry: 32 parts x 32 KiB (m = 2^18 bits, k = 11), 1 MiB in all,
+sized for about 524k keys. It does not grow with `seen`: its computed
+false-positive rate is 0.03 at 1M seen rows, 0.44 at 2M and 0.98 at 5M, so
+past a few million URLs nearly every candidate is "maybe seen" and the exact
+anti-join does all the dedup work.
 """
 
 from __future__ import annotations
 
 import math
-import os
-import shutil
-import uuid
 
 import numpy as np
 import pandas as pd
@@ -93,37 +92,6 @@ class BloomFilter:
         np.bitwise_or(self.bits, other.bits, out=self.bits)
 
 
-# Per-Python-worker cache for spilled bloom partitions, keyed
-# (dir, part, version). The broadcast payload names the exact version of
-# every part, so a stale entry is never *served*; superseded versions are
-# evicted on load so a long-lived reused worker holds at most one blob per
-# (dir, part) — bounded memory even across hundreds of waves/resumes.
-_PART_CACHE: dict[tuple[str, int, int], bytes] = {}
-
-
-def _resolve_part(state: dict, part: int) -> bytes | None:
-    """Fetch one part's bitset from the broadcast payload (broadcast mode)
-    or from the spill directory with a per-worker cache (spilled mode). A
-    part absent from the version map never had a key added — a correct
-    'definitely new' for every probe that lands there. A part that IS in
-    the map but whose file is gone is a storage fault: raise (a silent None
-    here would be a bloom false negative, i.e. re-admission of seen URLs)."""
-    if "parts" in state:
-        return state["parts"].get(part)
-    ver = state["vers"].get(part)
-    if ver is None:
-        return None
-    key = (state["dir"], part, ver)
-    if key not in _PART_CACHE:
-        for stale in [k for k in _PART_CACHE
-                      if k[0] == state["dir"] and k[1] == part]:
-            del _PART_CACHE[stale]
-        path = os.path.join(state["dir"], f"part={part}.v={ver}.bloom")
-        with open(path, "rb") as fh:
-            _PART_CACHE[key] = fh.read()
-    return _PART_CACHE[key]
-
-
 BLOOM_SCHEMA = StructType([
     StructField("part", IntegerType(), False),
     StructField("bits", BinaryType(), False),
@@ -136,8 +104,6 @@ def build_bloom_parts(seen: DataFrame, n_parts: int, keys_per_part: int,
     """Partial aggregate: per pmod(url_hash, n_parts) partition, a Bloom
     bitset over url_hash.
     applyInPandas per part (UDAF-shaped partial; driver OR-merge is final)."""
-    m_probe = BloomFilter(keys_per_part, fpp)          # fixes (m, k) for all parts
-
     def _build(pdf: pd.DataFrame) -> pd.DataFrame:
         bf = BloomFilter(keys_per_part, fpp)
         keys = pdf["url_hash"].to_numpy(dtype=np.int64).view(np.uint64)
@@ -150,24 +116,17 @@ def build_bloom_parts(seen: DataFrame, n_parts: int, keys_per_part: int,
         F.col("url_hash"),
         F.pmod(F.col("url_hash"), F.lit(n_parts)).cast("int").alias("part"),
     )
-    out = parted.groupBy("part").applyInPandas(_build, BLOOM_SCHEMA)
-    out._bloom_geometry = (m_probe.m, m_probe.k)  # type: ignore[attr-defined]
-    return out
+    return parted.groupBy("part").applyInPandas(_build, BLOOM_SCHEMA)
 
 
 class SeenBloom:
     """Driver-held merged bloom state: {part -> bitset}, broadcast to probes.
 
-    Owns its geometry (the defaults are the wave loop's) and its probe
-    distribution: given a `spill_root`, a filter whose merged bitsets exceed
-    BROADCAST_MAX_BYTES is probed from per-part spill files under it instead
-    of a full broadcast. At 10^10 keys/fpp=0.01 the filter is ~12 GB — never
-    broadcast that."""
-
-    BROADCAST_MAX_BYTES = 64 << 20
+    Owns its geometry; the defaults are the wave loop's (32 parts x 32 KiB,
+    k = 11, 1 MiB merged), small enough to broadcast whole every wave."""
 
     def __init__(self, n_parts: int = 32, keys_per_part: int = 1 << 14,
-                 fpp: float = 0.01, spill_root: str | None = None):
+                 fpp: float = 0.01):
         # power-of-2 so Spark's pmod(signed long) and numpy's uint64-% agree
         assert n_parts & (n_parts - 1) == 0, "n_parts must be a power of 2"
         self.n_parts = n_parts
@@ -177,34 +136,15 @@ class SeenBloom:
         self.m, self.k = proto.m, proto.k
         self.parts: dict[int, bytes] = {}
         self._bc = None
-        # Spill state. The run token makes this instance's spill directory
-        # unique: a resumed run re-spilling under the same store root must
-        # NOT reuse a previous process's paths, or reused Python workers
-        # would serve that run's cached (smaller) bitsets — bloom false
-        # negatives, i.e. silent re-admission of seen URLs.
-        self._run_token = uuid.uuid4().hex[:12]
-        self._spill_base: str | None = None
-        self._ver: dict[int, int] = {}     # per-part last-spilled version
-        self._dirty: set[int] = set()      # parts changed since last spill
-        self.spill_dir: str | None = None
-        self.spill_root = spill_root
 
     def merge_from(self, bloom_rows: list) -> None:
-        """Final aggregate: OR new per-partition bitsets into driver state.
-        Parts whose bytes actually change are marked dirty so the next spill
-        rewrites only them (a wave that touches few partitions re-spills
-        few files)."""
+        """Final aggregate: OR new per-partition bitsets into driver state."""
         for row in bloom_rows:
-            cur = self.parts.get(row["part"])
             new = np.frombuffer(row["bits"], dtype=np.uint8)
-            if cur is None:
-                self.parts[row["part"]] = new.tobytes()
-                self._dirty.add(row["part"])
-            else:
-                merged = (np.frombuffer(cur, dtype=np.uint8) | new).tobytes()
-                if merged != cur:
-                    self.parts[row["part"]] = merged
-                    self._dirty.add(row["part"])
+            cur = self.parts.get(row["part"])
+            if cur is not None:
+                new = np.frombuffer(cur, dtype=np.uint8) | new
+            self.parts[row["part"]] = new.tobytes()
         self._bc = None          # invalidate broadcast
 
     def to_rows(self) -> list[tuple[int, bytes, int, int, int]]:
@@ -225,7 +165,7 @@ class SeenBloom:
         (bitset width), or k (hash count) — including legacy rows that
         predate geometry columns; the caller then falls back to
         rebuild-from-seen. A byte-length check alone is not enough: a
-        different bloom_parts (or an fpp rounding to the same pow2 m) keeps
+        different n_parts (or an fpp rounding to the same pow2 m) keeps
         len(bits) identical while keys hash to different partitions."""
         expect = self.m // 8
         incoming = {}
@@ -240,100 +180,13 @@ class SeenBloom:
             return False
         self.parts = incoming
         self._bc = None
-        self._dirty = set(incoming)   # every part must re-spill under a new
-        return True                   # version before any spilled probe
-
-    # ---- probe-side distribution -------------------------------------
-    #
-    # Two modes:
-    #   * broadcast (default): every executor receives ALL part bitsets.
-    #     Fine while the merged filter is small; at the 10^10-key/fpp=0.01
-    #     design point it is ~12 GB — too big to ship to every executor.
-    #   * spilled (partition-local): entered by `broadcast()` once the
-    #     filter outgrows BROADCAST_MAX_BYTES and a `spill_root` is set, or
-    #     by an explicit `spill(dir)`. It writes one blob per part
-    #     to a shared store (the snapshot dir in this repo; an object store
-    #     at cluster scale) and the broadcast carries only geometry + path.
-    #     Each task lazy-loads exactly the partitions its Arrow batch
-    #     probes, with a per-worker cache keyed by (dir, part, version), so
-    #     probe memory is proportional to the partitions a task touches —
-    #     one, when the probe side is repartitioned by pmod(url_hash,
-    #     n_parts) — not to n_parts. The broadcast names the exact version
-    #     of every part (the filter only grows, so a stale bitset would
-    #     yield false negatives — re-admission — never just waste);
-    #     superseded versions are evicted from the cache and deleted from
-    #     disk, and the run-token directory isolates resumed processes.
-
-    def total_bytes(self) -> int:
-        """Current merged-filter payload size (what a full broadcast ships)."""
-        return sum(len(b) for b in self.parts.values())
-
-    def spill(self, dirpath: str) -> str:
-        """Write per-part bitsets under `dirpath` and switch the probe to
-        partition-local lazy loading.
-
-        Layout: {dirpath}/run={token}/part={p}.v={version}.bloom — one live
-        file per part. Only parts dirtied since the last spill are
-        rewritten (version bumped, superseded file deleted), so steady-state
-        disk is one copy of the filter, not one copy per wave. On the first
-        spill of this instance, leftover run=* directories from previous
-        (killed) processes under the same store are garbage-collected."""
-        d = os.path.join(dirpath, f"run={self._run_token}")
-        if self.spill_dir != d:
-            if os.path.isdir(dirpath):
-                for stale in os.listdir(dirpath):
-                    if stale.startswith("run=") and stale != f"run={self._run_token}":
-                        shutil.rmtree(os.path.join(dirpath, stale),
-                                      ignore_errors=True)
-            os.makedirs(d, exist_ok=True)
-            to_write = set(self.parts)      # first spill: everything
-        else:
-            to_write = set(self._dirty)
-        for p in sorted(to_write):
-            old = self._ver.get(p, 0)
-            new = old + 1
-            tmp = os.path.join(d, f"part={p}.v={new}.bloom.tmp")
-            with open(tmp, "wb") as fh:
-                fh.write(self.parts[p])
-            os.replace(tmp, os.path.join(d, f"part={p}.v={new}.bloom"))
-            self._ver[p] = new
-            if old:
-                try:
-                    os.remove(os.path.join(d, f"part={p}.v={old}.bloom"))
-                except OSError:
-                    pass
-        self._dirty.clear()
-        self._spill_base = dirpath
-        self.spill_dir = d
-        self._bc = None
-        return d
-
-    def unspill(self) -> None:
-        """Back to full-broadcast probing (test/debug aid)."""
-        self.spill_dir = None
-        self._spill_base = None
-        self._bc = None
+        return True
 
     def broadcast(self, spark: SparkSession):
         if self._bc is None:
-            # size-bounded probe distribution: past the broadcast budget,
-            # switch to partition-local spill files under spill_root
-            if (self.spill_root and not self._spill_base
-                    and self.total_bytes() > self.BROADCAST_MAX_BYTES):
-                self.spill(self.spill_root)
-            # self-healing: a merge after a spill leaves dirty parts whose
-            # on-disk bitsets are stale — re-spill them before any probe
-            # ships, so a forgotten explicit spill() can never serve a
-            # filter that would false-negative on the new keys
-            if self._spill_base and self._dirty:
-                self.spill(self._spill_base)
-            payload = {"m": self.m, "k": self.k, "n_parts": self.n_parts}
-            if self.spill_dir:
-                payload["dir"] = self.spill_dir
-                payload["vers"] = dict(self._ver)
-            else:
-                payload["parts"] = self.parts
-            self._bc = spark.sparkContext.broadcast(payload)
+            self._bc = spark.sparkContext.broadcast(
+                {"m": self.m, "k": self.k, "n_parts": self.n_parts,
+                 "parts": self.parts})
         return self._bc
 
     def probe_udf(self, spark: SparkSession):
@@ -347,8 +200,8 @@ class SeenBloom:
             parts = (keys % np.uint64(state["n_parts"])).astype(np.int64)
             out = np.zeros(len(keys), dtype=bool)
             for p in np.unique(parts):
-                blob = _resolve_part(state, int(p))
-                if blob is None:
+                blob = state["parts"].get(int(p))
+                if blob is None:     # no key was ever merged into this part
                     continue
                 bf = BloomFilter(1, 0.5, bits=np.frombuffer(blob, dtype=np.uint8))
                 bf.m, bf.k = state["m"], state["k"]
@@ -362,8 +215,8 @@ class SeenBloom:
 def anti_join_seen(candidates: DataFrame, seen: DataFrame,
                    bloom: SeenBloom | None, spark: SparkSession) -> DataFrame:
     """candidates minus seen (J1). With a bloom, only 'maybe-seen' rows reach
-    the exact anti-join — at scale this is the shuffle-volume win, since the
-    overwhelming majority of a wave's outlinks are new URLs."""
+    the exact anti-join: while `seen` stays within the filter's design size,
+    most new outlinks skip that join; past it, nearly all of them reach it."""
     if bloom is None or not bloom.parts:
         return candidates.join(seen.select("url_hash"), "url_hash", "left_anti")
     probed = candidates.withColumn("maybe_seen", bloom.probe_udf(spark)("url_hash"))

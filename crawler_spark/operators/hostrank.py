@@ -1368,7 +1368,9 @@ def modularity(edges: DataFrame, labels: DataFrame) -> DataFrame:
     an artifact worth ignoring when allocating per-"site" budget.
 
     `labels` is (host, community). Returns one row per community:
-    (community, n_hosts, e_in, d_sum, q_contrib rounded 4).
+    (community, n_hosts, e_in, d_sum, q_contrib rounded 4). `+ 0.0`
+    after the round turns a -0.0 into +0.0, as the DuckDB oracle does,
+    so a singleton community's tiny negative contribution has one sign.
 
     Scale shape: the undirected simple edge set is one distinct at edge
     cardinality; degrees are one partial-agged shuffle; e_c needs the
@@ -1403,5 +1405,6 @@ def modularity(edges: DataFrame, labels: DataFrame) -> DataFrame:
             .select("community", "n_hosts",
                     F.coalesce("e_in", F.lit(0)).cast("long").alias("e_in"),
                     "d_sum",
-                    F.round(F.coalesce("e_in", F.lit(0)) / F.col("m")
-                            - half * half, 4).alias("q_contrib")))
+                    (F.round(F.coalesce("e_in", F.lit(0)) / F.col("m")
+                             - half * half, 4) + F.lit(0.0))
+                    .alias("q_contrib")))

@@ -358,9 +358,9 @@ def changelog_merge(base: DataFrame, changes: DataFrame, key_col: str,
 
     Scale shape: ONE changelog-cardinality shuffle for the
     latest-version window (keyed by the merge key, never global), then
-    ONE key equi-join base⋈delta — bucketable by plans/bucketio so the
-    10^10-row base never re-shuffles (the J1 discipline applied to
-    MERGE). No driver state, no Python."""
+    ONE key equi-join base⋈delta; a base stored bucketed on the key
+    would not re-shuffle its 10^10 rows (Spark bucketed tables). No
+    driver state, no Python."""
     w = Window.partitionBy(key_col).orderBy(F.desc(ver_col),
                                             F.col(op_col))
     latest = (changes.withColumn("_rn", F.row_number().over(w))

@@ -68,7 +68,9 @@ def exact_quantiles(df: DataFrame, group_cols: list[str], value: Column,
     compresses; the quantile is then exact over the bucketed measure.
 
     Returns one row per group: (*group_cols, n BIGINT, q_50, q_90, ...
-    DOUBLE round 4) — column names q_<100*q>. NULL measurements are
+    DOUBLE round 4) — column names q_<100*q>; cast to DOUBLE because
+    Spark's round keeps a BIGINT measure BIGINT where DuckDB's returns
+    DOUBLE. NULL measurements are
     DROPPED up front (the SQL aggregate convention) — without the filter
     the per-group sort would diverge across engines (Spark ASC is NULLS
     FIRST, DuckDB NULLS LAST) and NULL rows would shift every target."""
@@ -85,7 +87,7 @@ def exact_quantiles(df: DataFrame, group_cols: list[str], value: Column,
         tgt = F.ceil(F.lit(q) * F.col("_n")).cast("long")
         aggs.append(F.round(
             F.min(F.when(F.col("_cum") >= tgt, F.col("_v"))), 4)
-            .alias(f"q_{int(round(q * 100))}"))
+            .cast("double").alias(f"q_{int(round(q * 100))}"))
     return r.groupBy(*group_cols).agg(*aggs)
 
 

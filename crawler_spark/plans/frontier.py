@@ -36,7 +36,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from crawler_spark.functions.canon import canonicalize_udf, host_col
 from crawler_spark.operators import politeness
 from crawler_spark.operators.dedup import (
-    SeenBloom, anti_join_seen, build_bloom_parts, url_hash_col,
+    SeenBloom, anti_join_seen, build_bloom_parts,
 )
 from crawler_spark.operators.robots import (
     build_robots_table, fetch_robots_rules, gate_frontier,
@@ -247,10 +247,8 @@ def run_crawl(spark: SparkSession, spec: CrawlJobSpec, fetcher,
                          .distinct().collect()})
 
     # Until _merge_bloom activates it the bloom holds no parts, and
-    # anti_join_seen runs exact. Its spill files (past SeenBloom's broadcast
-    # budget) live next to a resumable store's snapshots.
-    bloom = SeenBloom(spill_root=(os.path.join(store.root, "_bloom_spill")
-                                  if resumable else None))
+    # anti_join_seen runs exact.
+    bloom = SeenBloom()
     bloom_active = False
     run = CrawlRun(spec=spec)
     docs_parts: list[DataFrame] = []

@@ -7533,7 +7533,7 @@ ec AS (SELECT la.community, CAST(count(*) AS BIGINT) AS e_in
        WHERE la.community = lb.community GROUP BY 1)
 SELECT dc.community, dc.n_hosts, COALESCE(ec.e_in, 0) AS e_in, dc.d_sum,
        round(COALESCE(ec.e_in, 0) / mm.m
-             - (dc.d_sum / (2 * mm.m)) * (dc.d_sum / (2 * mm.m)), 4)
+             - (dc.d_sum / (2 * mm.m)) * (dc.d_sum / (2 * mm.m)), 4) + 0.0
          AS q_contrib
 FROM dc LEFT JOIN ec USING (community) CROSS JOIN mm
 """)

@@ -46,8 +46,11 @@ class CrawlJobSpec:
                                          # `seen` exceeds this — below it the
                                          # sketch is pure overhead (anti-join
                                          # stays exact either way, results
-                                         # identical). Geometry and broadcast-
-                                         # vs-spill live in dedup.SeenBloom.
+                                         # identical). The filter is a fixed
+                                         # 1 MiB (dedup.SeenBloom), sized for
+                                         # ~524k keys: past a few million
+                                         # seen rows it passes nearly every
+                                         # candidate to the anti-join.
     shuffle_partitions: int = 32
     checkpoint_dir: str = ""             # '' = in-memory state only (no snapshots)
     seen_compact_every: int = 8          # snapshot `seen` as per-wave deltas,

@@ -4,6 +4,8 @@ extended oracle when host_priorities are injected."""
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import functions as F
 
 from crawler_spark.operators.hostrank import (
@@ -484,6 +486,16 @@ def test_modularity_single_community_is_zero(spark):
                                    "host string, community string")
     row = modularity(edges, labels).collect()[0]
     assert row["q_contrib"] == 0.0 and row["e_in"] == 3
+    # a singleton next to 80 edges: -(1/160)^2 rounds to zero, never -0.0
+    # (DuckDB's round keeps the sign; the oracle adds 0.0 the same way)
+    chain = [(f"n{i}", f"n{i + 1}") for i in range(80)]
+    edges = spark.createDataFrame(chain, "src string, dst string")
+    labels = spark.createDataFrame(
+        [(f"n{i}", "leaf" if i == 80 else "rest") for i in range(81)],
+        "host string, community string")
+    leaf = {r["community"]: r["q_contrib"]
+            for r in modularity(edges, labels).collect()}["leaf"]
+    assert leaf == 0.0 and math.copysign(1.0, leaf) == 1.0
 
 
 def test_modularity_ignores_direction_and_duplicates(spark):

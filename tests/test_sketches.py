@@ -88,6 +88,9 @@ def test_exact_quantiles_ceil_boundary_and_partitioning(spark):
     r2 = exact_quantiles(df.repartition(7), ["g"], F.col("v"),
                          qs=(0.5,)).first()
     assert r2.q_50 == r.q_50
+    # a BIGINT measure still yields DOUBLE quantiles, as DuckDB's round does
+    ql = exact_quantiles(df, ["g"], F.col("v").cast("long"), qs=(0.5,))
+    assert dict(ql.dtypes)["q_50"] == "double"
 
 
 def test_hll_accuracy_and_dup_invariance(spark):
