@@ -36,21 +36,13 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
+from tools.scaling_bench import cpu_probe  # noqa: E402
+
 
 def _materialize(df) -> int:
     """Force full execution of every column without collecting to driver."""
     df.write.format("noop").mode("overwrite").save()
     return 0
-
-
-def _cpu_probe() -> float:
-    """Single-thread contention witness (same fixed work as
-    tools/scaling_bench.cpu_probe): ~0.95s on this box when quiet."""
-    t0 = time.perf_counter()
-    s = 0
-    for i in range(20_000_000):
-        s += i & 1023
-    return round(time.perf_counter() - t0, 3)
 
 
 def _enrich_sink(docs) -> None:
@@ -215,7 +207,7 @@ def main() -> None:
         # headline lands on stdout immediately: a later kill mid-suite must
         # not lose the north-rule number
         print(json.dumps({"partial": True, "crawl": crawl,
-                          "probe_sec": _cpu_probe()}), flush=True)
+                          "probe_sec": cpu_probe()}), flush=True)
 
     probe_blocks: list[float] = []
     if not args.crawl_only:
@@ -251,7 +243,7 @@ def main() -> None:
                 # cumulative slowest-so-far picture even if the process is
                 # killed mid-suite; the FULL map is continuously flushed to
                 # BENCH/last_suite.json.
-                probe_blocks.append(_cpu_probe())
+                probe_blocks.append(cpu_probe())
                 top = dict(sorted(
                     ((k, v) for k, v in timings.items()
                      if k != "crawl_bench"),
@@ -291,7 +283,7 @@ def main() -> None:
         # timings from a run whose probes sit well above quiet were taken
         # under host-side interference invisible to in-VM telemetry and are
         # not comparable across runs; within-run structure still is.
-        "probe_sec": _cpu_probe(),
+        "probe_sec": cpu_probe(),
         "probe_blocks": probe_blocks,
     }
     if crawl is not None:

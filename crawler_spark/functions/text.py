@@ -16,10 +16,6 @@ LANG_MARKERS: dict[str, tuple[str, ...]] = {
 }
 
 
-def n_words_col(text: Column) -> Column:
-    return F.size(F.split(F.trim(text), r"\s+"))
-
-
 def marker_hits_col(text: Column, markers: tuple[str, ...]) -> Column:
     """Count of whitespace-split words equal to any marker (whole-word
     token match) — ONE split + one filter pass, identical semantics to the

@@ -40,6 +40,9 @@ Scale notes:
 
 from __future__ import annotations
 
+import contextlib
+import threading
+
 from pyspark.sql import DataFrame, Window, functions as F
 
 
@@ -262,15 +265,16 @@ def scc_decomposition(edges: DataFrame, src: str = "src",
          FIXED `trim_rounds` (early-exit on stability) rather than to
          fixpoint: on a long in-chain, fixpoint trimming is O(chain)
          driver-coordinated rounds for work the closure absorbs anyway.
-      2. CLOSURE by pointer doubling on the trimmed 2-core: r <- r UNION
-         (r JOIN r) until fixpoint — O(log diameter) rounds. The closure
-         is quadratic in the WORST case, which is exactly why trimming
-         runs first: it is bounded by (2-core size)^2, not hosts^2, and a
-         host-level 2-core is orders smaller than the crawl graph. For a
-         doc-level graph where even the 2-core closure is too large,
-         switch to Orzan-style coloring (O(diameter) rounds, linear
-         state); this host-cardinality formulation trades that for 4-6
-         rounds total.
+      2. CLOSURE of the trimmed 2-core by single-hop expansion: each
+         round joins last round's new pairs with the BASE edges, r <- r
+         UNION (frontier JOIN e), until r stops growing — one hop per
+         round, so O(longest shortest path) rounds, and `max_iter` bounds
+         that path length. The closure is quadratic in the WORST case,
+         which is exactly why trimming runs first: it is bounded by
+         (2-core size)^2, not hosts^2, and a host-level 2-core is orders
+         smaller than the crawl graph. For a doc-level graph where even
+         the 2-core closure is too large, switch to Orzan-style coloring
+         (O(diameter) rounds, linear state).
       3. SCC ids: mutual pairs = closure JOIN closure with (src, dst)
          swapped; scc_id = least(host, min mutual partner) — identical
          string-min semantics in the DuckDB recursive-CTE twin.
@@ -280,22 +284,35 @@ def scc_decomposition(edges: DataFrame, src: str = "src",
     never silently wrong — the oracle has no cap; the trim cap needs no
     guard because phase 3 is exact regardless of how much trim removed).
     """
-    # Constraint propagation OFF for the duration: eager localCheckpoint
-    # captures the analyzed plan's lazy constraint set, and re-walking it
-    # through union/self-join lineage built on checkpointed frames hits
-    # "NoSuchElementException: key not found: attr#N" inside Union's
-    # constraint rewrite (input-shape dependent — surfaced at sf0.1, not
-    # sf0.01). The inference only feeds optimizer filter pruning, which
-    # none of these host-cardinality joins need.
-    spark = edges.sparkSession
-    _CP = "spark.sql.constraintPropagation.enabled"
-    _old_cp = spark.conf.get(_CP, "true")
-    spark.conf.set(_CP, "false")
-    try:
-        return _scc_decomposition_inner(edges, src, dst, max_iter,
-                                        trim_rounds)
-    finally:
-        spark.conf.set(_CP, _old_cp)
+    with _no_constraint_propagation(edges.sparkSession):
+        scc = _scc_decomposition_inner(edges, src, dst, max_iter, trim_rounds)
+        return scc.localCheckpoint(eager=True)
+
+
+_CP = "spark.sql.constraintPropagation.enabled"
+_CP_LOCK = threading.RLock()
+
+
+@contextlib.contextmanager
+def _no_constraint_propagation(spark):
+    """Constraint propagation OFF while the SCC plans are optimized: eager
+    localCheckpoint captures the analyzed plan's lazy constraint set, and
+    re-walking it through union/self-join lineage built on checkpointed
+    frames hits "NoSuchElementException: key not found: attr#N" inside
+    Union's constraint rewrite (input-shape dependent — surfaced at sf0.1,
+    not sf0.01). The inference only feeds optimizer filter pruning, which
+    none of these host-cardinality joins need. Callers checkpoint their
+    result inside the block, so no optimizer pass over that lineage runs
+    after it. The conf is session-global, so the block holds a lock:
+    concurrent callers (threads) run it one at a time and none restores
+    the conf under another's running plan."""
+    with _CP_LOCK:
+        old = spark.conf.get(_CP, "true")
+        spark.conf.set(_CP, "false")
+        try:
+            yield
+        finally:
+            spark.conf.set(_CP, old)
 
 
 def _scc_decomposition_inner(edges: DataFrame, src: str, dst: str,
@@ -419,11 +436,7 @@ def scc_condensation_levels(edges: DataFrame, src: str = "src",
     10^7 hosts, which is why the Spark side relaxes instead). Runs under
     the same constraint-propagation guard as scc_decomposition (shared
     lazy-constraint bug with checkpointed union lineage)."""
-    spark = edges.sparkSession
-    _CP = "spark.sql.constraintPropagation.enabled"
-    _old_cp = spark.conf.get(_CP, "true")
-    spark.conf.set(_CP, "false")
-    try:
+    with _no_constraint_propagation(edges.sparkSession):
         lab = _scc_decomposition_inner(edges, src, dst, max_iter,
                                        trim_rounds) \
             .select("host", "scc_id").localCheckpoint(eager=True)
@@ -464,6 +477,5 @@ def scc_condensation_levels(edges: DataFrame, src: str = "src",
         return (comps.join(lv, comps["scc_id"] == lv["node"], "left")
                 .select("scc_id",
                         F.coalesce("l", F.lit(0)).cast("long")
-                        .alias("level")))
-    finally:
-        spark.conf.set(_CP, _old_cp)
+                        .alias("level"))
+                .localCheckpoint(eager=True))

@@ -491,15 +491,15 @@ def wand_upper_bounds(docs: DataFrame, doc_id: str = "doc_id",
 
 
 def ndcg_at_k(docs: DataFrame, terms: tuple[str, ...],
-              k: int = 10, id_col: str = "doc_id",
-              text_col: str = "text") -> DataFrame:
+              k: int = 10, text_col: str = "text") -> DataFrame:
     """NDCG@k of the BM25 ranking against graded term-coverage relevance
     (Järvelin & Kekäläinen, TOIS 2002) — the ranking-quality eval that
     closes the retrieval stack (rankers ix7/ix11/ix13, bounds ix14; this
     grades them): rel(d) = number of DISTINCT query terms present
     (0..|terms|, the deterministic pseudo-label), gain = 2^rel - 1,
-    discount = log2(rank + 1). Output per rank r <= k: (rnk, doc_id,
-    rel, dcg, ndcg) with running DCG and NDCG@r = DCG@r / IDCG@r.
+    discount = log2(rank + 1). `docs` carries `doc_id` (bm25_scores keys
+    on it). Output per rank r <= k: (rnk, doc_id, rel, dcg, ndcg) with
+    running DCG and NDCG@r = DCG@r / IDCG@r.
 
     Exactness discipline: gains are INTEGER (shiftleft, no libm pow);
     only log2 of the eleven small rank integers and the final round(4)
@@ -514,11 +514,11 @@ def ndcg_at_k(docs: DataFrame, terms: tuple[str, ...],
     scores = bm25_scores(docs, F.col(text_col), terms)
     wsplit = F.split(F.trim(F.lower(F.col(text_col))), r"\s+")
     rel = docs.select(
-        id_col,
+        "doc_id",
         F.size(F.array_intersect(
             F.array_distinct(wsplit),
             F.array(*[F.lit(t) for t in terms]))).cast("long").alias("rel"))
-    cand = scores.join(rel, id_col)
+    cand = scores.join(rel, "doc_id")
     gain = (F.expr("shiftleft(1L, cast(rel as int))") - 1).cast("double")
 
     def run(top: DataFrame, order_cols) -> DataFrame:
@@ -529,13 +529,13 @@ def ndcg_at_k(docs: DataFrame, terms: tuple[str, ...],
                 .withColumn("g", gain / F.log2(F.col("rnk") + 1))
                 .withColumn("cum", F.sum("g").over(cum)))
 
-    ranked = run(cand.orderBy(F.desc("bm25"), id_col).limit(k),
-                 [F.desc("bm25"), F.col(id_col)])
-    ideal = run(cand.orderBy(F.desc("rel"), id_col).limit(k),
-                [F.desc("rel"), F.col(id_col)]) \
+    ranked = run(cand.orderBy(F.desc("bm25"), "doc_id").limit(k),
+                 [F.desc("bm25"), F.col("doc_id")])
+    ideal = run(cand.orderBy(F.desc("rel"), "doc_id").limit(k),
+                [F.desc("rel"), F.col("doc_id")]) \
         .select(F.col("rnk").alias("irnk"), F.col("cum").alias("icum"))
     return (ranked.join(ideal, ranked["rnk"] == ideal["irnk"])
-            .select(F.col("rnk").cast("long"), id_col,
+            .select(F.col("rnk").cast("long"), "doc_id",
                     F.col("rel").cast("int").alias("rel"),
                     F.round("cum", 4).alias("dcg"),
                     F.round(F.col("cum") / F.col("icum"), 4)

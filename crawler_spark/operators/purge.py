@@ -24,7 +24,7 @@ epoch**: wave P = latest+1 commits, in ONE atomic manifest,
         rediscover it. The committed bloom bitsets cannot delete keys, so
         forget mode drops the ``bloom`` table from the epoch; resume's
         documented fallback rebuilds the prefilter from the filtered
-        ``seen`` (plans/frontier.py `_maybe_activate_bloom`). A live
+        ``seen`` (plans/frontier.py `_merge_bloom`). A live
         deletable sketch (operators/cuckoo.py) can drop the keys in place —
         see ``purge_from_cuckoo``.
 
@@ -116,8 +116,7 @@ def purge_urls(spark: SparkSession, store, urls,
     epoch = last + 1
 
     frontier = store.read_full("frontier", last)
-    seen = (store.read_seen(last) if hasattr(store, "read_seen")
-            else store.read_full("seen", last))
+    seen = store.read_seen(last)
     docs = store.read_delta_union("documents", last)
     flog = store.read_delta_union("fetch_log", last)
     metrics = store.read_delta_union("metrics", last)

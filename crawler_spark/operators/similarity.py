@@ -16,9 +16,7 @@ cell so a probe prunes partitions.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
-from pyspark.sql.types import DoubleType
 
 
 def dot_col(a: Column, b: Column) -> Column:
@@ -249,21 +247,6 @@ def embedding_neardup_pairs(emb: DataFrame, threshold: float = 0.95,
     # A pair matching in both bands appears twice with the identical rounded
     # cosine — OR-merge via distinct.
     return pairs.where(F.col("cosine") >= threshold).distinct()
-
-
-def cosine_pandas_udf(query_vec: list[float]):
-    """Arrow-batched numpy cosine vs a fixed query vector — the wide-vector
-    fast path (one BLAS dot per batch instead of per-element codegen)."""
-    qv = np.asarray(query_vec, dtype=np.float64)
-    qn = np.linalg.norm(qv)
-
-    @F.pandas_udf(DoubleType())
-    def cos(v: pd.Series) -> pd.Series:
-        m = np.stack(v.to_numpy())
-        sims = (m @ qv) / (np.linalg.norm(m, axis=1) * qn)
-        return pd.Series(sims)
-
-    return cos
 
 
 def sq_corpus_stats(emb: DataFrame, vec_col: str = "embedding",

@@ -54,45 +54,21 @@ def q(name: str, sql: str | None = None):
 # hash-diverge from Spark's int64 under a type-sensitive canonicalization;
 # fixed with ::BIGINT casts, regression-gated by tests/test_oracle_types.py)
 # — plus st7 (whose late_data_flags carried the genuine plan-branch
-# blocking race, ported to _det_block_expr this round) and two
-# decomposition probes that localize any residual divergence:
-# px3a (in-SQL integer checksum — removes the driver's hasher from the
-# equation entirely) and px3c (same oracle as px3, Spark side the naive
-# single-window prefix — distinguishes pack_sequences vs window semantics).
+# blocking race, ported to _det_block_expr this round).
 _DRIVER_PRIORITY = ("px3_sequence_pack", "mm4_multimodal_pack",
                     "px9_bpe_pack", "px10_loss_mask",
-                    "st7_arrival_lag_quantiles",
-                    "px3a_pack_checksum", "px3c_pack_naive_window")
+                    "st7_arrival_lag_quantiles")
 
 # Query names that already carry a committed driver-correctness row
-# (CORRECTNESS_r02.json + the 48 green rows of CORRECTNESS_r03.json). The
-# driver's per-round snapshot records only the FIRST ~50 registry entries,
-# so the export order below puts queries that have NEVER had a driver row
-# first — maximizing cumulative driver-gate coverage across rounds.
-# Previously-covered queries keep their committed evidence and fill the
-# remaining slots in definition order. Refresh this set EVERY round close
-# (round-3 verdict item 2: a stale set makes the driver re-sample the same
-# 50 and cumulative coverage stops growing).
-_DRIVER_COVERED_R03 = frozenset({
-    "st4_sliding_window", "mm5_decode_algebra", "tx7_repetition",
-    "dd9_line_dedup", "dd11_substring_repeats", "g2_anchor_agg",
-    "rc2_adaptive_ttl", "tx8_token_budget_mix", "tx9_hash_split",
-    "an6_sq_rerank", "g3_domain_cc", "g4_hits", "px4_weighted_sample",
-    "tx10_unigram_logprob", "tx11_bm25", "an5_ivf_recall",
-    "px1_corpus_pipeline", "px2_interleave_stats", "tx12_bigram_logprob",
-    "px5_temperature_mix", "rc3_snapshot_diff", "wc1_warc_roundtrip",
-    "g5_hop_distance", "g16_hyperanf", "ex1_boilerplate_strip",
-    "j6_asof_join", "j7_range_join", "ks1_kmv_distinct",
-    "st5_hypertable_rollup", "g6_redirect_resolve", "j8_time_window_join",
-    "ks2_countmin", "mm6_span_stats", "mm7_media_dedup",
-    "ks3_exact_quantile", "g7_triangle_count", "px6_stratified_split",
-    "dd12_containment", "st6_late_data_policy", "g8_degree_histogram",
-    "f9_url_template_mining", "dd13_lsh_recall", "mm8_frame_algebra",
-    "so4_intersect", "a7_metrics_pivot", "w5_frontier_sharding",
-    "w6_mercator_queues", "rc4_crawl_delay_budget",
-})
-
-_DRIVER_COVERED_R02 = frozenset({
+# (CORRECTNESS_r02.json, the 48 green rows of CORRECTNESS_r03.json and the
+# 45 green rows of CORRECTNESS_r04.json). The driver's per-round snapshot
+# records only the FIRST ~50 registry entries, so the export order below
+# puts queries that have NEVER had a driver row first — maximizing
+# cumulative driver-gate coverage across rounds. Previously-covered
+# queries keep their committed evidence and fill the remaining slots in
+# definition order. Refresh this set EVERY round close (a stale set makes
+# the driver re-sample the same 50 and cumulative coverage stops growing).
+_DRIVER_COVERED = frozenset({
     "j1_seen_anti_join", "f2_scope_same_source", "f3_scope_prefix",
     "f4_tld_scope", "f5_robots_gate", "p3_ua_assignment",
     "f6_blacklist_regex", "f8_asset_filter", "w1_priority_window",
@@ -108,14 +84,22 @@ _DRIVER_COVERED_R02 = frozenset({
     "dd10_semantic_keep", "an3_embedding_stats", "crawl_bfs",
     "mm1_multimodal_decode", "mm2_image_resize", "mm3_frame_sample",
     "dd7_dup_clusters", "dd8_canonical_keep", "tx5_decontaminate",
-    "g1_hostrank", "tx6_pii_scrub",
-})
-
-
-# CORRECTNESS_r04's 45 green rows (standing rotation rule: refresh each
-# round so the driver's ~50-row snapshot keeps sampling never-checked
-# names and cumulative driver coverage grows).
-_DRIVER_COVERED_R04 = frozenset({
+    "g1_hostrank", "tx6_pii_scrub", "st4_sliding_window",
+    "mm5_decode_algebra", "tx7_repetition", "dd9_line_dedup",
+    "dd11_substring_repeats", "g2_anchor_agg", "rc2_adaptive_ttl",
+    "tx8_token_budget_mix", "tx9_hash_split", "an6_sq_rerank", "g3_domain_cc",
+    "g4_hits", "px4_weighted_sample", "tx10_unigram_logprob", "tx11_bm25",
+    "an5_ivf_recall", "px1_corpus_pipeline", "px2_interleave_stats",
+    "tx12_bigram_logprob", "px5_temperature_mix", "rc3_snapshot_diff",
+    "wc1_warc_roundtrip", "g5_hop_distance", "g16_hyperanf",
+    "ex1_boilerplate_strip", "j6_asof_join", "j7_range_join",
+    "ks1_kmv_distinct", "st5_hypertable_rollup", "g6_redirect_resolve",
+    "j8_time_window_join", "ks2_countmin", "mm6_span_stats",
+    "mm7_media_dedup", "ks3_exact_quantile", "g7_triangle_count",
+    "px6_stratified_split", "dd12_containment", "st6_late_data_policy",
+    "g8_degree_histogram", "f9_url_template_mining", "dd13_lsh_recall",
+    "mm8_frame_algebra", "so4_intersect", "a7_metrics_pivot",
+    "w5_frontier_sharding", "w6_mercator_queues", "rc4_crawl_delay_budget",
     "a8_cohort_retention", "an7_pq_encode", "an8_adc_search",
     "dd14_minhash_estimate", "dd15_cdc_chunks", "dd16_lsh_band_planner",
     "f10_url_alias_rules", "g10_reciprocal_links", "g11_opic",
@@ -135,12 +119,10 @@ _DRIVER_COVERED_R04 = frozenset({
 
 
 def _export_order(names) -> list[str]:
-    covered = (_DRIVER_COVERED_R02 | _DRIVER_COVERED_R03
-               | _DRIVER_COVERED_R04)
     pri = [n for n in _DRIVER_PRIORITY if n in names]
     new = [n for n in names
-           if n not in covered and n not in _DRIVER_PRIORITY]
-    old = [n for n in names if n in covered]
+           if n not in _DRIVER_COVERED and n not in _DRIVER_PRIORITY]
+    old = [n for n in names if n in _DRIVER_COVERED]
     return pri + new + old
 
 
@@ -1067,10 +1049,6 @@ def an2_ivf_topk(spark, sf_dir):
 
 
 from crawler_spark.operators.similarity import rh_planes as _rh_planes  # noqa: E402
-
-
-def _plane_sql(p: list[float]) -> str:
-    return "[" + ", ".join(repr(x) for x in p) + "]"
 
 
 def _int_plane_dot_sql(vec_expr: str, p: list[float]) -> str:
@@ -2180,77 +2158,6 @@ def px3_sequence_pack(spark, sf_dir):
     t = d.select("doc_id", token_count_col(F.col("text")).alias("n_tokens"))
     return pack_sequences(t, "n_tokens", order_col="doc_id",
                           budget=1024, n_blocks=8)
-
-
-_PX3A_SQL = f"""
-WITH t AS (SELECT doc_id, {_TX3_TOKENS} AS n_tokens FROM documents),
-c AS (
-  SELECT doc_id, n_tokens,
-         COALESCE(SUM(n_tokens) OVER (ORDER BY doc_id
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-                  0)::BIGINT AS prev_tokens
-  FROM t),
-p AS (SELECT doc_id, n_tokens, prev_tokens,
-             (prev_tokens // 1024)::BIGINT AS seq_id,
-             (prev_tokens % 1024)::BIGINT AS seq_offset
-      FROM c)
-SELECT CAST(COUNT(*) AS BIGINT) AS n_rows,
-       CAST(SUM((('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT
-                 % 1000003)
-                * ((prev_tokens % 1000003) + 31 * (seq_id % 1000003)
-                   + 961 * seq_offset + n_tokens)) AS BIGINT) AS checksum
-FROM p
-"""
-
-
-@q("px3a_pack_checksum", _PX3A_SQL)
-def px3a_pack_checksum(spark, sf_dir):
-    """Driver-gate decomposition probe for the pack family (round-5
-    VERDICT item 1e): BOTH engines reduce the full px3 result to ONE
-    all-BIGINT checksum row IN-SQL, so the driver's own row
-    canonicalization/hashing machinery is removed from the comparison
-    entirely. If px3 is red while this is green, the divergence is in
-    result materialization/canonicalization, not in the computed values;
-    if both are red, the values themselves diverge. The checksum is an
-    order-independent content-keyed weighted sum in exact int64 range
-    (coin < 2^20, inner < 2^25, 500 rows)."""
-    from crawler_spark.functions.text import token_count_col
-    from crawler_spark.operators.sampling import pack_sequences
-    d = _t(spark, sf_dir, "documents")
-    t = d.select("doc_id", token_count_col(F.col("text")).alias("n_tokens"))
-    p = pack_sequences(t, "n_tokens", order_col="doc_id",
-                       budget=1024, n_blocks=8)
-    coin = (F.conv(F.substring(F.md5(F.col("doc_id").cast("string")),
-                               1, 8), 16, 10)
-            .cast("long") % 1000003)
-    contrib = coin * ((F.col("prev_tokens") % 1000003)
-                      + 31 * (F.col("seq_id") % 1000003)
-                      + 961 * F.col("seq_offset") + F.col("n_tokens"))
-    return p.agg(F.count(F.lit(1)).cast("long").alias("n_rows"),
-                 F.sum(contrib).cast("long").alias("checksum"))
-
-
-@q("px3c_pack_naive_window", _PX3_SQL)
-def px3c_pack_naive_window(spark, sf_dir):
-    """Driver-gate decomposition probe (round-5 VERDICT item 1c): the
-    same oracle as px3, but the Spark side is the NAIVE single global
-    window prefix sum — the correct-but-single-task twin of
-    pack_sequences. If px3 is red while this is green, the divergence is
-    inside the two-phase distributed prefix; if both share px3's fate,
-    pack_sequences is exonerated and the divergence is in the shared
-    token counting or the comparison layer. NOT a scale shape — probe
-    only (the production path is pack_sequences)."""
-    from crawler_spark.functions.text import token_count_col
-    d = _t(spark, sf_dir, "documents")
-    t = d.select("doc_id", token_count_col(F.col("text")).alias("n_tokens"))
-    w = (Window.orderBy("doc_id")
-         .rowsBetween(Window.unboundedPreceding, -1))
-    prev = F.coalesce(F.sum("n_tokens").over(w), F.lit(0)).cast("long")
-    return (t.withColumn("prev_tokens", prev)
-            .withColumn("seq_id",
-                        F.floor(F.col("prev_tokens") / 1024).cast("long"))
-            .withColumn("seq_offset",
-                        (F.col("prev_tokens") % 1024).cast("long")))
 
 
 _MM4_MEDIA_TOKENS = 64     # fixed per-image placeholder cost (LLaVA-style)
@@ -9894,7 +9801,7 @@ c AS (SELECT CAST(sum(CASE WHEN a = y AND b <> y THEN 1 ELSE 0 END)
              CAST(count(*) AS BIGINT) AS n
       FROM p)
 SELECT n, n_a_correct, n_b_correct, n10, n01,
-       round((n10 - n01) * (n10 - n01) * 1.0 / (n10 + n01), 4)
+       round((n10 - n01) * (n10 - n01) * 1.0 / NULLIF(n10 + n01, 0), 4)
          AS mcnemar_chi2
 FROM c
 """)
@@ -9909,7 +9816,8 @@ def a18_mcnemar(spark, sf_dir):
     completion of the eval suite (a10 calibration, a11 AUC, a12 AP,
     a13 Brier, a14 PR, a16 bootstrap CI, a17 confusion). Exact BIGINT
     discordance counts from ONE map-side pass + one global rollup;
-    a single division into the statistic."""
+    a single division into the statistic, NULL when the detectors never
+    disagree (n10 + n01 = 0) in both engines."""
     from crawler_spark.functions.text import (
         lang_id_col, quality_score_col,
     )
@@ -9932,5 +9840,6 @@ def a18_mcnemar(spark, sf_dir):
         F.count(F.lit(1)).cast("long").alias("n"))
     diff = F.col("n10") - F.col("n01")
     return c.select("n", "n_a_correct", "n_b_correct", "n10", "n01",
-                    F.round(diff * diff / (F.col("n10") + F.col("n01")),
+                    F.round(diff * diff / F.nullif(F.col("n10") + F.col("n01"),
+                                                   F.lit(0)),
                             4).alias("mcnemar_chi2"))

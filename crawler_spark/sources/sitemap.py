@@ -35,25 +35,6 @@ def parse_sitemap(xml: str) -> list[str]:
     return _LOC_RE.findall(xml)
 
 
-SITEMAP_URLS_SCHEMA = StructType([
-    StructField("host", StringType(), False),
-    StructField("urls", ArrayType(StringType(), False), False),
-])
-
-
-def parse_sitemaps_df(sitemap_src: DataFrame) -> DataFrame:
-    """(host, xml) -> (host, urls) in one vectorized mapInPandas pass."""
-
-    def _parse(batches):
-        for pdf in batches:
-            yield pd.DataFrame({
-                "host": pdf["host"],
-                "urls": [parse_sitemap(x or "") for x in pdf["xml"]],
-            })
-
-    return sitemap_src.mapInPandas(_parse, SITEMAP_URLS_SCHEMA)
-
-
 _SM_BLOCK_RE = re.compile(r"<sitemap\b.*?</sitemap>",
                           re.IGNORECASE | re.DOTALL)
 

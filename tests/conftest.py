@@ -1,7 +1,10 @@
 from __future__ import annotations
 
+import dataclasses
+import shutil
 import sys
 from pathlib import Path
+from typing import NamedTuple
 
 import pytest
 
@@ -20,3 +23,82 @@ def spark():
 def small_cfg():
     from crawler_spark.sources.webgraph import WebGraphConfig
     return WebGraphConfig(n_hosts=8, max_pages_per_host=12, out_degree=5)
+
+
+class CrawlEnv(NamedTuple):
+    fetcher: object          # SimulatedFetcher over the fixture web
+    robots_df: object        # robots.txt source table (robots_src=)
+    seeds: tuple[str, ...]
+
+
+@pytest.fixture(scope="session")
+def web_env(spark):
+    """`web_env(cfg)`: the CrawlEnv of a WebGraphConfig, built once."""
+    from crawler_spark.sources.fetch import SimulatedFetcher
+    from crawler_spark.sources.webgraph import gen_seeds, to_spark
+
+    envs: dict = {}
+
+    def get(cfg) -> CrawlEnv:
+        if cfg not in envs:
+            pages_df, robots_df = to_spark(spark, cfg)
+            envs[cfg] = CrawlEnv(SimulatedFetcher(pages_df), robots_df,
+                                 tuple(gen_seeds(cfg)))
+        return envs[cfg]
+
+    return get
+
+
+@pytest.fixture(scope="session")
+def crawl_env(web_env, small_cfg) -> CrawlEnv:
+    return web_env(small_cfg)
+
+
+@pytest.fixture(scope="session")
+def shared_crawl(spark, crawl_env, tmp_path_factory):
+    """`shared_crawl(spec)` returns `run_crawl(spark, spec, crawl_env.fetcher,
+    robots_src=crawl_env.robots_df)`, running each distinct crawl (the spec
+    minus its checkpoint_dir, and the store kind) once per session; crawls
+    are deterministic (SURVEY.md §5.3). The CrawlRun is shared: read only.
+    With `spec.checkpoint_dir` set, the committed SnapDirStore is copied
+    there (a new dir), for the caller to expire, purge or resume."""
+    from crawler_spark.plans.frontier import run_crawl
+
+    runs: dict = {}
+
+    def crawl(spec):
+        key = (dataclasses.replace(spec, checkpoint_dir=""),
+               bool(spec.checkpoint_dir))
+        if key not in runs:
+            root = (str(tmp_path_factory.mktemp("crawl") / "store")
+                    if spec.checkpoint_dir else "")
+            runs[key] = run_crawl(
+                spark, dataclasses.replace(spec, checkpoint_dir=root),
+                crawl_env.fetcher, robots_src=crawl_env.robots_df)
+        if spec.checkpoint_dir:
+            shutil.copytree(runs[key].spec.checkpoint_dir,
+                            spec.checkpoint_dir)
+        return runs[key]
+
+    return crawl
+
+
+def snap_fp(spark, root: str) -> dict:
+    """Content fingerprints of a SnapDirStore's latest full state and all
+    its deltas (`seen` through read_seen); equal dicts mean bit-identical
+    crawl state. Test modules import it: `from conftest import snap_fp`."""
+    from crawler_spark.plans.tableio import SnapDirStore, content_fingerprint
+
+    store = SnapDirStore(spark, root)
+    last = store.latest_wave()
+    out = {"last_wave": last}
+    for t in ("frontier", "hosts"):
+        try:
+            out[t] = content_fingerprint(store.read_full(t, last))
+        except Exception:
+            out[t] = None
+    out["seen"] = content_fingerprint(store.read_seen(last))
+    for t in ("documents", "fetch_log", "metrics"):
+        df = store.read_delta_union(t, last)
+        out[t] = content_fingerprint(df) if df is not None else None
+    return out

@@ -16,10 +16,9 @@ from crawler_spark.spec import CrawlJobSpec
 from tests.oracle import run_oracle
 
 
-def _run_both(spark, cfg, spec):
+def _run_both(shared_crawl, cfg, spec):
     oracle = run_oracle(spec, gen_pages(cfg), gen_robots_src(cfg))
-    pages_df, robots_df = to_spark(spark, cfg)
-    run = run_crawl(spark, spec, SimulatedFetcher(pages_df), robots_src=robots_df)
+    run = shared_crawl(spec)
     return oracle, run, run.to_python()
 
 
@@ -49,34 +48,33 @@ def _assert_equal(oracle, run, got):
     pytest.param({"bloom_min_seen": 0}, id="bloom-forced-active"),
     pytest.param({"per_host_tokens": 3.0}, id="salted-politeness"),
 ])
-def test_engine_matches_oracle(spark, small_cfg, spec_kw):
+def test_engine_matches_oracle(shared_crawl, small_cfg, spec_kw):
     spec = CrawlJobSpec(seeds=tuple(gen_seeds(small_cfg)), max_waves=20, **spec_kw)
-    oracle, run, got = _run_both(spark, small_cfg, spec)
+    oracle, run, got = _run_both(shared_crawl, small_cfg, spec)
     assert run.n_fetched > 0
     _assert_equal(oracle, run, got)
 
 
-def test_seen_has_no_duplicates(spark, small_cfg):
+def test_seen_has_no_duplicates(shared_crawl, small_cfg):
     spec = CrawlJobSpec(seeds=tuple(gen_seeds(small_cfg)), max_waves=20)
-    _, run, _ = _run_both(spark, small_cfg, spec)
+    _, run, _ = _run_both(shared_crawl, small_cfg, spec)
     total = run.seen.count()
     assert run.seen.select("url_hash").distinct().count() == total
     from pyspark.sql import functions as F
     assert run.seen.select(F.lower("url_canon")).distinct().count() == total
 
 
-def test_agent_override(spark, small_cfg):
+def test_agent_override(shared_crawl, small_cfg):
     """P3: explicit spec.agent overrides the per-host UA pick (scan.rs:34-36)."""
     from pyspark.sql import functions as F
     spec = CrawlJobSpec(seeds=tuple(gen_seeds(small_cfg)), max_waves=3,
                         agent="CustomBot/1.0")
-    pages_df, robots_df = to_spark(spark, small_cfg)
-    run = run_crawl(spark, spec, SimulatedFetcher(pages_df), robots_src=robots_df)
+    run = shared_crawl(spec)
     agents = [r["agent"] for r in run.fetch_log.select("agent").distinct().collect()]
     assert agents == ["CustomBot/1.0"]
 
     spec2 = CrawlJobSpec(seeds=tuple(gen_seeds(small_cfg)), max_waves=3)
-    run2 = run_crawl(spark, spec2, SimulatedFetcher(pages_df), robots_src=robots_df)
+    run2 = shared_crawl(spec2)
     per_host = (run2.fetch_log.groupBy("host")
                 .agg(F.countDistinct("agent").alias("n")).collect())
     assert all(r["n"] == 1 for r in per_host)          # deterministic per host
@@ -127,20 +125,17 @@ def test_drain_mode_fetches_all_admissible_once(spark, small_cfg):
     assert run.n_fetched == len(expected)
 
 
-def test_lazy_robots_cache_matches_oracle(spark, small_cfg):
+def test_lazy_robots_cache_matches_oracle(spark, small_cfg, crawl_env):
     """F5 production shape: no pre-warmed robots table — rules are fetched
     through the fetcher interface the first wave a host becomes a candidate.
     Result must equal the oracle (which knows all rules upfront): lazy fill
     is semantically identical because gating happens at admission time."""
     from crawler_spark.sources.webgraph import to_spark_robots_pages
-    from tests.oracle import run_oracle
-    from crawler_spark.sources.webgraph import gen_pages, gen_robots_src
 
     spec = CrawlJobSpec(seeds=tuple(gen_seeds(small_cfg)), max_waves=20)
     oracle = run_oracle(spec, gen_pages(small_cfg), gen_robots_src(small_cfg))
-    pages_df, _ = to_spark(spark, small_cfg)
     run = run_crawl(
-        spark, spec, SimulatedFetcher(pages_df), robots_src=None,
+        spark, spec, crawl_env.fetcher, robots_src=None,
         robots_fetcher=SimulatedFetcher(to_spark_robots_pages(spark, small_cfg)))
     got_seen = {r["url_canon"] for r in run.seen.select("url_canon").collect()}
     assert got_seen == oracle.seen
@@ -149,15 +144,14 @@ def test_lazy_robots_cache_matches_oracle(spark, small_cfg):
     assert e_metrics == o_metrics
 
 
-def test_metrics_gini_opt_in(spark, small_cfg):
+def test_metrics_gini_opt_in(spark, small_cfg, crawl_env):
     """spec.metrics_gini=True ships the w10 host-fairness signal with
     every wave's metrics row (S9 lifecycle integration); default off
     keeps the throughput path unchanged."""
-    pages_df, robots_df = to_spark(spark, small_cfg)
+    fetcher, robots_df, _ = crawl_env
     seeds = gen_seeds(small_cfg, 4)
     on = CrawlJobSpec(seeds=seeds, max_waves=3, metrics_gini=True)
-    run = run_crawl(spark, on, SimulatedFetcher(pages_df),
-                    robots_src=robots_df)
+    run = run_crawl(spark, on, fetcher, robots_src=robots_df)
     assert run.metrics, "no waves ran"
     for m in run.metrics:
         assert "host_gini" in m and "hosts_fetched" in m
@@ -168,6 +162,5 @@ def test_metrics_gini_opt_in(spark, small_cfg):
         if m["hosts_fetched"] == 1:
             assert m["host_gini"] == 0.0
     off = CrawlJobSpec(seeds=seeds, max_waves=3)
-    run2 = run_crawl(spark, off, SimulatedFetcher(pages_df),
-                     robots_src=robots_df)
+    run2 = run_crawl(spark, off, fetcher, robots_src=robots_df)
     assert all("host_gini" not in m for m in run2.metrics)

@@ -24,45 +24,19 @@ import dataclasses
 import json
 import os
 
-import pytest
-
-from crawler_spark.operators.purge import purge_keys, purge_urls
+from crawler_spark.operators.purge import purge_urls
 from crawler_spark.plans.frontier import run_crawl
 from crawler_spark.plans.tableio import SnapDirStore, content_fingerprint
-from crawler_spark.sources.fetch import SimulatedFetcher
-from crawler_spark.sources.webgraph import gen_seeds, to_spark
 from crawler_spark.spec import CrawlJobSpec
+from conftest import snap_fp
 
 
-@pytest.fixture()
-def crawl_env(spark, small_cfg):
-    pages_df, robots_df = to_spark(spark, small_cfg)
-    fetcher = SimulatedFetcher(pages_df)
-    seeds = tuple(gen_seeds(small_cfg))
-    return fetcher, robots_df, seeds
-
-
-def _state_fp(spark, root: str) -> dict:
-    store = SnapDirStore(spark, root)
-    last = store.latest_wave()
-    out = {"last_wave": last}
-    for t in ("frontier", "hosts"):
-        try:
-            out[t] = content_fingerprint(store.read_full(t, last))
-        except Exception:
-            out[t] = None
-    out["seen"] = content_fingerprint(store.read_seen(last))
-    for t in ("documents", "fetch_log", "metrics"):
-        df = store.read_delta_union(t, last)
-        out[t] = content_fingerprint(df) if df is not None else None
-    return out
-
-
-def _crawl(spark, crawl_env, root, compact_every=2, **kw):
-    fetcher, robots_df, seeds = crawl_env
-    spec = CrawlJobSpec(seeds=seeds, max_waves=20, checkpoint_dir=root,
+def _crawl(shared_crawl, crawl_env, root, compact_every=2, **kw):
+    """A finished crawl's committed store, copied to `root`."""
+    spec = CrawlJobSpec(seeds=crawl_env.seeds, max_waves=20,
+                        checkpoint_dir=root,
                         seen_compact_every=compact_every, **kw)
-    return run_crawl(spark, spec, fetcher, robots_src=robots_df), spec
+    return shared_crawl(spec), spec
 
 
 def _snap_dirs(root: str) -> set[str]:
@@ -75,11 +49,12 @@ def _snap_dirs(root: str) -> set[str]:
     return out
 
 
-def test_expire_preserves_latest_state(spark, crawl_env, tmp_path):
+def test_expire_preserves_latest_state(spark, crawl_env, shared_crawl,
+                                       tmp_path):
     d = str(tmp_path / "exp")
-    run, _ = _crawl(spark, crawl_env, d)
+    run, _ = _crawl(shared_crawl, crawl_env, d)
     assert run.n_waves >= 4
-    before = _state_fp(spark, d)
+    before = snap_fp(spark, d)
     dirs_before = _snap_dirs(d)
 
     store = SnapDirStore(spark, d)
@@ -88,7 +63,7 @@ def test_expire_preserves_latest_state(spark, crawl_env, tmp_path):
     assert audit["removed_dirs"] > 0
 
     # latest state is bit-identical through a fresh store
-    assert _state_fp(spark, d) == before
+    assert snap_fp(spark, d) == before
     # manifests below the cutoff are gone, retained ones intact
     mdir = os.path.join(d, "_manifest")
     waves = sorted(int(f.split(".")[0]) for f in os.listdir(mdir)
@@ -101,15 +76,16 @@ def test_expire_preserves_latest_state(spark, crawl_env, tmp_path):
     assert not os.path.exists(os.path.join(d, store._INTENT))
     # idempotent: a second expire with the same horizon is a no-op
     assert store.expire(keep_last=2)["removed_dirs"] == 0
-    assert _state_fp(spark, d) == before
+    assert snap_fp(spark, d) == before
 
 
-def test_expire_protects_init_seen_base(spark, crawl_env, tmp_path):
+def test_expire_protects_init_seen_base(spark, crawl_env, shared_crawl,
+                                        tmp_path):
     """Regression: when the crawl ends before the first seen compaction,
     the live seen base is the INIT commit (wave -1); expire must protect
     that directory or read_seen breaks on the retained manifests."""
     d = str(tmp_path / "initbase")
-    _crawl(spark, crawl_env, d, compact_every=99)   # never compacts
+    _crawl(shared_crawl, crawl_env, d, compact_every=99)   # never compacts
     store = SnapDirStore(spark, d)
     last = store.latest_wave()
     assert store.manifest(last)["extra"]["seen_base_wave"] == -1
@@ -120,30 +96,29 @@ def test_expire_protects_init_seen_base(spark, crawl_env, tmp_path):
     assert os.path.isdir(os.path.join(d, "seen", "_snap=-1"))
 
 
-def test_resume_after_expire(spark, crawl_env, tmp_path):
+def test_resume_after_expire(spark, crawl_env, shared_crawl, tmp_path):
     """Kill after 2 waves, expire to the single latest snapshot, resume —
     the finished state must equal an uninterrupted run's."""
     fetcher, robots_df, seeds = crawl_env
     full_dir, part_dir = str(tmp_path / "full"), str(tmp_path / "part")
     base = CrawlJobSpec(seeds=seeds, max_waves=20, seen_compact_every=2)
-    run_crawl(spark, dataclasses.replace(base, checkpoint_dir=full_dir),
-              fetcher, robots_src=robots_df)
-    run_crawl(spark, dataclasses.replace(base, checkpoint_dir=part_dir,
-                                         max_waves=2),
-              fetcher, robots_src=robots_df)
+    shared_crawl(dataclasses.replace(base, checkpoint_dir=full_dir))
+    shared_crawl(dataclasses.replace(base, checkpoint_dir=part_dir,
+                                     max_waves=2))
     SnapDirStore(spark, part_dir).expire(keep_last=1)
     run_crawl(spark, dataclasses.replace(base, checkpoint_dir=part_dir),
               fetcher, robots_src=robots_df, resume=True)
-    assert _state_fp(spark, part_dir) == _state_fp(spark, full_dir)
+    assert snap_fp(spark, part_dir) == snap_fp(spark, full_dir)
 
 
-def test_expire_crash_rolls_back_and_forward(spark, crawl_env, tmp_path):
+def test_expire_crash_rolls_back_and_forward(spark, crawl_env, shared_crawl,
+                                             tmp_path):
     """Interrupted maintenance recovers on the next store open: a swap-phase
     intent restores the pre-expire layout (originals still exist under
     .expired names); a cleanup-phase intent completes the deletions."""
     d = str(tmp_path / "crash")
-    _crawl(spark, crawl_env, d)
-    before = _state_fp(spark, d)
+    _crawl(shared_crawl, crawl_env, d)
+    before = snap_fp(spark, d)
     store = SnapDirStore(spark, d)
     dirs0 = _snap_dirs(d)
 
@@ -161,7 +136,7 @@ def test_expire_crash_rolls_back_and_forward(spark, crawl_env, tmp_path):
     assert not os.path.exists(snap + ".expired")
     assert not os.path.exists(s2._intent_path())
     assert _snap_dirs(d) == dirs0
-    assert _state_fp(spark, d) == before
+    assert snap_fp(spark, d) == before
 
     # --- simulate a crash mid-cleanup: deletions recorded, not yet done ---
     os.replace(snap, snap + ".expired")   # superseded copy awaiting deletion
@@ -174,7 +149,7 @@ def test_expire_crash_rolls_back_and_forward(spark, crawl_env, tmp_path):
     assert not os.path.exists(s3._intent_path())
 
 
-def test_in_crawl_snapshot_keep(spark, crawl_env, tmp_path):
+def test_in_crawl_snapshot_keep(spark, crawl_env, shared_crawl, tmp_path):
     """spec.snapshot_keep bounds store growth DURING the crawl (cheap
     expire mode after each commit): final state and kill/resume bit-identity
     are unchanged, manifests never exceed the horizon, and the document
@@ -182,14 +157,13 @@ def test_in_crawl_snapshot_keep(spark, crawl_env, tmp_path):
     fetcher, robots_df, seeds = crawl_env
     ctl_dir, keep_dir = str(tmp_path / "ctl"), str(tmp_path / "keep")
     base = CrawlJobSpec(seeds=seeds, max_waves=20, seen_compact_every=2)
-    run_crawl(spark, dataclasses.replace(base, checkpoint_dir=ctl_dir),
-              fetcher, robots_src=robots_df)
+    shared_crawl(dataclasses.replace(base, checkpoint_dir=ctl_dir))
 
     # (a) uninterrupted crawl under retention == control state
     run_crawl(spark, dataclasses.replace(base, checkpoint_dir=keep_dir,
                                          snapshot_keep=2),
               fetcher, robots_src=robots_df)
-    assert _state_fp(spark, keep_dir) == _state_fp(spark, ctl_dir)
+    assert snap_fp(spark, keep_dir) == snap_fp(spark, ctl_dir)
     mdir = os.path.join(keep_dir, "_manifest")
     assert len([f for f in os.listdir(mdir) if f.endswith(".json")]) == 2
     # document history intact: one delta dir per fetching wave
@@ -206,12 +180,12 @@ def test_in_crawl_snapshot_keep(spark, crawl_env, tmp_path):
     run_crawl(spark, dataclasses.replace(base, checkpoint_dir=kill_dir,
                                          snapshot_keep=2),
               fetcher, robots_src=robots_df, resume=True)
-    assert _state_fp(spark, kill_dir) == _state_fp(spark, ctl_dir)
+    assert snap_fp(spark, kill_dir) == snap_fp(spark, ctl_dir)
 
 
-def test_purge_suppress_tombstones(spark, crawl_env, tmp_path):
+def test_purge_suppress_tombstones(spark, crawl_env, shared_crawl, tmp_path):
     d = str(tmp_path / "sup")
-    run, spec = _crawl(spark, crawl_env, d)
+    run, spec = _crawl(shared_crawl, crawl_env, d)
     store = SnapDirStore(spark, d)
     last = store.latest_wave()
     victims = [r["doc_id"] for r in
@@ -251,10 +225,11 @@ def test_purge_suppress_tombstones(spark, crawl_env, tmp_path):
     assert docs2.where(docs2["doc_id"].isin(victims)).count() == 0
 
 
-def test_purge_forget_erases_seen_and_bloom(spark, crawl_env, tmp_path):
+def test_purge_forget_erases_seen_and_bloom(spark, crawl_env, shared_crawl,
+                                            tmp_path):
     d = str(tmp_path / "forget")
     # tiny bloom threshold so the bloom table actually commits
-    run, spec = _crawl(spark, crawl_env, d, bloom_min_seen=1)
+    run, spec = _crawl(shared_crawl, crawl_env, d, bloom_min_seen=1)
     store = SnapDirStore(spark, d)
     last = store.latest_wave()
     assert "bloom" in store.manifest(last)["tables"]
@@ -277,7 +252,7 @@ def test_purge_forget_erases_seen_and_bloom(spark, crawl_env, tmp_path):
     assert run2.seen.count() == seen.count()      # drained frontier: no change
 
 
-def _mid_crawl_victim(spark, crawl_env, tmp_path, tag):
+def _mid_crawl_victim(crawl_env, shared_crawl, tmp_path, tag):
     """Kill a crawl after 2 waves and pick a victim URL that was fetched
     early but is ALSO linked from a page the killed run has not yet fetched
     — so the resumed crawl genuinely re-encounters its inlink and the
@@ -287,13 +262,11 @@ def _mid_crawl_victim(spark, crawl_env, tmp_path, tag):
     fetcher, robots_df, seeds = crawl_env
     base = CrawlJobSpec(seeds=seeds, max_waves=20, seen_compact_every=2)
     ctl_dir = str(tmp_path / f"{tag}-ctl")
-    run_ctl = run_crawl(spark, dataclasses.replace(base,
-                                                   checkpoint_dir=ctl_dir),
-                        fetcher, robots_src=robots_df)
+    run_ctl = shared_crawl(dataclasses.replace(base, checkpoint_dir=ctl_dir))
     assert run_ctl.n_waves >= 4
     kill_dir = str(tmp_path / f"{tag}-kill")
     spec_k = dataclasses.replace(base, checkpoint_dir=kill_dir, max_waves=2)
-    run_k = run_crawl(spark, spec_k, fetcher, robots_src=robots_df)
+    run_k = shared_crawl(spec_k)
     fetched_early = {r["url_canon"]
                      for r in run_k.fetch_log.select("url_canon").collect()}
     # link targets of pages fetched at wave >= 2 (media_ref of link spans is
@@ -311,12 +284,12 @@ def _mid_crawl_victim(spark, crawl_env, tmp_path, tag):
 
 
 def test_purge_suppress_blocks_readmission_mid_crawl(spark, crawl_env,
-                                                     tmp_path):
+                                                     shared_crawl, tmp_path):
     """The tombstone property under fire: purge a fetched URL from a
     KILLED-mid-crawl store, resume — later waves re-encounter its inlinks,
     and the seen tombstone must block re-fetch and re-admission."""
     v, kill_dir, spec_r, fetcher, robots_df = _mid_crawl_victim(
-        spark, crawl_env, tmp_path, "sup")
+        crawl_env, shared_crawl, tmp_path, "sup")
     store = SnapDirStore(spark, kill_dir)
     audit = purge_urls(spark, store, [v], mode="suppress")
     assert audit["docs_purged"] == 1
@@ -334,12 +307,12 @@ def test_purge_suppress_blocks_readmission_mid_crawl(spark, crawl_env,
 
 
 def test_purge_forget_allows_rediscovery_mid_crawl(spark, crawl_env,
-                                                   tmp_path):
+                                                   shared_crawl, tmp_path):
     """Forget mode is full erasure: with the seen key gone, the resumed
     crawl legitimately re-discovers and re-fetches the URL when a later
     wave links to it."""
     v, kill_dir, spec_r, fetcher, robots_df = _mid_crawl_victim(
-        spark, crawl_env, tmp_path, "fgt")
+        crawl_env, shared_crawl, tmp_path, "fgt")
     store = SnapDirStore(spark, kill_dir)
     audit = purge_urls(spark, store, [v], mode="forget")
     assert audit["seen_purged"] == 1
@@ -355,14 +328,14 @@ def test_purge_forget_allows_rediscovery_mid_crawl(spark, crawl_env,
     assert docs.where(docs["doc_id"] == v).count() == 1
 
 
-def _purge_without_gc(spark, crawl_env, tmp_path, tag):
+def _purge_without_gc(spark, crawl_env, shared_crawl, tmp_path, tag):
     """Commit a purge epoch exactly as purge_urls does but 'crash' before
     its physical GC: returns (store, root, epoch, victims, n_after) with
     pre-epoch garbage dirs still on disk."""
     import crawler_spark.operators.purge as purge_mod
 
     d = str(tmp_path / tag)
-    run, _ = _crawl(spark, crawl_env, d)
+    run, _ = _crawl(shared_crawl, crawl_env, d)
     store = SnapDirStore(spark, d)
     victims = [r["doc_id"] for r in
                run.documents.select("doc_id").limit(2).collect()]
@@ -382,14 +355,15 @@ def _purge_without_gc(spark, crawl_env, tmp_path, tag):
     return store, d, epoch, victims, n_after
 
 
-def test_expire_deletes_stale_prepurge_dirs(spark, crawl_env, tmp_path):
+def test_expire_deletes_stale_prepurge_dirs(spark, crawl_env, shared_crawl,
+                                            tmp_path):
     """Regression (review finding): delta dirs below a purge epoch's
     delta_base are superseded garbage — expire must DELETE them, never
     union them into a compacted base (which would resurrect purged rows and
     duplicate every pre-purge row). Run on the SAME store object so the
     open-time recovery cannot clean up first."""
     store, d, epoch, victims, n_after = _purge_without_gc(
-        spark, crawl_env, tmp_path, "staledirs")
+        spark, crawl_env, shared_crawl, tmp_path, "staledirs")
     store.expire(keep_last=1)
     assert not os.path.isdir(os.path.join(d, "documents", "_snap=0"))
     docs = SnapDirStore(spark, d).read_delta_union("documents", epoch)
@@ -398,12 +372,12 @@ def test_expire_deletes_stale_prepurge_dirs(spark, crawl_env, tmp_path):
 
 
 def test_store_open_completes_interrupted_purge_gc(spark, crawl_env,
-                                                   tmp_path):
+                                                   shared_crawl, tmp_path):
     """A crash between the purge's manifest commit and its GC intent leaves
     no recovery intent — the next store open must detect the un-GC'd purge
     epoch from the manifest and complete the physical erasure itself."""
     _, d, epoch, victims, n_after = _purge_without_gc(
-        spark, crawl_env, tmp_path, "opengc")
+        spark, crawl_env, shared_crawl, tmp_path, "opengc")
     s2 = SnapDirStore(spark, d)                          # open triggers GC
     assert not os.path.isdir(os.path.join(d, "documents", "_snap=0"))
     mdir = os.path.join(d, "_manifest")
@@ -414,11 +388,12 @@ def test_store_open_completes_interrupted_purge_gc(spark, crawl_env,
     assert docs.where(docs["doc_id"].isin(victims)).count() == 0
 
 
-def test_purge_matches_casefold_identity(spark, crawl_env, tmp_path):
+def test_purge_matches_casefold_identity(spark, crawl_env, shared_crawl,
+                                         tmp_path):
     """Any spelling of the page purges the stored representative — the
     match key is the engine's casefold hash, not the raw string."""
     d = str(tmp_path / "fold")
-    run, _ = _crawl(spark, crawl_env, d)
+    run, _ = _crawl(shared_crawl, crawl_env, d)
     store = SnapDirStore(spark, d)
     victim = run.documents.select("doc_id").limit(1).collect()[0]["doc_id"]
     shouty = victim.upper().replace("HTTP://", "http://")

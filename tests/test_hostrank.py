@@ -12,9 +12,8 @@ from crawler_spark.operators.hostrank import (
     host_edges, hostrank_boosts, pagerank_hosts,
 )
 from crawler_spark.plans.frontier import run_crawl
-from crawler_spark.sources.fetch import SimulatedFetcher
 from crawler_spark.sources.webgraph import (
-    gen_pages, gen_robots_src, gen_seeds, to_spark,
+    gen_pages, gen_robots_src, gen_seeds,
 )
 from crawler_spark.spec import CrawlJobSpec
 from tests.oracle import run_oracle
@@ -93,7 +92,8 @@ def test_admit_folds_boost_additively(spark):
                     "http://b.com/y": -1.0}    # no boost row -> unchanged
 
 
-def test_crawl_with_host_priorities_matches_oracle(spark, small_cfg):
+def test_crawl_with_host_priorities_matches_oracle(spark, small_cfg,
+                                                   crawl_env):
     """Full-crawl equality under injected host-rank boosts: engine and the
     pure-Python oracle get the same per-host boost table; a global budget
     makes cross-host priority order decide the fetch schedule."""
@@ -102,31 +102,30 @@ def test_crawl_with_host_priorities_matches_oracle(spark, small_cfg):
                         max_pages=25, per_host_tokens=2.0, token_cap=4.0)
     oracle = run_oracle(spec, gen_pages(small_cfg), gen_robots_src(small_cfg),
                         host_boosts=boosts)
-    pages_df, robots_df = to_spark(spark, small_cfg)
     hp = spark.createDataFrame(list(boosts.items()),
                                "host string, host_boost double")
-    run = run_crawl(spark, spec, SimulatedFetcher(pages_df),
-                    robots_src=robots_df, host_priorities=hp)
+    run = run_crawl(spark, spec, crawl_env.fetcher,
+                    robots_src=crawl_env.robots_df, host_priorities=hp)
     got = run.to_python()
     assert got["seen"] == oracle.seen
     assert got["waves"] == oracle.waves
     assert got["doc_wave"] == oracle.doc_wave
 
 
-def test_end_to_end_rank_then_recrawl_ordering(spark, small_cfg):
+def test_end_to_end_rank_then_recrawl_ordering(spark, small_cfg, crawl_env,
+                                               shared_crawl):
     """The intended production loop: crawl -> host_edges over the result
     docs -> pagerank -> boosts for the next (re)crawl. Checks the chain
     composes and produces fractional (boosted) frontier priorities."""
     spec = CrawlJobSpec(seeds=tuple(gen_seeds(small_cfg)), max_waves=4)
-    pages_df, robots_df = to_spark(spark, small_cfg)
-    run = run_crawl(spark, spec, SimulatedFetcher(pages_df),
-                    robots_src=robots_df)
+    fetcher, robots_df, _ = crawl_env
+    run = shared_crawl(spec)
     docs = run.documents.select("doc_id", "spans")
     ranks = pagerank_hosts(host_edges(docs))
     assert ranks.count() > 0
     hp = hostrank_boosts(ranks)
-    run2 = run_crawl(spark, spec, SimulatedFetcher(pages_df),
-                     robots_src=robots_df, host_priorities=hp)
+    run2 = run_crawl(spark, spec, fetcher, robots_src=robots_df,
+                     host_priorities=hp)
     # same admissible web => same seen set; only ordering shifts
     assert {r["url_canon"] for r in run2.seen.collect()} == \
            {r["url_canon"] for r in run.seen.collect()}
@@ -300,21 +299,21 @@ def test_personalized_with_full_teleport_equals_classic(spark):
     assert classic == full
 
 
-def test_opic_boosts_compose_with_crawl(spark, small_cfg):
+def test_opic_boosts_compose_with_crawl(spark, small_cfg, crawl_env,
+                                       shared_crawl):
     """g11 made load-bearing: crawl -> host_edges -> OPIC importance ->
     hostrank_boosts -> recrawl. Same admissible web => same seen set."""
     from crawler_spark.operators.hostrank import opic_hosts
     spec = CrawlJobSpec(seeds=tuple(gen_seeds(small_cfg)), max_waves=4)
-    pages_df, robots_df = to_spark(spark, small_cfg)
-    run = run_crawl(spark, spec, SimulatedFetcher(pages_df),
-                    robots_src=robots_df)
+    fetcher, robots_df, _ = crawl_env
+    run = shared_crawl(spec)
     imp = opic_hosts(host_edges(run.documents.select("doc_id", "spans")),
                      iters=4)
     hp = hostrank_boosts(imp.select("host",
                                     F.col("importance").alias("rank")))
     assert all(-1.0 < r.host_boost < 0.0 for r in hp.collect())
-    run2 = run_crawl(spark, spec, SimulatedFetcher(pages_df),
-                     robots_src=robots_df, host_priorities=hp)
+    run2 = run_crawl(spark, spec, fetcher, robots_src=robots_df,
+                     host_priorities=hp)
     assert {r["url_canon"] for r in run2.seen.collect()} == \
            {r["url_canon"] for r in run.seen.collect()}
 

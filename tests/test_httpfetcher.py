@@ -44,44 +44,39 @@ def test_fetch_contract_and_error_mapping(spark, small_cfg):
         assert r["status"] in (200, 404, 429, 500)
 
 
-def test_full_crawl_through_http_fetcher(spark, small_cfg):
+def test_full_crawl_through_http_fetcher(spark, small_cfg, crawl_env,
+                                        shared_crawl):
     """run_crawl over HttpFetcher(fake transport) == run_crawl over
     SimulatedFetcher: the two fetch paths are interchangeable."""
     from crawler_spark.plans.frontier import run_crawl
-    from crawler_spark.sources.fetch import SimulatedFetcher
-    from crawler_spark.sources.webgraph import to_spark
     from crawler_spark.spec import CrawlJobSpec
 
     spec = CrawlJobSpec(seeds=tuple(gen_seeds(small_cfg)), max_waves=4)
-    pages_df, robots_df = to_spark(spark, small_cfg)
     via_http = run_crawl(spark, spec,
                          HttpFetcher(transport=_fixture_transport(small_cfg)),
-                         robots_src=robots_df)
-    via_join = run_crawl(spark, spec, SimulatedFetcher(pages_df),
-                         robots_src=robots_df)
+                         robots_src=crawl_env.robots_df)
+    via_join = shared_crawl(spec)
     a = {r["url_canon"] for r in via_http.seen.select("url_canon").collect()}
     b = {r["url_canon"] for r in via_join.seen.select("url_canon").collect()}
     assert a == b and via_http.n_fetched == via_join.n_fetched
 
 
-def test_chrome_fetcher_same_surface(spark, small_cfg):
+def test_chrome_fetcher_same_surface(spark, small_cfg, crawl_env,
+                                     shared_crawl):
     """S6: ChromeFetcher is the same pluggable fetch surface — with an
     injected transport (standing in for a CDP-rendered DOM) a crawl through
     it equals the SimulatedFetcher crawl; without one, the stage raises
     NotImplementedError loudly (no browser in sandbox) instead of yielding
     silent empties."""
     from crawler_spark.plans.frontier import run_crawl
-    from crawler_spark.sources.fetch import ChromeFetcher, SimulatedFetcher
-    from crawler_spark.sources.webgraph import to_spark
+    from crawler_spark.sources.fetch import ChromeFetcher
     from crawler_spark.spec import CrawlJobSpec
 
     spec = CrawlJobSpec(seeds=tuple(gen_seeds(small_cfg)), max_waves=4)
-    pages_df, robots_df = to_spark(spark, small_cfg)
     via_chrome = run_crawl(
         spark, spec, ChromeFetcher(transport=_fixture_transport(small_cfg)),
-        robots_src=robots_df)
-    via_join = run_crawl(spark, spec, SimulatedFetcher(pages_df),
-                         robots_src=robots_df)
+        robots_src=crawl_env.robots_df)
+    via_join = shared_crawl(spec)
     a = {r["url_canon"] for r in via_chrome.seen.select("url_canon").collect()}
     b = {r["url_canon"] for r in via_join.seen.select("url_canon").collect()}
     assert a == b and via_chrome.n_fetched == via_join.n_fetched
@@ -207,28 +202,24 @@ def test_smart_fetcher_routes_only_shell_pages(spark):
     assert not p3["rendered"] and p3["status"] == 404
 
 
-def test_smart_fetcher_full_crawl_equivalence(spark, small_cfg):
+def test_smart_fetcher_full_crawl_equivalence(spark, small_cfg, crawl_env,
+                                              shared_crawl):
     """A crawl through SmartFetcher over the fixture web (whose pages are
     all static => chrome pass gets zero rows) equals the SimulatedFetcher
     crawl — smart mode is a drop-in on the same fetcher surface."""
     from crawler_spark.plans.frontier import run_crawl
-    from crawler_spark.sources.fetch import (
-        ChromeFetcher, SimulatedFetcher, SmartFetcher,
-    )
-    from crawler_spark.sources.webgraph import to_spark
+    from crawler_spark.sources.fetch import ChromeFetcher, SmartFetcher
     from crawler_spark.spec import CrawlJobSpec
 
     def chrome_transport(session, url, agent, timeout_s):  # pragma: no cover
         raise AssertionError("static fixture page escalated to chrome")
 
     spec = CrawlJobSpec(seeds=tuple(gen_seeds(small_cfg)), max_waves=3)
-    pages_df, robots_df = to_spark(spark, small_cfg)
     smart = SmartFetcher(
         http=HttpFetcher(transport=_fixture_transport(small_cfg)),
         chrome=ChromeFetcher(transport=chrome_transport))
-    via_smart = run_crawl(spark, spec, smart, robots_src=robots_df)
-    via_join = run_crawl(spark, spec, SimulatedFetcher(pages_df),
-                         robots_src=robots_df)
+    via_smart = run_crawl(spark, spec, smart, robots_src=crawl_env.robots_df)
+    via_join = shared_crawl(spec)
     a = {r["url_canon"] for r in via_smart.seen.select("url_canon").collect()}
     b = {r["url_canon"] for r in via_join.seen.select("url_canon").collect()}
     assert a == b and via_smart.n_fetched == via_join.n_fetched

@@ -24,8 +24,12 @@ import os
 
 import duckdb
 import pytest
+from pyspark.sql import types as T
 
 import __spark_entry__ as entrymod
+from tools.verify_contract import (
+    canon_rows, canon_val, duckdb_type_class, spark_type_class,
+)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
 
@@ -69,3 +73,25 @@ def test_no_fetchpath_unstable_oracle_output_types(con):
     assert not offenders, (
         "oracle output columns with fetch-path-unstable types (cast them "
         f"— e.g. ::BIGINT for integer SUMs): {offenders}")
+
+
+def test_canon_val_separates_int_float_and_zero_sign():
+    """The local gate (tools/verify_contract.py) must tell apart what the
+    driver's gate does: int 0 vs float 0.0 (st7 shipped BIGINT quantiles
+    against DuckDB DOUBLE) and -0.0 vs 0.0 (g28's modularity term).
+    Spark-free: the canonicalization and the type-class maps only."""
+    assert canon_val(0) != canon_val(0.0)                 # st7
+    assert canon_val(-0.0) != canon_val(0.0)              # g28
+    assert canon_val(-0.00001) != canon_val(0.0)          # rounds to -0.0
+    assert canon_val(1.23456) == canon_val(1.23459)       # 4-place tolerance
+    assert canon_val(True) != canon_val(1)
+    assert canon_rows([(1, 0.0), (2, -0.0)], ["a", "b"]) != \
+        canon_rows([(1, 0.0), (2, 0.0)], ["a", "b"])
+    assert duckdb_type_class("DOUBLE") == "float"
+    assert duckdb_type_class("BIGINT") == duckdb_type_class("HUGEINT") \
+        == duckdb_type_class("INTEGER") == "int"
+    assert duckdb_type_class("DECIMAL(18,4)") == "decimal"
+    assert duckdb_type_class("STRUCT(a INTEGER)[]") == "list"
+    assert spark_type_class(T.LongType()) == "int"
+    assert spark_type_class(T.DoubleType()) == "float"
+    assert spark_type_class(T.DecimalType(18, 4)) == "decimal"

@@ -8,8 +8,7 @@ from pyspark.sql import functions as F
 
 from crawler_spark.operators import politeness
 from crawler_spark.plans.frontier import run_crawl
-from crawler_spark.sources.fetch import SimulatedFetcher
-from crawler_spark.sources.webgraph import gen_seeds, to_spark
+from crawler_spark.sources.webgraph import gen_seeds
 from crawler_spark.spec import CrawlJobSpec
 
 
@@ -41,11 +40,11 @@ def test_bucket_equals_window(pending, tokens):
     assert counts == {"h0": 2, "h1": 3, "h2": 4, "h3": 5, "h4": 6}
 
 
-def test_budget_never_exceeded_e2e(spark, small_cfg):
+def test_budget_never_exceeded_e2e(spark, small_cfg, crawl_env):
     spec = CrawlJobSpec(seeds=tuple(gen_seeds(small_cfg)), max_waves=20,
                         per_host_tokens=3.0, token_cap=3.0)
-    pages_df, robots_df = to_spark(spark, small_cfg)
-    run = run_crawl(spark, spec, SimulatedFetcher(pages_df), robots_src=robots_df)
+    run = run_crawl(spark, spec, crawl_env.fetcher,
+                    robots_src=crawl_env.robots_df)
     per = (run.fetch_log.groupBy("wave", "host")
            .agg(F.count("*").alias("n")).collect())
     # refill <= 3 tokens/wave, cap 3 => never more than 3 fetches/host/wave
@@ -53,12 +52,11 @@ def test_budget_never_exceeded_e2e(spark, small_cfg):
         (r["wave"], r["host"], r["n"]) for r in per if r["n"] > 3)
 
 
-def test_seen_monotone_and_idempotent_semantics(spark, small_cfg):
+def test_seen_monotone_and_idempotent_semantics(shared_crawl, small_cfg):
     """Monotonicity: every wave's fetched URLs were admitted (in seen);
     no URL fetched twice (idempotence of the anti-join dedup)."""
     spec = CrawlJobSpec(seeds=tuple(gen_seeds(small_cfg)), max_waves=20)
-    pages_df, robots_df = to_spark(spark, small_cfg)
-    run = run_crawl(spark, spec, SimulatedFetcher(pages_df), robots_src=robots_df)
+    run = shared_crawl(spec)
     fetched = run.fetch_log.select("url_canon")
     assert fetched.distinct().count() == fetched.count()
     missing = fetched.join(run.seen.select("url_canon"), "url_canon", "left_anti")

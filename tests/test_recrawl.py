@@ -18,22 +18,18 @@ import pytest
 from crawler_spark.operators.recrawl import (
     due_for_recrawl, expire_from_cuckoo, expire_seen, run_recrawl,
 )
-from crawler_spark.plans.frontier import run_crawl
 from crawler_spark.plans.tableio import SnapDirStore
 from crawler_spark.sources.fetch import SimulatedFetcher
-from crawler_spark.sources.webgraph import gen_seeds, to_spark
 from crawler_spark.spec import CrawlJobSpec
 
 
 @pytest.fixture(scope="module")
-def finished_crawl(spark, small_cfg, tmp_path_factory):
+def finished_crawl(spark, crawl_env, shared_crawl, tmp_path_factory):
     """A completed checkpointed crawl over the small fixture web."""
-    pages_df, robots_df = to_spark(spark, small_cfg)
-    fetcher = SimulatedFetcher(pages_df)
+    fetcher, robots_df, seeds = crawl_env
     d = str(tmp_path_factory.mktemp("recrawl") / "snap")
-    spec = CrawlJobSpec(seeds=tuple(gen_seeds(small_cfg)), max_waves=20,
-                        checkpoint_dir=d)
-    run = run_crawl(spark, spec, fetcher, robots_src=robots_df)
+    spec = CrawlJobSpec(seeds=seeds, max_waves=20, checkpoint_dir=d)
+    run = shared_crawl(spec)
     assert run.n_waves >= 4
     return spark, spec, fetcher, robots_df, SnapDirStore(spark, d), run
 
@@ -91,17 +87,16 @@ def test_recrawl_refetches_exactly_due(finished_crawl):
     assert not (retained & refetched)
 
 
-def test_recrawl_refuses_incomplete_store(spark, small_cfg, tmp_path):
+def test_recrawl_refuses_incomplete_store(spark, crawl_env, shared_crawl,
+                                          tmp_path):
     """The COMPLETED-crawl precondition is enforced, not just documented: a
     store killed mid-crawl (pending frontier rows at its latest wave) would
     silently treat never-fetched URLs as nonexistent — neither due nor
     crawled — so run_recrawl must refuse it."""
-    pages_df, robots_df = to_spark(spark, small_cfg)
-    fetcher = SimulatedFetcher(pages_df)
+    fetcher, robots_df, seeds = crawl_env
     d = str(tmp_path / "killed")
-    spec = CrawlJobSpec(seeds=tuple(gen_seeds(small_cfg)), max_waves=2,
-                        checkpoint_dir=d)
-    run = run_crawl(spark, spec, fetcher, robots_src=robots_df)
+    spec = CrawlJobSpec(seeds=seeds, max_waves=2, checkpoint_dir=d)
+    run = shared_crawl(spec)
     assert run.frontier.count() > 0, "fixture kill must leave pending URLs"
     store = SnapDirStore(spark, d)
     rspec = dataclasses.replace(spec, checkpoint_dir="", max_depth=0)
@@ -247,7 +242,6 @@ def test_recrawl_adaptive_ttl_by_host(finished_crawl):
     rest stay on a default too large to fire."""
     import dataclasses as _dc
     from pyspark.sql import functions as F
-    from crawler_spark.functions.canon import host_col
     from crawler_spark.operators.recrawl import run_recrawl as _rr
 
     spark, spec, fetcher, robots_df, store, run = finished_crawl
@@ -270,17 +264,16 @@ def test_recrawl_adaptive_ttl_by_host(finished_crawl):
     assert refetched == expected
 
 
-def test_budget_completed_crawl_is_recrawlable(spark, small_cfg,
+def test_budget_completed_crawl_is_recrawlable(spark, crawl_env, shared_crawl,
                                                tmp_path_factory):
     """Regression: a max_pages-capped crawl ends with pending frontier rows
     AND a job-end metrics row; resuming cannot drain it by design, so
     run_recrawl must accept it and refresh exactly the fetched set."""
-    pages_df, robots_df = to_spark(spark, small_cfg)
-    fetcher = SimulatedFetcher(pages_df)
+    fetcher, robots_df, seeds = crawl_env
     d = str(tmp_path_factory.mktemp("caprecrawl") / "snap")
-    spec = CrawlJobSpec(seeds=tuple(gen_seeds(small_cfg)), max_waves=20,
-                        max_pages=5, checkpoint_dir=d)
-    run = run_crawl(spark, spec, fetcher, robots_src=robots_df)
+    spec = CrawlJobSpec(seeds=seeds, max_waves=20, max_pages=5,
+                        checkpoint_dir=d)
+    run = shared_crawl(spec)
     store = SnapDirStore(spark, d)
     assert store.read_full("frontier", store.latest_wave()).count() > 0
     fetched = {r["url_canon"] for r in run.fetch_log.collect()}

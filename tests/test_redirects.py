@@ -5,12 +5,10 @@ doubling, 16-hop cap); the oracle chases the same chains in Python."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from crawler_spark.sources.fetch import SimulatedFetcher
 from crawler_spark.sources.webgraph import (
     WebGraphConfig, gen_pages, gen_robots_src, gen_seeds, page_location,
-    page_status, to_spark,
+    page_status,
 )
 from crawler_spark.spec import CrawlJobSpec
 from tests.oracle import run_oracle
@@ -45,7 +43,7 @@ def test_redirect_chain_lands_on_target_body(spark):
     assert got["http://a/n1"] == (301, 0, "")   # kept as-is, empty body
 
 
-def test_fixture_has_redirects_and_crawl_matches_oracle(spark):
+def test_fixture_has_redirects_and_crawl_matches_oracle(spark, web_env):
     """The default fixture emits 301 pages; a full crawl over it must
     stay bit-equal to the oracle — seen set AND per-wave metrics —
     proving engine and oracle follow the identical chains."""
@@ -59,10 +57,9 @@ def test_fixture_has_redirects_and_crawl_matches_oracle(spark):
 
     spec = CrawlJobSpec(seeds=tuple(gen_seeds(cfg)), max_waves=20)
     oracle = run_oracle(spec, gen_pages(cfg), gen_robots_src(cfg))
-    pages_df, robots_df = to_spark(spark, cfg)
     from crawler_spark.plans.frontier import run_crawl
-    run = run_crawl(spark, spec, SimulatedFetcher(pages_df),
-                    robots_src=robots_df)
+    env = web_env(cfg)
+    run = run_crawl(spark, spec, env.fetcher, robots_src=env.robots_df)
     got_seen = {r["url_canon"] for r in
                 run.seen.select("url_canon").collect()}
     assert got_seen == oracle.seen

@@ -17,58 +17,32 @@ import pytest
 from crawler_spark.plans.frontier import run_crawl
 from crawler_spark.plans.tableio import SnapDirStore, content_fingerprint
 from crawler_spark.sources.fetch import SimulatedFetcher
-from crawler_spark.sources.webgraph import gen_seeds, to_spark
 from crawler_spark.spec import CrawlJobSpec
+from conftest import snap_fp
 
 
-def _snap_fp(spark, root: str) -> dict:
-    """Content fingerprints of the latest committed full state + all deltas.
-    `seen` reconstructs through the delta+compaction layout (read_seen)."""
-    store = SnapDirStore(spark, root)
-    last = store.latest_wave()
-    out = {"last_wave": last}
-    for t in ("frontier", "hosts"):
-        try:
-            out[t] = content_fingerprint(store.read_full(t, last))
-        except Exception:
-            out[t] = None
-    out["seen"] = content_fingerprint(store.read_seen(last))
-    for t in ("documents", "fetch_log", "metrics"):
-        df = store.read_delta_union(t, last)
-        out[t] = content_fingerprint(df) if df is not None else None
-    return out
-
-
-@pytest.fixture()
-def crawl_env(spark, small_cfg):
-    pages_df, robots_df = to_spark(spark, small_cfg)
-    fetcher = SimulatedFetcher(pages_df)
-    seeds = tuple(gen_seeds(small_cfg))
-    return fetcher, robots_df, seeds
-
-
-def test_kill_resume_bit_identical(spark, crawl_env, tmp_path):
+def test_kill_resume_bit_identical(spark, crawl_env, shared_crawl, tmp_path):
     fetcher, robots_df, seeds = crawl_env
     base = CrawlJobSpec(seeds=seeds, max_waves=20)
 
     # (a) uninterrupted reference run
     full_dir = str(tmp_path / "full")
     spec_full = dataclasses.replace(base, checkpoint_dir=full_dir)
-    run_full = run_crawl(spark, spec_full, fetcher, robots_src=robots_df)
+    run_full = shared_crawl(spec_full)
     assert run_full.n_waves >= 4, "fixture must produce a multi-wave crawl"
 
     # (b) killed after 2 waves, then resumed
     part_dir = str(tmp_path / "part")
     spec_k = dataclasses.replace(base, checkpoint_dir=part_dir, max_waves=2)
-    run_k = run_crawl(spark, spec_k, fetcher, robots_src=robots_df)
+    run_k = shared_crawl(spec_k)
     assert run_k.n_fetched < run_full.n_fetched
 
     spec_r = dataclasses.replace(base, checkpoint_dir=part_dir)
     run_r = run_crawl(spark, spec_r, fetcher, robots_src=robots_df,
                       resume=True)
 
-    fp_full = _snap_fp(spark, full_dir)
-    fp_part = _snap_fp(spark, part_dir)
+    fp_full = snap_fp(spark, full_dir)
+    fp_part = snap_fp(spark, part_dir)
     assert fp_part == fp_full, f"resumed state differs: {fp_part} vs {fp_full}"
 
     # run_r.n_fetched restores the pre-kill count (the max_pages budget needs
@@ -78,17 +52,18 @@ def test_kill_resume_bit_identical(spark, crawl_env, tmp_path):
             == run_r.seen.select("url_hash").distinct().count())
 
 
-def test_resume_is_idempotent_when_complete(spark, crawl_env, tmp_path):
+def test_resume_is_idempotent_when_complete(spark, crawl_env, shared_crawl,
+                                            tmp_path):
     """Resuming a FINISHED crawl runs zero waves and changes nothing."""
     fetcher, robots_df, seeds = crawl_env
     d = str(tmp_path / "done")
     spec = CrawlJobSpec(seeds=seeds, max_waves=20, checkpoint_dir=d)
-    first = run_crawl(spark, spec, fetcher, robots_src=robots_df)
-    before = _snap_fp(spark, d)
+    first = shared_crawl(spec)
+    before = snap_fp(spark, d)
     again = run_crawl(spark, spec, fetcher, robots_src=robots_df, resume=True)
     assert again.n_fetched == first.n_fetched    # restored count, no new fetches
     assert again.metrics == []                   # zero waves actually ran
-    assert _snap_fp(spark, d) == before
+    assert snap_fp(spark, d) == before
 
 
 def test_lifecycle_metrics_rows(spark, crawl_env, tmp_path):
@@ -97,7 +72,7 @@ def test_lifecycle_metrics_rows(spark, crawl_env, tmp_path):
     (wave=-1) and, once the frontier drains, exactly one job-end row
     (wave=JOB_END_WAVE) whose counters are the job-lifetime totals — all
     rows keyed by job_id. (Kill/resume bit-identity of these rows is
-    covered by _snap_fp, which fingerprints the metrics delta-union.)"""
+    covered by snap_fp, which fingerprints the metrics delta-union.)"""
     from crawler_spark.plans.frontier import JOB_END_WAVE
 
     fetcher, robots_df, seeds = crawl_env
@@ -139,7 +114,8 @@ def test_resume_without_checkpoint_raises(spark, crawl_env, tmp_path):
         run_crawl(spark, spec, fetcher, robots_src=robots_df, resume=True)
 
 
-def test_stop_flag_halts_and_resume_completes(spark, crawl_env, tmp_path):
+def test_stop_flag_halts_and_resume_completes(spark, crawl_env, shared_crawl,
+                                              tmp_path):
     fetcher, robots_df, seeds = crawl_env
     flag = tmp_path / "STOP"
     d = str(tmp_path / "flagged")
@@ -154,8 +130,7 @@ def test_stop_flag_halts_and_resume_completes(spark, crawl_env, tmp_path):
     # flag removed: resume from the wave -1 seed snapshot finishes the crawl
     flag.unlink()
     done = run_crawl(spark, spec, fetcher, robots_src=robots_df, resume=True)
-    ref = run_crawl(spark, dataclasses.replace(spec, checkpoint_dir=""),
-                    fetcher, robots_src=robots_df)
+    ref = shared_crawl(CrawlJobSpec(seeds=seeds, max_waves=20))
     assert done.n_fetched == ref.n_fetched
     assert done.seen.count() == ref.seen.count()
 
@@ -173,15 +148,15 @@ class _CountingFetcher:
         return self.inner.fetch(batch)
 
 
-def test_lazy_robots_cache_restored_not_refetched(spark, small_cfg, tmp_path):
+def test_lazy_robots_cache_restored_not_refetched(spark, small_cfg, crawl_env,
+                                                  tmp_path):
     """§4.3: the lazy robots cache commits with every wave; resume reloads it
     from the snapshot, so only hosts first contacted AFTER the kill get their
     robots.txt fetched — and the final state stays bit-identical."""
     from crawler_spark.plans.tableio import content_fingerprint
     from crawler_spark.sources.webgraph import to_spark_robots_pages
 
-    pages_df, _ = to_spark(spark, small_cfg)
-    seeds = tuple(gen_seeds(small_cfg))
+    fetcher, _, seeds = crawl_env
     robots_pages = to_spark_robots_pages(spark, small_cfg)
     base = CrawlJobSpec(seeds=seeds, max_waves=20)
 
@@ -189,13 +164,12 @@ def test_lazy_robots_cache_restored_not_refetched(spark, small_cfg, tmp_path):
     rf_full = _CountingFetcher(SimulatedFetcher(robots_pages))
     run_full = run_crawl(
         spark, dataclasses.replace(base, checkpoint_dir=d_full),
-        SimulatedFetcher(pages_df), robots_src=None, robots_fetcher=rf_full)
+        fetcher, robots_src=None, robots_fetcher=rf_full)
 
     d = str(tmp_path / "part")
     rf_kill = _CountingFetcher(SimulatedFetcher(robots_pages))
     run_crawl(spark, dataclasses.replace(base, checkpoint_dir=d, max_waves=2),
-              SimulatedFetcher(pages_df), robots_src=None,
-              robots_fetcher=rf_kill)
+              fetcher, robots_src=None, robots_fetcher=rf_kill)
     store = SnapDirStore(spark, d)
     k = store.latest_wave()
     assert "robots" in store.manifest(k)["tables"]
@@ -203,21 +177,22 @@ def test_lazy_robots_cache_restored_not_refetched(spark, small_cfg, tmp_path):
 
     rf_res = _CountingFetcher(SimulatedFetcher(robots_pages))
     run_r = run_crawl(spark, dataclasses.replace(base, checkpoint_dir=d),
-                      SimulatedFetcher(pages_df), robots_src=None,
-                      robots_fetcher=rf_res, resume=True)
+                      fetcher, robots_src=None, robots_fetcher=rf_res,
+                      resume=True)
 
     last = store.latest_wave()
     final_hosts = store.read_full("robots", last).count()
     assert rf_res.urls_fetched == final_hosts - cached_hosts
     assert rf_res.urls_fetched < rf_full.urls_fetched
-    assert _snap_fp(spark, d) == _snap_fp(spark, d_full)
+    assert snap_fp(spark, d) == snap_fp(spark, d_full)
     assert run_r.n_fetched == run_full.n_fetched
     assert content_fingerprint(store.read_full("robots", last)) == \
         content_fingerprint(SnapDirStore(spark, d_full)
                             .read_full("robots", last))
 
 
-def test_bloom_partitions_restored_on_resume(spark, crawl_env, tmp_path):
+def test_bloom_partitions_restored_on_resume(spark, crawl_env, shared_crawl,
+                                             tmp_path):
     """§4.3: active bloom bitsets commit as the `bloom` table; the reloaded
     filter is bit-equal to a from-scratch rebuild over `seen`, and a resumed
     run keeps committing it while staying bit-identical."""
@@ -227,8 +202,7 @@ def test_bloom_partitions_restored_on_resume(spark, crawl_env, tmp_path):
     base = CrawlJobSpec(seeds=seeds, max_waves=20, bloom_min_seen=0)
 
     d = str(tmp_path / "kill")
-    run_crawl(spark, dataclasses.replace(base, checkpoint_dir=d, max_waves=2),
-              fetcher, robots_src=robots_df)
+    shared_crawl(dataclasses.replace(base, checkpoint_dir=d, max_waves=2))
     store = SnapDirStore(spark, d)
     k = store.latest_wave()
     assert "bloom" in store.manifest(k)["tables"]
@@ -245,9 +219,8 @@ def test_bloom_partitions_restored_on_resume(spark, crawl_env, tmp_path):
     run_crawl(spark, dataclasses.replace(base, checkpoint_dir=d),
               fetcher, robots_src=robots_df, resume=True)
     d_full = str(tmp_path / "full")
-    run_crawl(spark, dataclasses.replace(base, checkpoint_dir=d_full),
-              fetcher, robots_src=robots_df)
-    assert _snap_fp(spark, d) == _snap_fp(spark, d_full)
+    shared_crawl(dataclasses.replace(base, checkpoint_dir=d_full))
+    assert snap_fp(spark, d) == snap_fp(spark, d_full)
     last = SnapDirStore(spark, d).latest_wave()
     assert content_fingerprint(
         SnapDirStore(spark, d).read_full("bloom", last)) == \
@@ -255,7 +228,8 @@ def test_bloom_partitions_restored_on_resume(spark, crawl_env, tmp_path):
             SnapDirStore(spark, d_full).read_full("bloom", last))
 
 
-def test_seen_delta_compaction_layout(spark, crawl_env, tmp_path):
+def test_seen_delta_compaction_layout(spark, crawl_env, shared_crawl,
+                                      tmp_path):
     """seen commits as per-wave deltas with a full base every K waves; the
     reconstructed table equals the full-rewrite layout's, and resume across
     a compaction boundary stays bit-identical."""
@@ -265,12 +239,12 @@ def test_seen_delta_compaction_layout(spark, crawl_env, tmp_path):
     d_delta = str(tmp_path / "delta")
     spec_d = CrawlJobSpec(seeds=seeds, max_waves=20, checkpoint_dir=d_delta,
                           seen_compact_every=2)
-    run_d = run_crawl(spark, spec_d, fetcher, robots_src=robots_df)
+    shared_crawl(spec_d)
 
     d_full = str(tmp_path / "full")
     spec_f = CrawlJobSpec(seeds=seeds, max_waves=20, checkpoint_dir=d_full,
                           seen_compact_every=0)
-    run_f = run_crawl(spark, spec_f, fetcher, robots_src=robots_df)
+    shared_crawl(spec_f)
 
     s_d, s_f = SnapDirStore(spark, d_delta), SnapDirStore(spark, d_full)
     last = s_d.latest_wave()
@@ -289,8 +263,8 @@ def test_seen_delta_compaction_layout(spark, crawl_env, tmp_path):
     d_kr = str(tmp_path / "kr")
     spec_k = CrawlJobSpec(seeds=seeds, max_waves=1, checkpoint_dir=d_kr,
                           seen_compact_every=2)
-    run_crawl(spark, spec_k, fetcher, robots_src=robots_df)
+    shared_crawl(spec_k)
     spec_r = CrawlJobSpec(seeds=seeds, max_waves=20, checkpoint_dir=d_kr,
                           seen_compact_every=2)
     run_crawl(spark, spec_r, fetcher, robots_src=robots_df, resume=True)
-    assert _snap_fp(spark, d_kr) == _snap_fp(spark, d_delta)
+    assert snap_fp(spark, d_kr) == snap_fp(spark, d_delta)

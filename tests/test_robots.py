@@ -108,14 +108,14 @@ def test_product_token_extraction_case_insensitive():
                         "my")[1] == ["/s"]
 
 
-def test_e2e_crawl_with_named_agent_matches_oracle(spark, small_cfg):
+def test_e2e_crawl_with_named_agent_matches_oracle(spark, small_cfg,
+                                                   crawl_env):
     """Engine == oracle when a named agent selects per-host named groups
     that DIFFER from the * group (some hosts deny the named bot harder,
     some carve it an allow-back)."""
     from crawler_spark.plans.frontier import run_crawl
-    from crawler_spark.sources.fetch import SimulatedFetcher
     from crawler_spark.sources.webgraph import (
-        gen_pages, gen_robots_src, gen_seeds, to_spark,
+        gen_pages, gen_robots_src, gen_seeds,
     )
     from crawler_spark.spec import CrawlJobSpec
     from tests.oracle import run_oracle
@@ -135,8 +135,7 @@ def test_e2e_crawl_with_named_agent_matches_oracle(spark, small_cfg):
     spec = CrawlJobSpec(seeds=gen_seeds(small_cfg), max_depth=3,
                         agent="TestBot/1.0", respect_robots_txt=True)
     want = run_oracle(spec, gen_pages(small_cfg), robots_src)
-    pages_df, _ = to_spark(spark, small_cfg)
-    run = run_crawl(spark, spec, SimulatedFetcher(pages_df),
+    run = run_crawl(spark, spec, crawl_env.fetcher,
                     robots_src=spark.createDataFrame(robots_src))
     got = {r.url_canon for r in run.seen.select("url_canon").collect()}
     assert got == want.seen

@@ -9,11 +9,10 @@ seen set must equal the oracle's. Without the flag, sitemaps are ignored.
 from __future__ import annotations
 
 from crawler_spark.plans.frontier import run_crawl
-from crawler_spark.sources.fetch import SimulatedFetcher
 from crawler_spark.sources.sitemap import parse_sitemap
 from crawler_spark.sources.webgraph import (
     gen_pages, gen_robots_src, gen_seeds, gen_sitemaps_src, sitemap_body,
-    to_spark, to_spark_sitemaps,
+    to_spark_sitemaps,
 )
 from crawler_spark.spec import CrawlJobSpec
 from tests.oracle import run_oracle
@@ -37,20 +36,19 @@ def test_parse_sitemap_golden():
     assert parse_sitemap("<urlset></urlset>") == []
 
 
-def _run_both(spark, cfg, spec):
+def _run_both(spark, web_env, cfg, spec):
     oracle = run_oracle(spec, gen_pages(cfg), gen_robots_src(cfg),
                         sitemaps=gen_sitemaps_src(cfg))
-    pages_df, robots_df = to_spark(spark, cfg)
-    run = run_crawl(spark, spec, SimulatedFetcher(pages_df),
-                    robots_src=robots_df,
+    env = web_env(cfg)
+    run = run_crawl(spark, spec, env.fetcher, robots_src=env.robots_df,
                     sitemap_src=to_spark_sitemaps(spark, cfg))
     return oracle, run
 
 
-def test_sitemap_crawl_matches_oracle(spark, small_cfg):
+def test_sitemap_crawl_matches_oracle(spark, web_env, small_cfg):
     spec = CrawlJobSpec(seeds=tuple(gen_seeds(small_cfg)), max_waves=20,
                         sitemap=True)
-    oracle, run = _run_both(spark, small_cfg, spec)
+    oracle, run = _run_both(spark, web_env, small_cfg, spec)
     got_seen = {r["url_canon"] for r in run.seen.select("url_canon").collect()}
     assert got_seen == oracle.seen
     e_metrics = [(m["wave"], m["fetched"], m["new_links"]) for m in run.metrics]
@@ -132,7 +130,7 @@ def test_expand_sitemaps_df_recurses_index(spark, small_cfg):
     assert got == want and got
 
 
-def test_alt_roots_discovered_only_via_robots(spark, small_cfg):
+def test_alt_roots_discovered_only_via_robots(spark, web_env, small_cfg):
     """Alt-rooted hosts publish no well-known sitemap.xml; their sitemap
     pages (incl. link-orphans) must still reach the crawl because the
     robots.txt Sitemap: directive names the root — pinned by checking an
@@ -152,7 +150,7 @@ def test_alt_roots_discovered_only_via_robots(spark, small_cfg):
     h = alt[0]
     spec = CrawlJobSpec(seeds=(page_url(h, 0),), max_waves=20,
                         sitemap=True)
-    oracle, run = _run_both(spark, small_cfg, spec)
+    oracle, run = _run_both(spark, web_env, small_cfg, spec)
     got_seen = {r["url_canon"] for r in
                 run.seen.select("url_canon").collect()}
     assert got_seen == oracle.seen

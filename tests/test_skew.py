@@ -65,7 +65,7 @@ def test_salted_prune_bounds_hot_group(spark):
     assert missing.count() == 0
 
 
-def test_skew_guard_is_default_on(spark, small_cfg, monkeypatch):
+def test_skew_guard_is_default_on(spark, crawl_env, monkeypatch):
     """The salted pre-prune is the wave loop's only selection path — a Zipf
     head host must not land its whole pending set in one window task under
     a default-config crawl. A default crawl selects through
@@ -73,10 +73,9 @@ def test_skew_guard_is_default_on(spark, small_cfg, monkeypatch):
     groups. (The e2e suite runs default specs, so oracle equality under the
     guard is continuously re-proven.)"""
     from crawler_spark.plans.frontier import run_crawl
-    from crawler_spark.sources.fetch import SimulatedFetcher
-    from crawler_spark.sources.webgraph import gen_seeds, to_spark
     from crawler_spark.spec import CrawlJobSpec
 
+    fetcher, robots_df, seeds = crawl_env
     calls = []
     salted = politeness.select_batch_salted
 
@@ -85,9 +84,8 @@ def test_skew_guard_is_default_on(spark, small_cfg, monkeypatch):
         return salted(*args, **kwargs)
 
     monkeypatch.setattr(politeness, "select_batch_salted", counting)
-    pages_df, robots_df = to_spark(spark, small_cfg)
-    run = run_crawl(spark, CrawlJobSpec(seeds=tuple(gen_seeds(small_cfg))),
-                    SimulatedFetcher(pages_df), robots_src=robots_df)
+    run = run_crawl(spark, CrawlJobSpec(seeds=seeds), fetcher,
+                    robots_src=robots_df)
     assert run.n_waves > 0
     assert len(calls) == run.n_waves
     assert all(c == ((), {}) for c in calls)     # default salt every wave

@@ -10,7 +10,6 @@ from __future__ import annotations
 
 import uuid
 
-import pytest
 from pyspark.sql import functions as F
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -88,19 +87,16 @@ def test_stream_dedup_matches_batch_keys(spark):
     assert got_keys == want_keys
 
 
-def test_scan_stream_tails_crawl_output(spark, small_cfg, tmp_path):
+def test_scan_stream_tails_crawl_output(spark, crawl_env, tmp_path):
     from crawler_spark.plans.frontier import run_crawl
-    from crawler_spark.sources.fetch import SimulatedFetcher
-    from crawler_spark.sources.webgraph import gen_seeds, to_spark
     from crawler_spark.spec import CrawlJobSpec
     from crawler_spark.streaming.scan_stream import (
         stream_documents, wave_doc_counts,
     )
     out = str(tmp_path / "docs")
-    pages_df, robots_df = to_spark(spark, small_cfg)
-    spec = CrawlJobSpec(seeds=tuple(gen_seeds(small_cfg)), max_waves=3)
-    run = run_crawl(spark, spec, SimulatedFetcher(pages_df),
-                    robots_src=robots_df,
+    fetcher, robots_df, seeds = crawl_env
+    spec = CrawlJobSpec(seeds=seeds, max_waves=3)
+    run = run_crawl(spark, spec, fetcher, robots_src=robots_df,
                     sink=lambda w, d: d.write.mode("append").parquet(out))
     name = _run_to_table(wave_doc_counts(stream_documents(spark, out)),
                          "complete")
@@ -109,22 +105,19 @@ def test_scan_stream_tails_crawl_output(spark, small_cfg, tmp_path):
     assert got == {w: n for w, n in want.items() if n > 0}
 
 
-def test_stateful_host_totals_accumulate_across_batches(spark, small_cfg, tmp_path):
+def test_stateful_host_totals_accumulate_across_batches(spark, crawl_env, tmp_path):
     """applyInPandasWithState: per-host GroupState accumulates across
     micro-batches (maxFilesPerTrigger=1 => one batch per wave commit); the
     final emitted totals per host equal the batch-mode aggregation."""
     from crawler_spark.plans.frontier import run_crawl
-    from crawler_spark.sources.fetch import SimulatedFetcher
-    from crawler_spark.sources.webgraph import gen_seeds, to_spark
     from crawler_spark.spec import CrawlJobSpec
     from crawler_spark.streaming.scan_stream import stream_documents
     from crawler_spark.streaming.stateful import host_running_totals
 
     out = str(tmp_path / "docs")
-    pages_df, robots_df = to_spark(spark, small_cfg)
-    spec = CrawlJobSpec(seeds=tuple(gen_seeds(small_cfg)), max_waves=4)
-    run = run_crawl(spark, spec, SimulatedFetcher(pages_df),
-                    robots_src=robots_df,
+    fetcher, robots_df, seeds = crawl_env
+    spec = CrawlJobSpec(seeds=seeds, max_waves=4)
+    run = run_crawl(spark, spec, fetcher, robots_src=robots_df,
                     sink=lambda w, d: d.write.mode("append").parquet(out))
     assert run.n_waves >= 3        # need multiple micro-batches for state
 

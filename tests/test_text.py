@@ -236,3 +236,23 @@ def test_char_entropy_known_values(spark):
     assert out[2]["entropy"] == want
     assert out[3]["entropy"] == round(math.log(4.0), 4)
     assert out[3]["n_chars"] == 4
+
+
+def test_a18_mcnemar_null_when_detectors_never_disagree(spark, tmp_path):
+    """a18 divides by the discordant-pair count n10 + n01. Where both
+    detectors are right on every row it is 0, and both engines must
+    return NULL (Spark's ANSI division would raise)."""
+    import duckdb
+
+    import crawler_spark.queries as Q
+    docs = f"{tmp_path}/documents.parquet"
+    spark.createDataFrame([(1, "de", "zzz qqq"), (2, "fr", "vvv www")],
+                          "doc_id long, lang string, text string") \
+        .write.parquet(docs)
+    got = Q.queries()["a18_mcnemar"](spark, str(tmp_path)).collect()
+    con = duckdb.connect()
+    con.execute("CREATE VIEW documents AS SELECT * FROM "
+                f"read_parquet('{docs}/*.parquet')")     # Spark wrote a dir
+    want = con.execute(Q.oracle_sql()["a18_mcnemar"]).fetchall()
+    assert [tuple(r)[3:] for r in got] == [r[3:] for r in want] \
+        == [(0, 0, None)]

@@ -541,16 +541,6 @@ CHECKS = {
     "w7_waterfill_budget": (["BroadcastNestedLoopJoin", "HashAggregate"],
                             ["BatchEvalPython", "ArrowEvalPython",
                              "CartesianProduct", "SortMergeJoin"]),
-    # pack-family checksum probe: px3's two-phase pack reduced to ONE
-    # all-BIGINT row by a final partial+final agg; same plan bans as px3
-    "px3a_pack_checksum": (["Window", "BroadcastHashJoin",
-                            "HashAggregate"],
-                           ["BatchEvalPython", "ArrowEvalPython",
-                            "CartesianProduct"]),
-    # naive-window probe: the single-task global window IS the point
-    # (diagnostic twin, not a production shape) — only ban Python
-    "px3c_pack_naive_window": (["Window"],
-                               ["BatchEvalPython", "ArrowEvalPython"]),
     # Brier decomposition: bucket-cardinality rollup (partial+final) +
     # broadcast 1-row scalar; <=10-row fold — no corpus-wide join/sort
     "a13_brier_decomposition": (["HashAggregate", "partial_count"],
@@ -586,9 +576,9 @@ CHECKS = {
     "tx31_kneser_ney": (["HashAggregate", "partial_count"],
                         ["BatchEvalPython", "ArrowEvalPython",
                          "CartesianProduct"]),
-    # SCC: final fragment past the iterative checkpoints — label join +
-    # size rollup at host cardinality; no Python, no cartesian anywhere
-    "g33_scc_decomposition": (["HashAggregate"],
+    # SCC: the labels are checkpointed inside the constraint-propagation
+    # guard, so the returned plan is one RDD scan; no Python, no cartesian
+    "g33_scc_decomposition": (["Scan ExistingRDD"],
                               ["BatchEvalPython", "ArrowEvalPython",
                                "CartesianProduct"]),
     # substring runs: window-hash shuffle w/ partial aggs; the per-doc
@@ -620,9 +610,9 @@ CHECKS = {
     "st14_session_gap_histogram": (["Window", "HashAggregate"],
                                    ["BatchEvalPython", "ArrowEvalPython",
                                     "SortMergeJoin"]),
-    # condensation levels: final fragment past the relaxation loop's
-    # checkpoints — label coalesce at component cardinality, no Python
-    "g35_condensation_levels": (["Project"],
+    # condensation levels: checkpointed inside the constraint-propagation
+    # guard like g33 — one RDD scan, no Python
+    "g35_condensation_levels": (["Scan ExistingRDD"],
                                 ["BatchEvalPython", "ArrowEvalPython",
                                  "CartesianProduct"]),
     # recall curve: keyed windows over probed rows (the broadcast scoring

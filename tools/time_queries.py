@@ -16,13 +16,7 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
-
-def cpu_probe() -> float:
-    t0 = time.perf_counter()
-    s = 0
-    for i in range(20_000_000):
-        s += i & 1023
-    return round(time.perf_counter() - t0, 3)
+from tools.scaling_bench import cpu_probe  # noqa: E402
 
 
 def main() -> None:

@@ -1,6 +1,8 @@
 """Local replica of the driver's correctness gate: run every queries() entry
 on Spark AND its oracle_sql() twin on DuckDB at sf0.01; compare row count,
-column names, and order-insensitive canonical values.
+column names, each column's type class (Spark schema vs DuckDB DESCRIBE),
+and order-insensitive canonical values that keep int apart from float and
+-0.0 apart from 0.0.
 
 Usage: python tools/verify_contract.py [--sf /root/testdata/sf0.01] [--only name[,name2,...]]
                                        [--json out.json]
@@ -14,6 +16,7 @@ limit) does not reach.
 from __future__ import annotations
 
 import argparse
+import math
 import sys
 import time
 from pathlib import Path
@@ -25,18 +28,61 @@ TABLES = ("region nation customer supplier part orders lineitem events "
 
 
 def canon_val(v):
+    """Order-insensitive canonical form of one value. Numbers carry a type
+    tag, so 0 (int) != 0.0 (float), and a float keeps its sign bit, so
+    -0.0 != 0.0: the driver's gate tells both pairs apart."""
     import decimal
     if hasattr(v, "asDict"):  # pyspark Row (tuple subclass) — check first
         return canon_val(v.asDict(recursive=True))
+    if isinstance(v, bool):
+        return ("bool", v)
+    if isinstance(v, int):
+        return ("int", v)
     if isinstance(v, decimal.Decimal):
         v = float(v)
     if isinstance(v, float):
-        return round(v, 4)
+        if math.isnan(v):
+            return ("nan",)
+        r = round(v, 4)
+        return ("float", r, math.copysign(1.0, r) < 0)
     if isinstance(v, dict):
         return tuple(sorted((k, canon_val(x)) for k, x in v.items()))
     if isinstance(v, (list, tuple)):
         return tuple(canon_val(x) for x in v)
     return v
+
+
+def spark_type_class(t) -> str:
+    """Coarse class of a Spark DataType (int/float/decimal/string/...)."""
+    from pyspark.sql import types as T
+    for cls, name in ((T.BooleanType, "bool"), (T.IntegralType, "int"),
+                      (T.DecimalType, "decimal"), (T.FractionalType, "float"),
+                      (T.StringType, "string"), (T.BinaryType, "binary"),
+                      (T.DateType, "date"),
+                      ((T.TimestampType, T.TimestampNTZType), "timestamp"),
+                      (T.ArrayType, "list"), (T.StructType, "struct"),
+                      (T.MapType, "map")):
+        if isinstance(t, cls):
+            return name
+    return type(t).__name__
+
+
+def duckdb_type_class(t: str) -> str:
+    """Coarse class of a DuckDB DESCRIBE column_type string."""
+    t = t.upper()
+    if t.endswith("]"):
+        return "list"
+    for prefix, name in (("STRUCT", "struct"), ("MAP", "map"),
+                         ("DECIMAL", "decimal"), ("TIMESTAMP", "timestamp"),
+                         ("BOOL", "bool"), ("DATE", "date"),
+                         ("BLOB", "binary"), ("VARCHAR", "string")):
+        if t.startswith(prefix):
+            return name
+    if t in ("FLOAT", "DOUBLE", "REAL"):
+        return "float"
+    if t.endswith(("INT", "INTEGER")):
+        return "int"
+    return t
 
 
 def canon_rows(rows, cols):
@@ -74,6 +120,8 @@ def main():
         try:
             sdf = fn(spark, args.sf)
             s_cols = sdf.columns
+            s_types = {f.name: spark_type_class(f.dataType)
+                       for f in sdf.schema.fields}
             s_rows = sdf.collect()
         except Exception as e:
             failures.append(name)
@@ -97,6 +145,8 @@ def main():
             res = con.execute(oracles[name])
             d_cols = [d[0] for d in res.description]
             d_rows = res.fetchall()
+            d_types = {r[0]: duckdb_type_class(r[1]) for r in con.execute(
+                f"DESCRIBE SELECT * FROM ({oracles[name]}) q").fetchall()}
         except Exception as e:
             failures.append(name)
             report[name] = {"rows_match": None, "schema_match": None,
@@ -111,6 +161,11 @@ def main():
         hash_ok = None
         if not schema_ok:
             problems.append(f"schema {sorted(s_cols)} != {sorted(d_cols)}")
+        elif s_types != d_types:
+            schema_ok = False
+            problems.append("types " + ", ".join(
+                f"{c}: spark {s_types[c]} != duckdb {d_types[c]}"
+                for c in sorted(s_cols) if s_types[c] != d_types[c]))
         if not rows_ok:
             problems.append(f"rowcount {len(s_rows)} != {len(d_rows)}")
         if not problems:
