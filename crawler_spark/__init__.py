@@ -7,7 +7,10 @@ see SURVEY.md) as a wave-based DataFrame engine:
 - frontier / seen / robots / hosts / documents / metrics tables
   (Parquet "snapdir" snapshots with manifests; Iceberg-ready TableIO),
 - xxhash64 URL-seen dedup with a partitioned Bloom prefilter,
-- per-host politeness token buckets via groupBy(host).applyInPandas,
+- per-host politeness token buckets, selected by a salted pre-prune and a
+  per-host window rank,
+- native admission filters: scope, asset/blacklist and a longest-match
+  robots gate, all Catalyst expressions,
 - vectorized pandas/Arrow fetch-and-parse UDFs emitting interleaved
   text+media span arrays,
 - BFS wave loop (each wave = one DataFrame job) with frontier-drain and

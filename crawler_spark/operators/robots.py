@@ -13,17 +13,16 @@ Google/RFC 9309 subset relevant to allow/deny gating:
   * longest-match wins between Allow and Disallow prefixes; tie -> Allow,
   * empty Disallow value = allow all; `Crawl-delay` captured in ms.
 
-The pure parser/matcher is shared with tests/oracle.py; the engine applies
-it as a vectorized pandas UDF over a frontier LEFT JOIN robots (host).
+The pure parser/matcher is shared with tests/oracle.py; the engine gates
+with the same longest-match rule as one Catalyst expression over a frontier
+LEFT JOIN robots (host), with no Python evaluation.
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.types import (
-    ArrayType, BooleanType, IntegerType, LongType, StringType, StructField,
-    StructType,
+    ArrayType, IntegerType, LongType, StringType, StructField, StructType,
 )
 
 ROBOTS_SCHEMA = StructType([
@@ -164,24 +163,6 @@ def path_of(url_canon: str) -> str:
     return rest[i:] if i >= 0 else "/"
 
 
-@F.pandas_udf(BooleanType())
-def robots_allowed_udf(path: pd.Series, allow: pd.Series, deny: pd.Series) -> pd.Series:
-    """Vectorized longest-match gate. Null rule arrays (no robots row after
-    the left join) mean 'allow' — absent robots.txt permits everything."""
-    out = []
-    for p, a, d in zip(path, allow, deny):
-        if a is None and d is None:
-            out.append(True)
-        else:
-            # no `x or []`: Arrow hands rule lists over as numpy arrays,
-            # whose truth value is ambiguous past one element
-            out.append(robots_allowed(
-                p or "/",
-                [] if a is None else list(a),
-                [] if d is None else list(d)))
-    return pd.Series(out, dtype="bool")
-
-
 def build_robots_table(robots_src: DataFrame, fetched_wave: int = 0,
                        agent: str = "") -> DataFrame:
     """Compile raw robots bodies -> rule table (host, allow, deny, delay).
@@ -233,23 +214,50 @@ def fetch_robots_rules(fetcher, hosts_df: DataFrame, wave: int,
     return build_robots_table(bodies, fetched_wave=wave, agent=agent)
 
 
+def _match_len_col(path: Column, rules: Column) -> Column:
+    r"""_match_len as a Catalyst expression: the longest rule in `rules` that
+    matches `path`, -1 if none or if `rules` is null (no robots row).
+
+    A rule holding `*` or ending in `$` is matched as an anchored Java regex
+    whose literal runs are `\Q...\E`-quoted: drop the trailing `$`, splice
+    each literal `\E` as `\E\\E\Q`, then turn each `*` into `\E.*\Q`.
+    Every other rule is a plain prefix."""
+    def hit(p: Column) -> Column:
+        anchored = p.endswith("$")
+        body = F.when(anchored, p.substr(F.lit(1), F.length(p) - 1)) \
+                .otherwise(p)
+        body = F.replace(body, F.lit(r"\E"), F.lit(r"\E\\E\Q"))
+        body = F.replace(body, F.lit("*"), F.lit(r"\E.*\Q"))
+        regex = F.concat(F.lit(r"^\Q"), body, F.lit(r"\E"),
+                         F.when(anchored, F.lit("$")).otherwise(F.lit("")))
+        return F.when(p.contains("*") | anchored, F.regexp_like(path, regex)) \
+                .otherwise(path.startswith(p))
+
+    longest = F.aggregate(
+        rules, F.lit(-1),
+        lambda acc, p: F.greatest(acc, F.when(hit(p), F.length(p))
+                                       .otherwise(F.lit(-1))))
+    return F.coalesce(longest, F.lit(-1))
+
+
 def gate_frontier(frontier: DataFrame, robots: DataFrame) -> DataFrame:
-    """frontier LEFT JOIN robots ON host -> keep allowed rows (J2 + F5).
+    """frontier LEFT JOIN robots ON host -> the allowed rows, in the
+    frontier's column order (J2 + F5).
 
     The robots side is tiny relative to the frontier (one row per host), so
-    it is explicitly broadcast — no shuffle of the frontier.
-    Adds/uses a `path` column derived natively (stays in codegen).
+    it is explicitly broadcast — no shuffle of the frontier. The gate is
+    robots_allowed (longest match, tie -> allow) as native expressions; a
+    host with no robots row is allowed, like an absent robots.txt.
     """
     r = robots.select("host", "allow_prefixes", "deny_prefixes")
-    joined = frontier.withColumn(
-        "path", F.regexp_replace(F.col("url_canon"), r"^[a-z]+://[^/]*", "")
-    ).withColumn("path", F.when(F.col("path") == "", "/").otherwise(F.col("path")))
-    joined = joined.join(F.broadcast(r), "host", "left_outer")
-    gated = joined.withColumn(
-        "robots_ok",
-        robots_allowed_udf("path", "allow_prefixes", "deny_prefixes"),
-    )
-    return gated.drop("allow_prefixes", "deny_prefixes", "path")
+    path = F.regexp_replace(F.col("url_canon"), r"^[a-z]+://[^/]*", "")
+    joined = (frontier
+              .withColumn("path", F.when(path == "", "/").otherwise(path))
+              .join(F.broadcast(r), "host", "left_outer"))
+    return (joined
+            .where(_match_len_col(F.col("path"), F.col("allow_prefixes"))
+                   >= _match_len_col(F.col("path"), F.col("deny_prefixes")))
+            .select(*frontier.columns))
 
 
 def meta_robots_flags(directive: Column) -> Column:

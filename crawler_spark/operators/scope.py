@@ -7,15 +7,16 @@ Cargo.toml:43); scheme/asset validation lives in spider's link filter.
 Each filter exists twice, by design:
   * a pure-Python predicate — the oracle's (tests/oracle.py) semantics,
   * a native Spark Column builder — stays inside whole-stage codegen, no UDF.
-The pytest e2e equality between oracle and engine is what proves the two
-formulations agree.
+Scope additionally has a broadcast semi-join form for bulk exact-host seed
+sets (scope_filter). No Python runs on the Spark side of any filter. The
+pytest equality between oracle and engine is what proves the formulations
+agree.
 """
 
 from __future__ import annotations
 
 import re
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
 
 # extensions never enqueued (media is *captured as spans*, not crawled — F8)
@@ -90,8 +91,8 @@ def blacklist_col(url_canon: Column, patterns: tuple[str, ...]) -> Column:
     return cond
 
 
-# Above this seed count the scope predicate switches from an expression to a
-# broadcast semi-join/set: an In() literal list is one expression CHILD per
+# Above this seed count exact-host scope switches from an expression to a
+# broadcast semi-join: an In() literal list is one expression CHILD per
 # seed, and Catalyst re-walks that tree through every optimizer rule — at
 # 10k seeds that measured 8-10s of *serial driver planning* per admission
 # plan (see BENCH/BASELINE.md round 3), and a 10^6-seed crawl could not hold
@@ -99,57 +100,31 @@ def blacklist_col(url_canon: Column, patterns: tuple[str, ...]) -> Column:
 SCOPE_JOIN_MIN_HOSTS = 64
 
 
-def _scope_ok_set(host: str, seeds: frozenset, keys: frozenset,
-                  subdomains: bool, tld: bool) -> bool:
-    """scope_ok with set lookups instead of per-seed scans: O(labels) per
-    host, independent of seed count. Property-tested equal to scope_ok."""
-    if host in seeds:
-        return True
-    if subdomains:
-        i = host.find(".")
-        while i != -1:
-            if host[i + 1:] in seeds:
-                return True
-            i = host.find(".", i + 1)
-    return tld and tld_key(host) in keys
-
-
 def scope_filter(df: DataFrame, host: Column, seed_hosts: list[str],
                  subdomains: bool, tld: bool) -> DataFrame:
-    """F2/F3/F4 admission over a DataFrame — picks the physical strategy by
-    seed-set size; all three paths implement exactly scope_ok's semantics
-    (tests/test_scope.py proves four-way equality on a generated corpus).
+    """F2/F3/F4 admission over a DataFrame — two physical strategies, both
+    exactly scope_ok's semantics (tests/test_scope.py checks each against
+    it on a generated corpus):
 
-    * small seed set: the scope_col expression — whole-stage codegen, zero
-      extra plan nodes (the common hand-seeded crawl).
-    * large, exact-host scope (the bulk-seeded production shape): broadcast
-      LEFT SEMI join against a seed-host dim. O(1) literals in the plan, one
-      JVM hash probe per row, preserves row multiplicity (n_refs counting
-      upstream of A2 needs duplicates kept).
-    * large + subdomains/tld: the match key is not a single column (any
-      dot-suffix may hit), so the seed set ships as a broadcast variable to
-      an Arrow-vectorized predicate — O(labels) set lookups per row, no
-      join, no plan growth. Off the hot path (wide-scope bulk crawls are
-      rare); documented trade: Python eval instead of codegen.
+    * the scope_col expression — whole-stage codegen, zero extra plan
+      nodes, no extra Spark job (the hand-seeded crawl; perfbench's 24
+      seed hosts). Up to SCOPE_JOIN_MIN_HOSTS seeds it is always the plan:
+      a semi-join there would cost one more Spark job per admission.
+    * more seeds with exact-host scope (the bulk-seeded production shape,
+      bench.py's 2k-10k seeds): broadcast LEFT SEMI join against a
+      seed-host dim. O(1) literals in the plan, one JVM hash probe per
+      row, preserves row multiplicity (n_refs counting upstream of A2
+      needs duplicates kept).
+
+    More seeds with `subdomains` or `tld` also plan the expression, paying
+    its per-seed planning cost; no caller, test crawl or benchmark
+    workload has that shape.
     """
-    if len(seed_hosts) <= SCOPE_JOIN_MIN_HOSTS:
+    if len(seed_hosts) <= SCOPE_JOIN_MIN_HOSTS or subdomains or tld:
         return df.where(scope_col(host, seed_hosts, subdomains, tld))
-    spark = df.sparkSession
-    if not subdomains and not tld:
-        dim = spark.createDataFrame([(h,) for h in sorted(set(seed_hosts))],
-                                    "_seed_host string")
-        return df.join(F.broadcast(dim), host == dim["_seed_host"],
-                       "left_semi")
-    seeds = frozenset(seed_hosts)
-    keys = frozenset(tld_key(h) for h in seed_hosts) if tld else frozenset()
-    bc = spark.sparkContext.broadcast((seeds, keys))
-
-    @F.pandas_udf("boolean")
-    def _ok(h: pd.Series) -> pd.Series:
-        s, k = bc.value
-        return h.map(lambda x: _scope_ok_set(x, s, k, subdomains, tld))
-
-    return df.where(_ok(host))
+    dim = df.sparkSession.createDataFrame(
+        [(h,) for h in sorted(set(seed_hosts))], "_seed_host string")
+    return df.join(F.broadcast(dim), host == dim["_seed_host"], "left_semi")
 
 
 def trap_signals(path: Column) -> Column:

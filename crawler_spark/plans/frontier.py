@@ -7,9 +7,9 @@ Mirror of the reference's drain-and-refill crawl loop
       frontier(pending) ── refill tokens ── salted pre-prune + per-host
         window rank vs tokens (W2/J5) ── global budget top-k (W3)
       selected ── fetch join / UDF (S5) ── mapInPandas span parse (P2)
-      200-pages ── explode link spans ── scope/asset/blacklist filters (F2-F8)
-        ── robots gate (F5/J2) ── wave dedup (A2) ── bloom probe + exact
-        anti-join vs seen (F1/J1) ── admit to frontier wave W+1
+      200-pages ── explode link spans ── asset/blacklist/scope filters
+        (F2-F8) ── wave dedup (A2) ── bloom probe + exact anti-join vs seen
+        (F1/J1) ── robots gate (F5/J2) ── admit to frontier wave W+1
       commit {frontier, seen, hosts, robots, bloom} full + {documents,
         fetch_log, metrics} delta  (atomic manifest — §4.3)
 
@@ -19,7 +19,9 @@ single-threaded oracle in tests/test_crawl_e2e.py.
 
 Each wave stage has one code path. Selection shuffles on the uniform (host,
 salt) key and then on host over the pruned rows; admission shuffles once on
-the casefold key — robots/tokens joins are broadcast, the seen anti-join is
+the casefold key — robots/tokens joins are broadcast, the robots gate and
+every admission filter are native expressions (only the Bloom probe and the
+lazy robots-rule compile run Python), the seen anti-join is
 bloom-prefiltered (once `seen` passes spec.bloom_min_seen) and AQE-planned,
 and the fetch join's page side is the only large probe (scan-pruned by the
 selected batch's hash keys at Iceberg scale).
@@ -96,10 +98,11 @@ def _admit(spark: SparkSession, cands: DataFrame, seen: DataFrame | None,
     tests/oracle.py::admit.
     """
     # Cheap JVM-codegen predicates run PRE-dedup (shrink the shuffle);
-    # the vectorized-Python robots gate runs after this function, past dedup
-    # AND the seen anti-join, so it prices only truly-new unique URLs (~5% of
-    # a wave's outlinks) instead of the full link fan-out. The per-URL predicates
-    # commute, and tests/oracle.py applies them in this same order.
+    # the robots gate (a per-rule match over the host's rule arrays) runs
+    # after this function, past dedup AND the seen anti-join, so it prices
+    # only truly-new unique URLs (~5% of a wave's outlinks) instead of the
+    # full link fan-out. The per-URL predicates commute, and tests/oracle.py
+    # applies them in this same order.
     c = (cands
          .where(F.col("url_canon") != "")
          .where(F.col("depth") <= spec.max_depth)
@@ -107,11 +110,10 @@ def _admit(spark: SparkSession, cands: DataFrame, seen: DataFrame | None,
     if spec.blacklist:
         c = c.where(~blacklist_col(F.col("url_canon"), spec.blacklist))
     c = c.withColumn("host", host_col(F.col("url_canon")))
-    # strategy dispatch: expression for hand-seeded crawls, broadcast
-    # semi-join past SCOPE_JOIN_MIN_HOSTS — a 10k-seed In() literal costs
-    # 8-10s of serial driver planning PER WAVE (round-3 event-log evidence,
-    # BENCH/BASELINE.md) and a bulk-seeded production crawl can't hold its
-    # seed list in an expression at all
+    # scope_filter plans an expression for hand-seeded crawls and a
+    # broadcast semi-join for bulk exact-host seed lists (past
+    # SCOPE_JOIN_MIN_HOSTS a 10k-seed In() literal costs 8-10s of serial
+    # driver planning PER WAVE — round-3 event-log evidence, BENCH/BASELINE.md)
     c = scope_filter(c, F.col("host"), seed_hosts, spec.subdomains, spec.tld)
     # A2: in-wave dedup on the casefold key, deterministic min representative.
     # The same aggregate counts the URL's in-wave in-degree (n_refs): the
@@ -120,20 +122,22 @@ def _admit(spark: SparkSession, cands: DataFrame, seen: DataFrame | None,
     # flat (ties broken by depth then url_canon downstream). least() keeps
     # any MORE-urgent injected priority (BFS links/seeds always carry 0.0,
     # so the BFS path is bit-unchanged; recrawl re-admission injects -age
-    # staleness priorities through here — operators/recrawl.py).
+    # staleness priorities through here — operators/recrawl.py). `host` is
+    # a function of url_canon, so riding in the struct changes no minimum.
     c = (c.withColumn("url_fold", F.lower(F.col("url_canon")))
          .groupBy("url_fold")
-         .agg(F.min(F.struct("priority", "depth", "url_canon")).alias("m"),
+         .agg(F.min(F.struct("priority", "depth", "url_canon", "host"))
+              .alias("m"),
               F.count("*").alias("n_refs"))
          .select(F.col("m.depth").alias("depth"),
                  F.col("m.url_canon").alias("url_canon"),
+                 F.col("m.host").alias("host"),
                  F.xxhash64("url_fold").alias("url_hash"),
                  F.least(F.col("m.priority"),
                          -F.col("n_refs").cast("double")).alias("priority")))
     # F1/J1: bloom prefilter + exact anti-join against seen
     if seen is not None:
         c = anti_join_seen(c, seen, bloom, spark)
-    c = c.withColumn("host", host_col(F.col("url_canon")))
     # W1 host-rank dimension: per-host boost (PageRank-scaled, [-1, 0] —
     # operators/hostrank.py) folds ADDITIVELY into the representative's
     # priority AFTER the least() above: a fractional cross-host tiebreak
@@ -205,8 +209,7 @@ def run_crawl(spark: SparkSession, spec: CrawlJobSpec, fetcher,
             c = c.localCheckpoint(eager=True)
             _ensure_robots(c, wave_no)
         if spec.respect_robots_txt and robots is not None:
-            c = (gate_frontier(c, robots)
-                 .where(F.col("robots_ok")).select(*c.columns))
+            c = gate_frontier(c, robots)
         return c
 
     def _merge_bloom(delta: DataFrame | None, full: DataFrame,

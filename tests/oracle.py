@@ -107,7 +107,7 @@ def run_oracle(spec: CrawlJobSpec, pages: pd.DataFrame,
         """Cheap pre-dedup predicates (depth/asset/blacklist/scope). The
         robots gate intentionally runs LATER — after dedup and the seen
         check — mirroring the engine's _admit order (frontier.py), which
-        prices the vectorized robots match only on novel representatives."""
+        prices the robots match only on novel representatives."""
         if depth > spec.max_depth or is_asset(url):
             return False
         if spec.blacklist and blacklisted(url, spec.blacklist):

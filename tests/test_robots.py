@@ -168,3 +168,89 @@ def test_meta_robots_directive_forms(spark):
     assert out[8] == (1, 1)
     assert out[9] == (1, 1)
     assert out[10] == (1, 1)
+
+
+# ------------------------------------------- Spark gate == pure oracle
+
+# rules exercising every matcher branch: plain prefixes, `*` mid-rule and
+# trailing, trailing `$`, `$` mid-rule (a literal), regex metacharacters,
+# literal `\E` / `\Q` / trailing backslash, non-ASCII text
+_RULES = [
+    "/", "/a", "/a/b", "/private", "/private/ok", "/tmp/*", "/*.pdf$",
+    "/a*b", "/a/*/c$", "*", "$", "/x$y", "/x$y*", "/q(1", "/r[2]", "/s.t",
+    "/u+v", "/w?x", "/m(*)", "/n[.]*$", "/p.+?*", "/e\\E", "/e\\E*",
+    "/f\\Q*\\E$", "/back\\", "/back\\*", "/é", "/日本/*", "/café$", "/ü*ß",
+    "/a/b$", "/**", "/*$",
+]
+_PATHS = [
+    "/", "/a", "/a/b", "/a/xb", "/ab", "/private/x", "/private/ok/x",
+    "/doc.pdf", "/doc.pdfx", "/doc.pdf?x=1", "/tmp/", "/tmp/z", "/a/z/c",
+    "/a/z/c/d", "/x$y", "/x$yz", "/q(1", "/q(1)", "/r[2]", "/r2", "/s.t",
+    "/sxt", "/u+v", "/uuv", "/w?x", "/wx", "/m()", "/m(z)", "/n[.]",
+    "/n[.]z", "/p.+?q", "/e\\E", "/e\\Ex", "/f\\Qa\\E", "/back\\",
+    "/back\\z", "/é", "/éa", "/日本/x", "/日本", "/café", "/cafée",
+    "/üaß", "/üß/x", "/a/b?q=1",
+]
+
+
+def test_gate_frontier_matches_oracle_on_generated_corpus(spark):
+    """gate_frontier (native longest-match) keeps exactly the rows that
+    robots_allowed(path_of(url), allow, deny) allows, for hosts with
+    random rule lists, a host with empty lists and a host with no robots
+    row at all."""
+    import random
+
+    from crawler_spark.operators.robots import ROBOTS_SCHEMA, gate_frontier
+
+    rng = random.Random(20)
+    rules = {f"h{i}.example.com": (rng.sample(_RULES, rng.randint(0, 5)),
+                                   rng.sample(_RULES, rng.randint(0, 5)))
+             for i in range(40)}
+    rules["empty.example.com"] = ([], [])
+    hosts = sorted(rules) + ["norobots.example.com"]
+    paths = _PATHS + [rng.choice(_PATHS) + rng.choice(_PATHS)[1:]
+                      for _ in range(40)]
+    rows = [(i, f"http://{h}{p}", h)
+            for i, (h, p) in enumerate((h, p) for h in hosts for p in paths)]
+    frontier = spark.createDataFrame(rows, "id long, url_canon string, "
+                                           "host string")
+    robots = spark.createDataFrame(
+        [(h, 0, a, d, 0) for h, (a, d) in rules.items()], ROBOTS_SCHEMA)
+
+    gated = gate_frontier(frontier, robots)
+    assert gated.columns == frontier.columns
+    got = sorted(r["id"] for r in gated.select("id").collect())
+    want = [i for i, url, h in rows
+            if robots_allowed(path_of(url), *rules.get(h, ([], [])))]
+    assert 0 < len(want) < len(rows)
+    assert got == want
+
+
+def test_admit_and_gate_plan_no_python(spark):
+    """With the Bloom inactive, admission (filters, scope, A2, the seen
+    anti-join) plus the robots gate plan no Python evaluation node."""
+    import io
+    from contextlib import redirect_stdout
+
+    from crawler_spark.operators.dedup import SeenBloom
+    from crawler_spark.operators.robots import ROBOTS_SCHEMA, gate_frontier
+    from crawler_spark.plans.frontier import _admit
+    from crawler_spark.spec import CrawlJobSpec
+
+    cands = spark.createDataFrame(
+        [(f"http://h{i % 3}.example.com/p{i}", 1, 0.0) for i in range(30)],
+        "url_canon string, depth int, priority double")
+    seen = spark.createDataFrame(
+        [(1, "http://h0.example.com/p0", "h0.example.com", 0)],
+        "url_hash long, url_canon string, host string, wave int")
+    robots = spark.createDataFrame(
+        [("h0.example.com", 0, ["/p1"], ["/p*$"], 0)], ROBOTS_SCHEMA)
+    spec = CrawlJobSpec(seeds=("http://h0.example.com/",))
+    hosts = ["h0.example.com", "h1.example.com"]
+    admitted = _admit(spark, cands, seen, SeenBloom(), spec, hosts, 1)
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        gate_frontier(admitted, robots).explain("formatted")
+    plan = buf.getvalue()
+    assert "BroadcastHashJoin" in plan
+    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan

@@ -64,11 +64,14 @@ def test_native_matches_pure(spark):
     assert got_b == [blacklisted(u, (r"/p1[12]$",)) for u in urls]
 
 def test_scope_filter_strategies_agree(spark):
-    """scope_filter's three physical strategies (expression / broadcast
-    semi-join / broadcast-set predicate) implement identical semantics.
-    The seed set here (100 hosts) exceeds SCOPE_JOIN_MIN_HOSTS so the join
-    and set paths are genuinely exercised; the expression path is forced by
-    slicing the seed list below the threshold for its own comparison."""
+    """scope_filter's two physical strategies (expression / broadcast
+    semi-join) implement scope_ok's semantics. The seed set here (100
+    hosts) exceeds SCOPE_JOIN_MIN_HOSTS, so exact-host scope takes the
+    semi-join and the subdomains/tld combinations take the expression.
+    No combination plans a Python node."""
+    import io
+    from contextlib import redirect_stdout
+
     from pyspark.sql import functions as F
     from crawler_spark.operators import scope as sc
 
@@ -88,15 +91,17 @@ def test_scope_filter_strategies_agree(spark):
     df = spark.createDataFrame([(h,) for h in hosts], "host string")
     seedset = set(seeds)
     for sub, tld in [(False, False), (True, False), (False, True), (True, True)]:
-        got = sorted(r["host"] for r in
-                     sc.scope_filter(df, F.col("host"), seeds, sub, tld).collect())
+        out = sc.scope_filter(df, F.col("host"), seeds, sub, tld)
+        got = sorted(r["host"] for r in out.collect())
         want = sorted(h for h in hosts if sc.scope_ok(h, seedset, sub, tld))
         assert got == want, (sub, tld)
-        # set-based predicate == reference predicate, host by host
-        keys = frozenset(sc.tld_key(s) for s in seeds)
-        for h in hosts:
-            assert sc._scope_ok_set(h, frozenset(seeds), keys, sub, tld) \
-                == sc.scope_ok(h, seedset, sub, tld), (h, sub, tld)
+        buf = io.StringIO()
+        with redirect_stdout(buf):
+            out.explain("formatted")
+        plan = buf.getvalue()
+        assert ("LeftSemi" in plan) == (not sub and not tld), (sub, tld)
+        assert "ArrowEvalPython" not in plan, (sub, tld)
+        assert "BatchEvalPython" not in plan, (sub, tld)
 
 
 def test_trap_signals_cycle_and_clean(spark):

@@ -4,12 +4,17 @@ filter/column pushdown into the parquet scan, broadcast joins for small
 dims, whole-stage codegen coverage, AQE enabled. Writes PLANS.md.
 
 Usage: python tools/explain_audit.py [--sf /root/testdata/sf0.01]
+                                     [--only name1,name2]
+
+`--only` audits the named checks and rewrites just their `## <name>`
+sections of PLANS.md in place; every other section stays byte-identical.
 """
 
 from __future__ import annotations
 
 import argparse
 import io
+import re
 import sys
 from contextlib import redirect_stdout
 from pathlib import Path
@@ -997,12 +1002,28 @@ def plan_text(df) -> str:
     return buf.getvalue()
 
 
+def splice_sections(text: str, sections: dict[str, str]) -> str:
+    """`text` (PLANS.md) with each `## <name>` section named in `sections`
+    replaced in place, keeping the blank lines that followed it; a name
+    with no section yet is appended at the end."""
+    todo = dict(sections)
+    out = []
+    for part in re.split(r"(?m)^(?=## )", text):
+        name = part[3:].split("\n", 1)[0].strip() if part.startswith("## ") \
+            else None
+        if name in todo:
+            part = todo.pop(name).rstrip("\n") + part[len(part.rstrip("\n")):]
+        out.append(part)
+    out.extend("\n" + body for body in todo.values())
+    return "".join(out)
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default="/root/testdata/sf0.01")
     ap.add_argument("--only", default=None,
-                    help="comma-separated check names; skips PLANS.md "
-                         "rewrite so a partial run never truncates it")
+                    help="comma-separated check names; rewrites only "
+                         "their PLANS.md sections")
     args = ap.parse_args()
 
     from crawler_spark.queries import queries
@@ -1018,7 +1039,7 @@ def main() -> None:
         if unknown:
             sys.exit(f"unknown check names: {sorted(unknown)}")
         checks = {k: v for k, v in CHECKS.items() if k in wanted}
-    sections, failures = [], []
+    sections, failures = {}, []
     for name, (need, forbid) in checks.items():
         txt = plan_text(qs[name](spark, args.sf))
         verdicts = []
@@ -1038,27 +1059,22 @@ def main() -> None:
                            "TakeOrderedAndProject", "LeftAnti", "SortMergeJoin",
                            "AdaptiveSparkPlan", "ArrowEvalPython",
                            "BatchEvalPython", "WholeStageCodegen"))]
-        sections.append(
+        sections[name] = (
             f"## {name}\n\n" + "\n".join(f"- {v}" for v in verdicts)
             + "\n\n```\n" + "\n".join(interesting[:14]) + "\n```\n")
 
-    if args.only:
-        for name, why in failures:
-            print(f"FAIL {name}: {why}")
-        if failures:
-            sys.exit(1)
-        print(f"all {len(checks)} selected plan checks pass "
-              f"(PLANS.md untouched)")
-        return
     out = Path(__file__).resolve().parents[1] / "PLANS.md"
-    out.write_text(
-        "# PLANS.md — physical-plan audit (generated by tools/explain_audit.py)\n\n"
-        "What the optimizer must deliver for these operators to survive a\n"
-        "100x scale-up: filters and projections reaching the parquet scan,\n"
-        "small dims broadcast (never sort-merge), top-k without a global\n"
-        "sort, anti-join for dedup, aggregation as partial+final hash agg,\n"
-        "and no row-at-a-time Python in any hot path.\n\n"
-        + "\n".join(sections))
+    if args.only:
+        out.write_text(splice_sections(out.read_text(), sections))
+    else:
+        out.write_text(
+            "# PLANS.md — physical-plan audit (generated by tools/explain_audit.py)\n\n"
+            "What the optimizer must deliver for these operators to survive a\n"
+            "100x scale-up: filters and projections reaching the parquet scan,\n"
+            "small dims broadcast (never sort-merge), top-k without a global\n"
+            "sort, anti-join for dedup, aggregation as partial+final hash agg,\n"
+            "and no row-at-a-time Python in any hot path.\n\n"
+            + "\n".join(sections.values()))
     print(f"wrote {out}")
     if failures:
         for name, why in failures:
