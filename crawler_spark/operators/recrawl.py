@@ -98,7 +98,7 @@ def _job_ended(store, last: int) -> bool:
     """True if the store's metrics carry a job-end lifecycle row (the crawl
     finished by draining OR by hitting its global budget)."""
     m = store.read_delta_union("metrics", last)
-    if m is None or "event" not in m.columns:
+    if m is None:                  # killed before the wave-0 commit
         return False
     return m.where(F.col("event") == "end").limit(1).count() > 0
 
@@ -107,10 +107,11 @@ def run_recrawl(spark: SparkSession, spec: CrawlJobSpec, fetcher, store,
                 ttl_waves: int, robots_src: DataFrame | None = None,
                 sink=None, robots_fetcher=None,
                 ttl_by_host: DataFrame | None = None,
-                allow_pending: bool = False,
                 revalidate: bool = False):
     """Recrawl a COMPLETED checkpointed crawl: re-fetch every URL whose last
-    fetch is >= ttl_waves older than the job's final wave.
+    fetch is >= ttl_waves older than the job's final wave. Completed means
+    an empty frontier (manifest `rows`) or a committed job-end metrics row;
+    any other store raises ValueError.
 
     Reads the finished store's fetch_log, computes the due set, and runs a
     fresh drain over it (run_crawl with initial_frontier). Returns
@@ -121,11 +122,6 @@ def run_recrawl(spark: SparkSession, spec: CrawlJobSpec, fetcher, store,
     per-host rule (`due_for_recrawl_adaptive`, e.g. `change_rate` output
     quantized to waves); `ttl_waves` then serves as the default for hosts
     without an estimate.
-
-    `allow_pending=True` skips the completed-crawl precondition: for
-    legacy stores whose crawl hit its budget cap before job-end lifecycle
-    metrics existed (such a store has pending frontier rows that resuming
-    can never drain), the refresh then covers the fetched set only.
 
     `revalidate=True` wraps the fetcher in `ConditionalFetcher` with the
     store's recorded validators (latest fetch_log.content_sig per URL):
@@ -142,25 +138,20 @@ def run_recrawl(spark: SparkSession, spec: CrawlJobSpec, fetcher, store,
     # Enforce the COMPLETED precondition: a store killed mid-crawl still has
     # pending frontier rows; those URLs have no fetch_log rows, so they would
     # be neither due nor crawled — a silently incomplete refresh. Resume the
-    # crawl to completion first. A BUDGET-completed crawl (max_pages /
-    # max_waves reached — frontier.py commits a job-end metrics row) also
-    # carries pending rows, but resuming it cannot drain them by design, so
-    # it IS recrawlable: the refresh covers the fetched set, which is all a
-    # capped job ever promises.
-    # The wave manifest already records every table's committed row count —
-    # a full scan+count of the frontier (the big table at the 10^10-URL
-    # design point) just to evaluate this boolean would be O(frontier) I/O.
-    mrows = (store.manifest(last).get("tables", {})
-             .get("frontier", {}).get("rows"))
-    n_pending = (mrows if mrows is not None
-                 else store.read_full("frontier", last).count())
-    if n_pending and not _job_ended(store, last) and not allow_pending:
+    # crawl to completion first. A BUDGET-completed crawl (max_pages
+    # reached — frontier.py commits a job-end metrics row) also carries
+    # pending rows, but resuming it cannot drain them by design, so it IS
+    # recrawlable: the refresh covers the fetched set, which is all a capped
+    # job ever promises. A max_waves or stop-flag exit is a pause (no end
+    # row) and is refused like a kill.
+    # The wave manifest records every table's committed row count — no
+    # O(frontier) scan to evaluate this boolean at the 10^10-URL design point.
+    n_pending = store.manifest(last)["tables"]["frontier"]["rows"]
+    if n_pending and not _job_ended(store, last):
         raise ValueError(
             f"store at wave {last} is not a completed crawl: {n_pending} "
             "frontier URL(s) still pending — resume the crawl to completion "
-            "before recrawling (or, for a store whose crawl hit its budget "
-            "cap before lifecycle metrics existed, pass allow_pending=True "
-            "to refresh just the fetched set)")
+            "before recrawling")
     log = store.read_delta_union("fetch_log", last)
     if log is None:
         raise ValueError("store has no fetch_log deltas to age")
@@ -171,11 +162,6 @@ def run_recrawl(spark: SparkSession, spec: CrawlJobSpec, fetcher, store,
         due = due_for_recrawl(log, last + 1, ttl_waves)
     due = due.localCheckpoint(eager=True)
     if revalidate:
-        if "content_sig" not in log.columns:
-            raise ValueError(
-                "revalidate=True needs fetch_log.content_sig — this store "
-                "was crawled before validator recording; recrawl it once "
-                "unconditionally to establish validators")
         from crawler_spark.sources.fetch import ConditionalFetcher
         fetcher = ConditionalFetcher(fetcher, validators_from_log(log))
     run = run_crawl(spark, spec, fetcher, robots_src=robots_src, sink=sink,

@@ -10,8 +10,10 @@ Mirror of the reference's drain-and-refill crawl loop
       200-pages ── explode link spans ── asset/blacklist/scope filters
         (F2-F8) ── wave dedup (A2) ── bloom probe + exact anti-join vs seen
         (F1/J1) ── robots gate (F5/J2) ── admit to frontier wave W+1
-      commit {frontier, seen, hosts, robots, bloom} full + {documents,
-        fetch_log, metrics} delta  (atomic manifest — §4.3)
+      commit {frontier, hosts, robots, bloom} full + {documents,
+        fetch_log, metrics} delta; `seen` as a `seen_delta` delta with a
+        full base every spec.seen_compact_every waves, on every store
+        (atomic manifest — §4.3)
 
 Determinism contract (SURVEY.md §5.3): equal URL-seen set, equal per-wave URL
 sets, per-document span-sequence equality, all asserted against the
@@ -165,10 +167,12 @@ def run_crawl(spark: SparkSession, spec: CrawlJobSpec, fetcher,
     `sink(wave, docs_df)` — optional per-wave callback = EP1 `Scan` streaming
     mode (reference streams each page as found, src/scanner/scan.rs:50-64).
     `store` — MemoryStore (default) or SnapDirStore for resumable snapshots.
-    `resume` — continue from the store's latest committed wave: state tables
-    (frontier/seen/hosts) reload from the last manifest, the bloom prefilter
-    reloads from its snapshot (or is rebuilt from `seen`), and accumulated
-    deltas (documents/fetch_log) are re-attached; the continued run is
+    `resume` — continue from the store's latest committed wave: frontier
+    and seen reload from the last manifest; hosts, the lazy robots cache and
+    the bloom prefilter reload exactly when that manifest lists them (else:
+    no hosts, a robots re-fetch, a bloom rebuild from `seen`), and a listed
+    table that cannot be read raises; accumulated deltas
+    (documents/fetch_log) are re-attached. The continued run is
     bit-identical to an uninterrupted one (north_rule; tested in
     tests/test_resume.py).
     """
@@ -263,50 +267,45 @@ def run_crawl(spark: SparkSession, spec: CrawlJobSpec, fetcher,
         raise ValueError("resume=True but the store has no committed wave "
                          "(missing/empty checkpoint_dir manifest)")
     seen_rows = 0
-    seen_base = -1           # wave of the last full `seen` snapshot (delta mode)
+    seen_base = -1           # wave of the last full `seen` snapshot
     if last is not None:
-        # --- resume: reload state committed at the end of wave `last` ---
+        # --- resume: reload state committed at the end of wave `last`. The
+        # optional tables are read exactly when the manifest lists them; a
+        # listed table that cannot be read raises. (The wave -1 manifest
+        # has no `extra`, hence the defaults.) ---
+        man = store.manifest(last)
+        extra, tables = man.get("extra", {}), man["tables"]
         pending = store.read_full("frontier", last)
         seen = store.read_seen(last)
-        man = store.manifest(last)
-        seen_base = int(man.get("extra", {}).get("seen_base_wave", last))
-        seen_rows = int(man.get("extra", {}).get("seen_rows", 0)
-                        or man.get("tables", {}).get("seen", {}).get("rows", 0)
-                        or seen.count())
-        try:
-            hosts = store.read_full("hosts", last)
-        except Exception:
-            hosts = None                   # killed before wave-0 commit
-        run.n_fetched = int(man.get("extra", {}).get("n_fetched", 0))
-        tot_errors = int(man.get("extra", {}).get("tot_errors", 0))
-        tot_bytes = int(man.get("extra", {}).get("tot_bytes", 0))
+        seen_base = int(extra.get("seen_base_wave", last))
+        seen_rows = int(extra["seen_rows"] if "seen_rows" in extra
+                        else tables["seen"]["rows"])
+        # no `hosts` before the wave-0 commit
+        hosts = store.read_full("hosts", last) if "hosts" in tables else None
+        run.n_fetched = int(extra.get("n_fetched", 0))
+        tot_errors = int(extra.get("tot_errors", 0))
+        tot_bytes = int(extra.get("tot_bytes", 0))
         if lazy_robots:
             # the robots cache commits with every wave (§4.3); reload it
-            # rather than re-fetching. Pre-robots-snapshot checkpoints (or a
-            # kill before the wave-0 commit) fall back to re-fetch — rules
-            # are deterministic, so re-fetch == the pre-kill cache.
-            try:
+            # rather than re-fetching. A manifest that does not list it
+            # re-fetches — rules are deterministic, so re-fetch == the
+            # pre-kill cache.
+            if "robots" in tables:
                 robots = store.read_full("robots", last) \
                     .localCheckpoint(eager=True)
-            except Exception:
+            else:
                 _ensure_robots(pending, last + 1)
-        # reload the committed prefilter bitsets; geometry mismatch or a
-        # checkpoint from a pre-bloom-snapshot layout -> rebuilt from
-        # `seen` by _merge_bloom below (identical bits)
-        try:
+        # reload the committed prefilter bitsets; no `bloom` table (not yet
+        # active, or dropped by a forget purge) or a geometry mismatch ->
+        # rebuilt from `seen` by _merge_bloom below (identical bits)
+        if "bloom" in tables:
             bloom_active = bloom.load_rows(
                 store.read_full("bloom", last).collect())
-        except Exception:
-            bloom_active = False
         docs0 = store.read_delta_union("documents", last)
         log0 = store.read_delta_union("fetch_log", last)
         if docs0 is not None:
             docs_parts.append(docs0)
         if log0 is not None:
-            if "content_sig" not in log0.columns:
-                # store predates the revalidation column: align so the
-                # resumed job's new waves union cleanly ('' = no validator)
-                log0 = log0.withColumn("content_sig", F.lit(""))
             log_parts.append(log0)
         wave = last + 1
     else:
@@ -470,10 +469,10 @@ def run_crawl(spark: SparkSession, spec: CrawlJobSpec, fetcher,
             _mark("gini")
         run.metrics.append(wave_metrics)
 
-        # --- §4.3 atomic snapshot commit. `seen` commits as a per-wave
-        # delta with periodic compaction to a full base (the Iceberg-style
-        # layout — a full rewrite per wave is O(total frontier) at 10^10);
-        # MemoryStore and seen_compact_every=0 keep the full-rewrite path ---
+        # --- §4.3 atomic snapshot commit. On every store, `seen` commits
+        # as a per-wave delta with a full base every spec.seen_compact_every
+        # waves (the Iceberg-style layout — a full rewrite per wave is
+        # O(total frontier) at 10^10; K=1 writes a full base every wave) ---
         # S9 lifecycle rows (reference ScanStart/ScanEnd, src/rpc/client.rs:
         # 31-52, emitted at scan.rs:44-46/66-68): a job-start row (wave=-1)
         # rides wave 0's commit and a job-end row (wave=JOB_END_WAVE, with
@@ -502,8 +501,6 @@ def run_crawl(spark: SparkSession, spec: CrawlJobSpec, fetcher,
         # superset of `seen` keys, or a resumed probe would call a seen URL
         # "definitely new" and re-admit it (correctness, not just perf).
         _merge_bloom(new_rows if n_new else None, seen_next, seen_rows + n_new)
-        delta_mode = resumable and spec.seen_compact_every > 0
-        compact_now = delta_mode and ((wave + 1) % spec.seen_compact_every == 0)
         full_tables = {"frontier": pending_next, "hosts": hosts}
         if resumable:
             # §4.3: robots cache + bloom partitions commit with the wave so
@@ -522,20 +519,18 @@ def run_crawl(spark: SparkSession, spec: CrawlJobSpec, fetcher,
                     "part int, bits binary, n_parts int, m long, k int")
         delta_tables = {"documents": docs, "fetch_log": flog,
                         "metrics": metrics_df}
-        if not delta_mode or compact_now:
+        if (wave + 1) % spec.seen_compact_every == 0:
             full_tables["seen"] = seen_next
-            next_base = wave if delta_mode else seen_base
+            seen_base = wave
         else:
             delta_tables["seen_delta"] = seen_delta_df
-            next_base = seen_base
         state = store.persist_wave(
             wave, full=full_tables, delta=delta_tables,
             extra={"n_fetched": run.n_fetched + n_sel,
                    "tot_errors": tot_errors, "tot_bytes": tot_bytes,
                    "seen_rows": seen_rows + n_new,
-                   "seen_base_wave": next_base,
+                   "seen_base_wave": seen_base,
                    "spec": spec.to_dict()})
-        seen_base = next_base
         pending, hosts = state["frontier"], state["hosts"]
         robots = state.get("robots", robots)
         seen = (state["seen"] if "seen" in state

@@ -6,18 +6,22 @@ the sandbox has no Iceberg runtime jar and no network to fetch one, so the
 default backend is **snapdir**: Parquet under ``<root>/<table>/_snap=<wave>/``
 plus ``<root>/_manifest/<wave>.json`` written LAST as the atomic commit point
 (a snapshot without its manifest does not exist). Manifests carry per-table
-row counts and order-insensitive xxhash64 content fingerprints — the lineage
-a resume verifies against.
+row counts and order-insensitive xxhash64 content fingerprints. Nothing
+verifies them on read: ``rows`` feeds resume's row counts (the seed commit's
+`seen` size), run_recrawl's pending-frontier check and the purge audit;
+``fingerprint`` is the hash the tests recompute from the data
+(``content_fingerprint``, tests/conftest.snap_fp) to assert bit-identical
+state. Resume reads exactly the tables a manifest lists.
 
 Tables are committed in one of two modes:
   * ``full``  — complete state each wave (frontier, hosts);
   * ``delta`` — append-only per-wave increment (documents, fetch_log,
     metrics); a read at wave W unions deltas 0..W.
-``seen`` uses delta-PLUS-COMPACTION (spec.seen_compact_every): per-wave
-``seen_delta`` snapshots with a full base every K waves, reconstructed by
-``read_seen`` — a full rewrite per wave would be O(total frontier) write
-volume at the 10^10 design point. Iceberg gives the same layout natively via
-snapshot manifests.
+``seen`` uses delta-PLUS-COMPACTION (spec.seen_compact_every = K >= 1, on
+every store): per-wave ``seen_delta`` snapshots with a full base every K
+waves, reconstructed by ``read_seen`` — a full rewrite per wave would be
+O(total frontier) write volume at the 10^10 design point. Iceberg gives the
+same layout natively via snapshot manifests.
 
 Maintenance (``SnapDirStore.expire`` — Iceberg ``expireSnapshots`` parity):
 a crawl that snapshots every wave accrues one manifest + one dir per table
@@ -180,9 +184,10 @@ class SnapDirStore:
         return self.spark.read.option("mergeSchema", "true").parquet(*paths)
 
     def read_seen(self, wave: int) -> DataFrame:
-        """Reconstruct `seen` as of `wave` under either layout: a full
-        snapshot at `wave`, or the last compacted base plus the per-wave
-        `seen_delta` chain since (manifest `extra.seen_base_wave`)."""
+        """Reconstruct `seen` as of `wave`: the full base committed at
+        `wave` (the seed commit or a compaction wave), or the last base plus
+        the per-wave `seen_delta` chain since (manifest
+        `extra.seen_base_wave`)."""
         man = self.manifest(wave)
         if "seen" in man.get("tables", {}):
             return self.read_full("seen", wave)

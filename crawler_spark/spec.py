@@ -53,12 +53,13 @@ class CrawlJobSpec:
                                          # candidate to the anti-join.
     shuffle_partitions: int = 32
     checkpoint_dir: str = ""             # '' = in-memory state only (no snapshots)
-    seen_compact_every: int = 8          # snapshot `seen` as per-wave deltas,
-                                         # compacting to a full base every K
-                                         # waves (0 = full rewrite each wave).
-                                         # At 10^10 URLs a full rewrite is
-                                         # O(total) per wave; delta+compaction
-                                         # is the Iceberg-equivalent layout.
+    seen_compact_every: int = 8          # commit `seen` as per-wave deltas
+                                         # with a full base every K >= 1
+                                         # waves, on every store (K=1: a full
+                                         # base each wave). At 10^10 URLs a
+                                         # full rewrite is O(total) per wave;
+                                         # delta+compaction is the Iceberg-
+                                         # equivalent layout.
     snapshot_keep: int = 0               # >0: after each wave commit, expire
                                          # snapshots older than the last K
                                          # waves (cheap mode: superseded FULL
@@ -86,6 +87,11 @@ class CrawlJobSpec:
         "Mozilla/5.0 (Macintosh; Intel Mac OS X 10_15_7) AppleWebKit/537.36",
         "Mozilla/5.0 (X11; Ubuntu; Linux x86_64; rv:126.0) Gecko/20100101",
     )
+
+    def __post_init__(self) -> None:
+        if self.seen_compact_every < 1:
+            raise ValueError(f"seen_compact_every must be >= 1, got "
+                             f"{self.seen_compact_every}")
 
     def tokens_for(self, crawl_delay_ms: int | None) -> float:
         """Per-wave token refill for a host, honoring robots Crawl-delay and

@@ -102,3 +102,40 @@ def snap_fp(spark, root: str) -> dict:
         df = store.read_delta_union(t, last)
         out[t] = content_fingerprint(df) if df is not None else None
     return out
+
+
+# Session shapes for the environment-invariance sweeps: (shuffle partitions,
+# AQE, files.maxPartitionBytes).
+SHAPES = [("8", "false", str(128 * 1024 * 1024)),
+          ("200", "true", str(128 * 1024 * 1024)),
+          ("3", "true", str(64 * 1024)),
+          ("32", "false", str(1024 * 1024))]
+
+
+def _sweep(spark, base, run, want, reorder_col):
+    """Assert `run(df) == want` for 4 input partitionings of `base` under
+    every session shape in SHAPES (16 combinations), then restore the
+    session conf — unsetting a key that was unset before, so no later test
+    inherits a sweep's shape."""
+    from pyspark.sql import functions as F
+
+    inputs = [base, base.repartition(13), base.coalesce(1),
+              base.orderBy(F.desc(reorder_col)).repartition(5)]
+    conf = spark.conf
+    saved = {k: conf.get(k, None) for k in
+             ("spark.sql.shuffle.partitions",
+              "spark.sql.adaptive.enabled",
+              "spark.sql.files.maxPartitionBytes")}
+    try:
+        for sp, aqe, mpb in SHAPES:
+            conf.set("spark.sql.shuffle.partitions", sp)
+            conf.set("spark.sql.adaptive.enabled", aqe)
+            conf.set("spark.sql.files.maxPartitionBytes", mpb)
+            for df in inputs:
+                assert run(df) == want, (sp, aqe, mpb)
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                conf.unset(k)
+            else:
+                conf.set(k, v)

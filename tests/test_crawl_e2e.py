@@ -47,6 +47,7 @@ def _assert_equal(oracle, run, got):
                  id="delay-no-bloom"),
     pytest.param({"bloom_min_seen": 0}, id="bloom-forced-active"),
     pytest.param({"per_host_tokens": 3.0}, id="salted-politeness"),
+    pytest.param({"seen_compact_every": 2}, id="seen-delta-compact2"),
 ])
 def test_engine_matches_oracle(shared_crawl, small_cfg, spec_kw):
     spec = CrawlJobSpec(seeds=tuple(gen_seeds(small_cfg)), max_waves=20, **spec_kw)

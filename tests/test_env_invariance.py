@@ -19,33 +19,8 @@ from __future__ import annotations
 import datetime
 
 import pytest
-from pyspark.sql import functions as F
 
-SHAPES = [("8", "false", str(128 * 1024 * 1024)),
-          ("200", "true", str(128 * 1024 * 1024)),
-          ("3", "true", str(64 * 1024)),
-          ("32", "false", str(1024 * 1024))]
-
-
-def _sweep(spark, base, run, want, reorder_col):
-    inputs = [base, base.repartition(13), base.coalesce(1),
-              base.orderBy(F.desc(reorder_col)).repartition(5)]
-    conf = spark.conf
-    saved = {k: conf.get(k, None) for k in
-             ("spark.sql.shuffle.partitions",
-              "spark.sql.adaptive.enabled",
-              "spark.sql.files.maxPartitionBytes")}
-    try:
-        for sp, aqe, mpb in SHAPES:
-            conf.set("spark.sql.shuffle.partitions", sp)
-            conf.set("spark.sql.adaptive.enabled", aqe)
-            conf.set("spark.sql.files.maxPartitionBytes", mpb)
-            for df in inputs:
-                assert run(df) == want, (sp, aqe, mpb)
-    finally:
-        for k, v in saved.items():
-            if v is not None:
-                conf.set(k, v)
+from conftest import _sweep
 
 
 def test_no_partition_id_derived_block_ids():

@@ -11,8 +11,10 @@ loop between waves, and resuming after flag removal completes the crawl.
 from __future__ import annotations
 
 import dataclasses
+import shutil
 
 import pytest
+from pyspark.errors import AnalysisException
 
 from crawler_spark.plans.frontier import run_crawl
 from crawler_spark.plans.tableio import SnapDirStore, content_fingerprint
@@ -107,6 +109,35 @@ def test_lifecycle_metrics_rows(spark, crawl_env, tmp_path):
     assert sum(r["event"] == "end" for r in rows2) == 0
 
 
+@pytest.mark.parametrize("table,spec_kw", [
+    pytest.param("hosts", {}, id="hosts"),
+    pytest.param("bloom", {"bloom_min_seen": 0}, id="bloom"),
+])
+def test_resume_refuses_missing_listed_table(spark, crawl_env, shared_crawl,
+                                             tmp_path, table, spec_kw):
+    """A table the last manifest lists but whose snapshot is gone is a
+    corrupt store: resume raises instead of silently restarting that state
+    (fresh token buckets, a rebuilt bloom) and breaking bit-identity."""
+    fetcher, robots_df, seeds = crawl_env
+    d = str(tmp_path / "kill")
+    spec = CrawlJobSpec(seeds=seeds, max_waves=2, checkpoint_dir=d, **spec_kw)
+    shared_crawl(spec)
+    store = SnapDirStore(spark, d)
+    last = store.latest_wave()
+    assert table in store.manifest(last)["tables"]
+    shutil.rmtree(store._snap_path(table, last))
+    with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
+        run_crawl(spark, dataclasses.replace(spec, max_waves=20), fetcher,
+                  robots_src=robots_df, resume=True)
+
+
+def test_seen_compact_every_must_be_positive():
+    """K=1 is the full-base-every-wave layout; there is no K=0."""
+    with pytest.raises(ValueError, match="seen_compact_every"):
+        CrawlJobSpec(seen_compact_every=0)
+    assert CrawlJobSpec(seen_compact_every=1).seen_compact_every == 1
+
+
 def test_resume_without_checkpoint_raises(spark, crawl_env, tmp_path):
     fetcher, robots_df, seeds = crawl_env
     spec = CrawlJobSpec(seeds=seeds, checkpoint_dir=str(tmp_path / "empty"))
@@ -175,6 +206,16 @@ def test_lazy_robots_cache_restored_not_refetched(spark, small_cfg, crawl_env,
     assert "robots" in store.manifest(k)["tables"]
     cached_hosts = store.read_full("robots", k).count()
 
+    # a listed robots snapshot that is gone is a corrupt store: resume
+    # raises rather than re-fetching
+    d_broken = str(tmp_path / "broken")
+    shutil.copytree(d, d_broken)
+    shutil.rmtree(SnapDirStore(spark, d_broken)._snap_path("robots", k))
+    with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
+        run_crawl(spark, dataclasses.replace(base, checkpoint_dir=d_broken),
+                  fetcher, robots_src=None,
+                  robots_fetcher=SimulatedFetcher(robots_pages), resume=True)
+
     rf_res = _CountingFetcher(SimulatedFetcher(robots_pages))
     run_r = run_crawl(spark, dataclasses.replace(base, checkpoint_dir=d),
                       fetcher, robots_src=None, robots_fetcher=rf_res,
@@ -231,8 +272,8 @@ def test_bloom_partitions_restored_on_resume(spark, crawl_env, shared_crawl,
 def test_seen_delta_compaction_layout(spark, crawl_env, shared_crawl,
                                       tmp_path):
     """seen commits as per-wave deltas with a full base every K waves; the
-    reconstructed table equals the full-rewrite layout's, and resume across
-    a compaction boundary stays bit-identical."""
+    reconstructed table equals the full-base-every-wave layout's (K=1), and
+    resume across a compaction boundary stays bit-identical."""
     fetcher, robots_df, seeds = crawl_env
 
     # K=2: with a ~5-wave crawl we get deltas AND compactions interleaved
@@ -243,7 +284,7 @@ def test_seen_delta_compaction_layout(spark, crawl_env, shared_crawl,
 
     d_full = str(tmp_path / "full")
     spec_f = CrawlJobSpec(seeds=seeds, max_waves=20, checkpoint_dir=d_full,
-                          seen_compact_every=0)
+                          seen_compact_every=1)
     shared_crawl(spec_f)
 
     s_d, s_f = SnapDirStore(spark, d_delta), SnapDirStore(spark, d_full)

@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 from crawler_spark.operators.sampling import (
     hash_split, token_budget_select, token_budget_threshold,
 )
+from conftest import _sweep
 
 
 def test_token_budget_select_cutoff(spark):
@@ -397,28 +398,7 @@ def test_pack_sequences_environment_invariant(spark):
         acc += nt
     want.sort()
 
-    conf = spark.conf
-    saved = {k: conf.get(k, None) for k in
-             ("spark.sql.shuffle.partitions",
-              "spark.sql.adaptive.enabled",
-              "spark.sql.files.maxPartitionBytes")}
-    shapes = [("8", "false", str(128 * 1024 * 1024)),
-              ("200", "true", str(128 * 1024 * 1024)),
-              ("3", "true", str(64 * 1024)),
-              ("32", "false", str(1024 * 1024))]
-    inputs = [base, base.repartition(13), base.coalesce(1),
-              base.orderBy(F.desc("n_tokens")).repartition(5)]
-    try:
-        for sp, aqe, mpb in shapes:
-            conf.set("spark.sql.shuffle.partitions", sp)
-            conf.set("spark.sql.adaptive.enabled", aqe)
-            conf.set("spark.sql.files.maxPartitionBytes", mpb)
-            for df in inputs:
-                assert run(df) == want, (sp, aqe, mpb)
-    finally:
-        for k, v in saved.items():
-            if v is not None:
-                conf.set(k, v)
+    _sweep(spark, base, run, want, "n_tokens")
 
 
 def test_dataset_card_rollup_levels_consistent(spark):
