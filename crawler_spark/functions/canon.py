@@ -101,10 +101,11 @@ def _canon_abs(joined: str) -> str:
 
 
 def host_of(url_canon: str) -> str:
-    """Host of an already-canonical URL (cheap split, no re-parse)."""
+    """Host of an already-canonical URL (cheap split, no re-parse): the
+    authority after the first ``://`` up to its first ``:``, as host_col
+    computes it, so the two agree on every string."""
     rest = url_canon.split("://", 1)[-1]
-    authority = rest.split("/", 1)[0]
-    return authority.rsplit(":", 1)[0] if ":" in authority else authority
+    return rest.split("/", 1)[0].split(":", 1)[0]
 
 
 @F.pandas_udf(StringType())
@@ -121,7 +122,8 @@ def host_col(url_canon_col):
     """Native-Spark host extraction for canonical URLs — stays in codegen.
 
     Equivalent to host_of(); used on the hot path so Catalyst can prune/push.
+    The authority starts after the FIRST ``://`` (a query may carry another)
+    and the host ends at its first ``/`` or ``:``. A literal pattern is
+    compiled once per task; splitting at ``://`` would compile one per row.
     """
-    rest = F.substring_index(url_canon_col, "://", -1)
-    authority = F.substring_index(rest, "/", 1)
-    return F.substring_index(authority, ":", 1)
+    return F.regexp_extract(url_canon_col, r"^(?s:.*?://)?([^/:]*)", 1)

@@ -154,8 +154,8 @@ def purge_urls(spark: SparkSession, store, urls,
     extra["seen_rows"] = n_seen1
     extra["purge"] = {"mode": mode, "n_keys": int(n_keys), "epoch": epoch}
     store.persist_wave(epoch, full=full, delta=delta, extra=extra)
-    # the epoch manifest already carries exact row counts from the commit's
-    # single read-back pass — no extra table scans for the audit
+    # the epoch manifest already carries exact row counts, observed while
+    # the commit wrote each table — no extra table scans for the audit
     etabs = store.manifest(epoch).get("tables", {})
     n_docs1 = int(etabs.get("documents", {}).get("rows", 0))
     removed_dirs = store.gc_below(epoch)

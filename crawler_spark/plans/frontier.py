@@ -35,9 +35,11 @@ import os
 import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
-from crawler_spark.functions.canon import canonicalize_udf, host_col
+from crawler_spark.functions.canon import (
+    canonicalize, canonicalize_udf, host_col, host_of,
+)
 from crawler_spark.operators import politeness
 from crawler_spark.operators.dedup import (
     SeenBloom, anti_join_seen, build_bloom_parts,
@@ -85,6 +87,14 @@ class CrawlRun:
             "documents": docs,
             "doc_wave": doc_wave,
         }
+
+
+def _counted(df: DataFrame) -> tuple[DataFrame, Observation]:
+    """`df` with its row count observed by the first action that runs it
+    (a checkpoint or a commit write), so counting costs no Spark job of its
+    own; read the count as `obs.get["n"]` after that action."""
+    obs = Observation()
+    return df.observe(obs, F.count(F.lit(1)).alias("n")), obs
 
 
 def _admit(spark: SparkSession, cands: DataFrame, seen: DataFrame | None,
@@ -194,8 +204,9 @@ def run_crawl(spark: SparkSession, spec: CrawlJobSpec, fetcher,
         hosts_df = cand.select("host").distinct()
         if robots is not None:
             hosts_df = hosts_df.join(robots.select("host"), "host", "left_anti")
-        missing = hosts_df.localCheckpoint(eager=True)
-        if missing.count() == 0:
+        missing, n_missing = _counted(hosts_df)
+        missing = missing.localCheckpoint(eager=True)
+        if n_missing.get["n"] == 0:
             return
         rules = fetch_robots_rules(robots_fetcher, missing, wave_no, spec.agent)
         robots = (rules if robots is None else robots.unionByName(rules)) \
@@ -241,17 +252,18 @@ def run_crawl(spark: SparkSession, spec: CrawlJobSpec, fetcher,
         # EXISTING frontier, e.g. a recrawl) — rows are already-canonical
         # (url_canon, depth, priority); they still pass the full _admit path
         seeds_canon = initial_frontier.select("url_canon", "depth", "priority")
+        seed_hosts = sorted(
+            {r["host"] for r in seeds_canon.select(
+                host_col(F.col("url_canon")).alias("host")).distinct().collect()})
     else:
-        seeds_df = spark.createDataFrame([(s,) for s in spec.seeds], "url string")
-        seeds_canon = (seeds_df
-                       .withColumn("url_canon",
-                                   canonicalize_udf(F.col("url"), F.lit("")))
-                       .where(F.col("url_canon") != "")
-                       .select("url_canon", F.lit(0).alias("depth"),
-                               F.lit(0.0).alias("priority")))
-    seed_hosts = sorted({r["host"] for r in
-                         seeds_canon.select(host_col(F.col("url_canon")).alias("host"))
-                         .distinct().collect()})
+        # a hand-written seed list is a few strings: canonicalize them in
+        # this process with the function canonicalize_udf wraps, with no
+        # Arrow round trip and no job to collect their hosts
+        canon = [c for c in (canonicalize(s, "") for s in spec.seeds) if c]
+        seeds_canon = spark.createDataFrame(
+            [(c, 0, 0.0) for c in canon],
+            "url_canon string, depth int, priority double")
+        seed_hosts = sorted({host_of(c) for c in canon})
 
     # Until _merge_bloom activates it the bloom holds no parts, and
     # anti_join_seen runs exact.
@@ -276,6 +288,7 @@ def run_crawl(spark: SparkSession, spec: CrawlJobSpec, fetcher,
         man = store.manifest(last)
         extra, tables = man.get("extra", {}), man["tables"]
         pending = store.read_full("frontier", last)
+        n_pending = int(tables["frontier"]["rows"])
         seen = store.read_seen(last)
         seen_base = int(extra.get("seen_base_wave", last))
         seen_rows = int(extra["seen_rows"] if "seen_rows" in extra
@@ -291,8 +304,7 @@ def run_crawl(spark: SparkSession, spec: CrawlJobSpec, fetcher,
             # re-fetches — rules are deterministic, so re-fetch == the
             # pre-kill cache.
             if "robots" in tables:
-                robots = store.read_full("robots", last) \
-                    .localCheckpoint(eager=True)
+                robots = store.read_full("robots", last)
             else:
                 _ensure_robots(pending, last + 1)
         # reload the committed prefilter bitsets; no `bloom` table (not yet
@@ -337,17 +349,17 @@ def run_crawl(spark: SparkSession, spec: CrawlJobSpec, fetcher,
         seen = pending.select("url_hash", "url_canon", "host",
                               F.lit(0).alias("wave"))
         hosts = None
-        init_full = {"frontier": pending, "seen": seen}
+        # the frontier's size is observed by its commit (MemoryStore's
+        # checkpoint, SnapDirStore's write), not counted by a job of its own
+        counted, n_init = _counted(pending)
+        init_full = {"frontier": counted, "seen": seen}
         if lazy_robots and robots is not None:
             init_full["robots"] = robots
         state = store.persist_wave(-1, init_full, {})
         pending, seen = state["frontier"], state["seen"]
         robots = state.get("robots", robots)
+        n_pending = seen_rows = n_init.get["n"]
         wave = 0
-
-    n_pending = pending.count()
-    if last is None:
-        seen_rows = n_pending
 
     _merge_bloom(None, seen, seen_rows)
 
@@ -423,8 +435,8 @@ def run_crawl(spark: SparkSession, spec: CrawlJobSpec, fetcher,
             .select(F.col("s.media_ref").alias("url_canon"),
                     (F.col("depth") + 1).alias("depth"),
                     F.lit(0.0).alias("priority")))
-        new_rows = _admit_gated(links, seen, wave + 1) \
-            .localCheckpoint(eager=True)
+        new_rows, n_new_obs = _counted(_admit_gated(links, seen, wave + 1))
+        new_rows = new_rows.localCheckpoint(eager=True)
         _mark("admit")
         pending_next = rest.unionByName(new_rows)
         seen_delta_df = new_rows.select("url_hash", "url_canon", "host",
@@ -440,7 +452,7 @@ def run_crawl(spark: SparkSession, spec: CrawlJobSpec, fetcher,
         if n_sel == 0:
             wave += 1
             continue
-        n_new = new_rows.count()
+        n_new = n_new_obs.get["n"]
         _mark("metrics")
         wave_metrics = {
             "wave": wave,

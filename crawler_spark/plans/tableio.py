@@ -6,12 +6,18 @@ the sandbox has no Iceberg runtime jar and no network to fetch one, so the
 default backend is **snapdir**: Parquet under ``<root>/<table>/_snap=<wave>/``
 plus ``<root>/_manifest/<wave>.json`` written LAST as the atomic commit point
 (a snapshot without its manifest does not exist). Manifests carry per-table
-row counts and order-insensitive xxhash64 content fingerprints. Nothing
-verifies them on read: ``rows`` feeds resume's row counts (the seed commit's
-`seen` size), run_recrawl's pending-frontier check and the purge audit;
+row counts, order-insensitive xxhash64 content fingerprints and the Spark
+schema (JSON). Rows and fingerprint are observed while the table is written,
+so a commit is one Spark job per table. Nothing verifies them on read:
+``rows`` feeds resume's row counts (the seed commit's `seen` size and the
+pending frontier), run_recrawl's pending-frontier check and the purge audit;
 ``fingerprint`` is the hash the tests recompute from the data
 (``content_fingerprint``, tests/conftest.snap_fp) to assert bit-identical
-state. Resume reads exactly the tables a manifest lists.
+state. Reads take the schema the manifest records, as Iceberg readers take
+it from table metadata, so no read of the current format infers one; only a
+table whose manifest entry has no ``schema`` (a store written before
+manifests recorded it, or a `seen` base whose manifest has expired) is read
+with inference. Resume reads exactly the tables a manifest lists.
 
 Tables are committed in one of two modes:
   * ``full``  — complete state each wave (frontier, hosts);
@@ -46,7 +52,8 @@ import json
 import os
 import shutil
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
+from pyspark.sql.types import StructType
 
 
 def fingerprint_sum_col(df: DataFrame):
@@ -123,23 +130,24 @@ class SnapDirStore:
                 path = self._snap_path(name, wave)
                 if os.path.exists(path):           # re-run of an uncommitted wave
                     shutil.rmtree(path)
-                df.write.parquet(path)
-                back = self.spark.read.parquet(path)
-                # rows + fingerprint in ONE read-back pass — a separate
-                # count() then fingerprint() scans every committed table
-                # twice per wave, O(table) extra I/O each at the 10^10
-                # design point
-                stat = back.select(
-                    F.count(F.lit(1)).alias("rows"),
-                    fingerprint_sum_col(back).alias("fp")).collect()[0]
+                # rows + fingerprint are observed on the rows the write
+                # itself streams: the commit is ONE job per table, with no
+                # read-back scan, and the returned table reads the files
+                # with the known schema, so it infers none
+                obs = Observation()
+                df.observe(obs, F.count(F.lit(1)).alias("rows"),
+                           fingerprint_sum_col(df).alias("fp")
+                           ).write.parquet(path)
+                stat = obs.get
                 manifest["tables"][name] = {
                     "mode": mode,
                     "rows": int(stat["rows"]),
                     "fingerprint": int(stat["fp"] or 0) % (1 << 64),
                     "n_files": len([f for f in os.listdir(path)
                                     if f.endswith(".parquet")]),
+                    "schema": df.schema.json(),
                 }
-                out[name] = back
+                out[name] = self.spark.read.schema(df.schema).parquet(path)
         tmp = self._manifest_path(wave) + ".tmp"
         with open(tmp, "w") as fh:
             json.dump(manifest, fh, indent=1)
@@ -156,8 +164,26 @@ class SnapDirStore:
         with open(self._manifest_path(wave)) as fh:
             return json.load(fh)
 
+    def _manifest_or_empty(self, wave: int) -> dict:
+        try:
+            return self.manifest(wave)
+        except (OSError, ValueError):      # expired or unreadable
+            return {}
+
+    @staticmethod
+    def _schema(man: dict, table: str) -> StructType | None:
+        """The schema `man` records for `table`; None when its entry has
+        none, and the read then infers it from the files."""
+        schema = man.get("tables", {}).get(table, {}).get("schema")
+        return (None if schema is None
+                else StructType.fromJson(json.loads(schema)))
+
     def read_full(self, table: str, wave: int) -> DataFrame:
-        return self.spark.read.parquet(self._snap_path(table, wave))
+        schema = self._schema(self._manifest_or_empty(wave), table)
+        reader = self.spark.read
+        if schema is not None:
+            reader = reader.schema(schema)
+        return reader.parquet(self._snap_path(table, wave))
 
     def read_delta_union(self, table: str, upto_wave: int,
                          from_wave: int = 0) -> DataFrame | None:
@@ -165,22 +191,24 @@ class SnapDirStore:
         # dir and records it in the manifest (extra.delta_base); reads at or
         # after the epoch must not union the superseded (possibly not yet
         # GC'd) older dirs
-        try:
-            base = (self.manifest(upto_wave).get("extra", {})
-                    .get("delta_base") or {}).get(table)
-            if base is not None:
-                from_wave = max(from_wave, int(base))
-        except (FileNotFoundError, OSError, ValueError):
-            pass
+        man = self._manifest_or_empty(upto_wave)
+        base = (man.get("extra", {}).get("delta_base") or {}).get(table)
+        if base is not None:
+            from_wave = max(from_wave, int(base))
         paths = [self._snap_path(table, w)
                  for w in range(from_wave, upto_wave + 1)]
         paths = [p for p in paths if os.path.exists(p)]
         if not paths:
             return None
-        # mergeSchema: a resumed run may append deltas with columns an older
-        # process's files lack (e.g. metrics grew job_id/event) — without it
-        # Spark infers from one arbitrary file and the new columns silently
-        # vanish from the union
+        schema = self._schema(man, table)
+        if schema is not None:
+            # the newest delta's schema: files missing one of its columns
+            # read it as null, as mergeSchema would
+            return self.spark.read.schema(schema).parquet(*paths)
+        # mergeSchema only serves manifests without a `schema`: a resumed
+        # run may append deltas with columns an older process's files lack
+        # (e.g. metrics grew job_id/event) — without it Spark infers from
+        # one arbitrary file and the new columns silently vanish
         return self.spark.read.option("mergeSchema", "true").parquet(*paths)
 
     def read_seen(self, wave: int) -> DataFrame:

@@ -38,8 +38,13 @@ def test_udf_matches_pure_fn(spark):
     got = [r["c"] for r in
            df.select(canonicalize_udf("base", "href").alias("c")).collect()]
     assert got == [c["want"] for c in CASES]
-    # host_col (native) == host_of (pure) on canonical urls
-    urls = [(c["want"],) for c in CASES if c["want"]]
+    # host_col (native) == host_of (pure) on canonical urls, also where the
+    # authority holds more than one ':', the query another '://', or there
+    # is no '://' at all
+    urls = [(c["want"],) for c in CASES if c["want"]] + [
+        ("http://2001:db8::1/x",), ("http://::1:8080/a",),
+        ("http://a.b:81:82/x",), ("http://a.b/r?u=http://c.d:8/",),
+        ("a.b:8/x?u=http://c.d/",), ("",)]
     df2 = spark.createDataFrame(urls, "u string")
     got2 = [r["h"] for r in df2.select(host_col(F.col("u")).alias("h")).collect()]
     assert got2 == [host_of(u[0]) for u in urls]

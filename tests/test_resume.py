@@ -11,7 +11,10 @@ loop between waves, and resuming after flag removal completes the crawl.
 from __future__ import annotations
 
 import dataclasses
+import json
+import os
 import shutil
+import uuid
 
 import pytest
 from pyspark.errors import AnalysisException
@@ -129,6 +132,92 @@ def test_resume_refuses_missing_listed_table(spark, crawl_env, shared_crawl,
     with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
         run_crawl(spark, dataclasses.replace(spec, max_waves=20), fetcher,
                   robots_src=robots_df, resume=True)
+
+
+def _jobs_of(spark, fn) -> int:
+    """Number of Spark jobs `fn()` launches (run under its own job group)."""
+    sc = spark.sparkContext
+    group = f"count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_commit_is_one_job_per_table(spark, tmp_path):
+    """persist_wave observes rows and fingerprint while it writes, so each
+    committed table costs its write job and nothing more; a read of a table
+    whose manifest records its schema infers none and launches no job."""
+    from pyspark.sql import functions as F
+
+    store = SnapDirStore(spark, str(tmp_path / "s"))
+    full = {"a": spark.range(7).withColumn("s", F.col("id").cast("string")),
+            "b": spark.createDataFrame([(1, "x"), (2, None)], "k int, v string")}
+    delta = {"c": spark.range(3).select((F.col("id") * 0.5).alias("d"))}
+    assert _jobs_of(spark, lambda: store.persist_wave(0, full, delta)) == 3
+    man = store.manifest(0)
+    for name, df in {**full, **delta}.items():
+        entry = man["tables"][name]
+        assert entry["rows"] == df.count()
+        assert entry["fingerprint"] == content_fingerprint(df)
+        assert json.loads(entry["schema"]) == json.loads(df.schema.json())
+    assert _jobs_of(spark, lambda: store.read_full("a", 0)) == 0
+    assert _jobs_of(spark, lambda: store.read_delta_union("c", 0)) == 0
+
+
+def test_manifest_stats_match_committed_data(spark, crawl_env, shared_crawl,
+                                             tmp_path):
+    """Rows and fingerprints observed during the write are those of the
+    data on disk, for every table of every commit of a multi-wave crawl."""
+    _, _, seeds = crawl_env
+    d = str(tmp_path / "full")
+    shared_crawl(CrawlJobSpec(seeds=seeds, max_waves=20, checkpoint_dir=d))
+    store = SnapDirStore(spark, d)
+    waves = sorted(int(f.split(".")[0])
+                   for f in os.listdir(os.path.join(d, "_manifest"))
+                   if f.endswith(".json"))
+    assert len(waves) >= 5
+    for w in waves:
+        for name, entry in store.manifest(w)["tables"].items():
+            back = store.read_full(name, w)
+            assert entry["rows"] == back.count(), (w, name)
+            assert entry["fingerprint"] == content_fingerprint(back), (w, name)
+
+
+def test_resume_of_store_without_schemas(spark, crawl_env, shared_crawl,
+                                         tmp_path):
+    """A store whose manifests record no `schema` (written before they
+    did) resumes by inferring each table's schema, bit-identically; a
+    listed snapshot that is gone still raises."""
+    fetcher, robots_df, seeds = crawl_env
+    base = CrawlJobSpec(seeds=seeds, max_waves=20)
+    d = str(tmp_path / "kill")
+    shared_crawl(dataclasses.replace(base, checkpoint_dir=d, max_waves=2))
+    mdir = os.path.join(d, "_manifest")
+    for f in os.listdir(mdir):
+        path = os.path.join(mdir, f)
+        with open(path) as fh:
+            man = json.load(fh)
+        for entry in man["tables"].values():
+            del entry["schema"]
+        with open(path, "w") as fh:
+            json.dump(man, fh)
+    d_broken = str(tmp_path / "broken")
+    shutil.copytree(d, d_broken)
+    store = SnapDirStore(spark, d_broken)
+    shutil.rmtree(store._snap_path("hosts", store.latest_wave()))
+    with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
+        run_crawl(spark, dataclasses.replace(base, checkpoint_dir=d_broken),
+                  fetcher, robots_src=robots_df, resume=True)
+
+    run_crawl(spark, dataclasses.replace(base, checkpoint_dir=d), fetcher,
+              robots_src=robots_df, resume=True)
+    d_full = str(tmp_path / "full")
+    shared_crawl(dataclasses.replace(base, checkpoint_dir=d_full))
+    assert snap_fp(spark, d) == snap_fp(spark, d_full)
 
 
 def test_seen_compact_every_must_be_positive():
