@@ -81,7 +81,7 @@ def crawl_bench(spark, n_hosts: int = 400, max_pages_per_host: int = 400,
     seeds it would correctly fetch only those hosts' pages) and models a large
     wave time slice (wave_ms=1h) so robots Crawl-delay hosts are not clamped
     to 1 URL/wave: throughput then measures the engine — frontier scan,
-    bloom+anti-join dedup, robots gate, fetch join, mapInPandas span parse,
+    seen anti-join dedup, robots gate, fetch join, mapInPandas span parse,
     admission — not an artificial politeness wait. Wall clock covers the wave
     loop only (fixture build + session excluded), which is the comparable
     quantity across parallelism levels.

@@ -6,7 +6,7 @@ see SURVEY.md) as a wave-based DataFrame engine:
 
 - frontier / seen / robots / hosts / documents / metrics tables
   (Parquet "snapdir" snapshots with manifests; Iceberg-ready TableIO),
-- xxhash64 URL-seen dedup with a partitioned Bloom prefilter,
+- xxhash64 URL-seen dedup by one exact anti-join,
 - per-host politeness token buckets, selected by a salted pre-prune and a
   per-host window rank,
 - native admission filters: scope, asset/blacklist and a longest-match

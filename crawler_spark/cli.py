@@ -81,7 +81,7 @@ def build_parser() -> argparse.ArgumentParser:
                     default="suppress",
                     help="suppress: erase content, keep seen tombstones so "
                          "the URL is never re-admitted (takedown); forget: "
-                         "erase every trace incl. seen/bloom (full erasure)")
+                         "erase every trace incl. seen (full erasure)")
     ap.add_argument("--stream", action="store_true",
                     help="EP1 scan mode: per-wave document sink to --output")
     ap.add_argument("--output", default="",
@@ -170,7 +170,6 @@ def main(argv: list[str] | None = None) -> int:
         proxy=args.proxy, delay_ms=args.delay_ms,
         max_depth=args.max_depth, max_pages=args.max_pages,
         max_waves=args.max_waves, blacklist=tuple(args.blacklist),
-        shuffle_partitions=args.shuffle_partitions,
         snapshot_keep=args.snapshot_keep,
         checkpoint_dir=args.checkpoint_dir, stop_flag_path=args.stop_flag)
 

@@ -84,14 +84,15 @@ def _canon_abs(joined: str) -> str:
     if scheme not in ("http", "https"):
         return ""
     host = parts.hostname or ""
-    if not host:
+    # an IP-literal host ([::1]) has no form host_of/host_col can split
+    if not host or "[" in parts.netloc.rpartition("@")[2]:
         return ""
     host = host.lower().rstrip(".")
     try:
         host = host.encode("idna").decode("ascii") if any(ord(c) > 127 for c in host) else host
-    except UnicodeError:
+        port = parts.port
+    except (UnicodeError, ValueError):     # ValueError: bad or out-of-range port
         return ""
-    port = parts.port
     netloc = host
     if port is not None and str(port) != _DEFAULT_PORTS.get(scheme, ""):
         netloc = f"{host}:{port}"

@@ -1,17 +1,12 @@
-"""Cuckoo-filter URL-seen prefilter — the deletable alternative to the Bloom
-prefilter (north_star: "partitioned Bloom/cuckoo URL-seen filter").
+"""Cuckoo-filter URL-seen sketch with deletion (north_star: "partitioned
+Bloom/cuckoo URL-seen filter").
 
-Why two filters exist (the 10^10-URL tradeoff, stated honestly):
-
-  * **Bloom** (operators/dedup.py): per-partition bitsets are OR-mergeable,
-    so executors ship tiny partial bitsets and the driver merges in O(bits).
-    No deletion. This is the default for append-only crawl frontiers.
-  * **Cuckoo** (here): supports DELETE (recrawl expiry, tombstoning a host's
-    URLs after a robots change) and usually beats Bloom on space at low fpp.
-    But two cuckoo tables cannot be OR-merged — union requires re-inserting
-    fingerprints — so the wave merge ships the new keys (or fingerprints)
-    rather than a fixed-size sketch. Fine when per-wave novelty is small
-    relative to `seen`; the Bloom path wins when it is not.
+The wave loop dedups by the exact `seen` anti-join (operators/dedup.py) and
+keeps no sketch. This filter serves the callers that need to DELETE keys
+from a live seen-sketch: recrawl expiry (operators/recrawl.py) and purge's
+forget mode (operators/purge.py). Unlike Bloom bitsets, two cuckoo tables
+cannot be OR-merged — union requires re-inserting fingerprints — so a merge
+ships the new keys (or fingerprints) rather than a fixed-size sketch.
 
 Vectorized numpy implementation: 4-slot buckets, 16-bit fingerprints,
 partial-key cuckoo hashing (Fan et al., CoNEXT'14): alt_bucket = bucket XOR
@@ -26,7 +21,7 @@ _FP_BITS = 16
 _SLOTS = 4
 _MAX_KICKS = 500
 
-# splitmix64 finalizer constants (same mixing discipline as dedup.BloomFilter)
+# splitmix64 finalizer constants
 _C1 = np.uint64(0xBF58476D1CE4E5B9)
 _C2 = np.uint64(0x94D049BB133111EB)
 
@@ -145,12 +140,9 @@ class CuckooFilter:
 
 
 class SeenCuckoo:
-    """Driver-held partitioned cuckoo state with the same probe/merge surface
-    as dedup.SeenBloom, so the frontier can swap prefilters.
-
-    merge_from consumes (part, keys) rows — raw novel keys per salted
-    partition, NOT a sketch (cuckoo union requires reinsertion; see module
-    docstring for when that tradeoff is acceptable)."""
+    """Driver-held partitioned cuckoo state: one CuckooFilter per
+    pmod(url_hash, n_parts) part. Keys are inserted raw (insert_keys),
+    not merged as sketches: cuckoo union requires reinsertion."""
 
     def __init__(self, n_parts: int, keys_per_part: int):
         assert n_parts & (n_parts - 1) == 0
@@ -195,8 +187,8 @@ class SeenCuckoo:
 
         The scale path for TTL expiry at the 10^10-URL design point, where a
         due-set can be a large fraction of `seen` (a driver materialization
-        of the keys is the one thing this method must not do). Mirrors
-        build_bloom_parts' partial/final shape (dedup.py):
+        of the keys is the one thing this method must not do). A
+        partial/final aggregate:
 
           partial (one job, executors): keys grouped by the filter's own
             partitioning pmod(url_hash, n_parts); each group cogrouped with
@@ -221,7 +213,7 @@ class SeenCuckoo:
         keyed = keys_df.select(
             F.col(key_col).cast("long").alias("key"),
             # pmod on the signed long == uint64 % n_parts for power-of-2
-            # n_parts (same identity the bloom partitioner relies on)
+            # n_parts (the identity _part_of relies on)
             F.pmod(F.col(key_col), F.lit(self.n_parts)).cast("int")
             .alias("part"))
         # ≤ n_parts rows — partition-cardinality, not data-cardinality

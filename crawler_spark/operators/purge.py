@@ -21,12 +21,8 @@ epoch**: wave P = latest+1 commits, in ONE atomic manifest,
         set, so a later crawl or recrawl never re-admits it;
       - ``mode="forget"`` (full erasure): seen keys are removed too — every
         trace of the URL is gone, and the crawler may legitimately
-        rediscover it. The committed bloom bitsets cannot delete keys, so
-        forget mode drops the ``bloom`` table from the epoch; resume's
-        documented fallback rebuilds the prefilter from the filtered
-        ``seen`` (plans/frontier.py `_merge_bloom`). A live
-        deletable sketch (operators/cuckoo.py) can drop the keys in place —
-        see ``purge_from_cuckoo``.
+        rediscover it. A live deletable sketch (operators/cuckoo.py) can
+        drop the keys in place — see ``purge_from_cuckoo``.
 
 then hard-deletes every pre-epoch snapshot dir and manifest
 (``SnapDirStore.gc_below``, crash-safe roll-forward). Metrics are carried
@@ -129,14 +125,10 @@ def purge_urls(spark: SparkSession, store, urls,
         full["seen"] = _anti(seen, keys, seen["url_hash"])
     else:
         full["seen"] = seen                      # tombstones stay
+    # an older store's `bloom` table is not carried: nothing reads it
     for carry in ("hosts", "robots"):
         if carry in tables:
             full[carry] = store.read_full(carry, last)
-    if mode == "suppress" and "bloom" in tables:
-        full["bloom"] = store.read_full("bloom", last)
-    # forget mode: bloom bitsets cannot unlearn keys — omit the table; a
-    # resume rebuilds the prefilter from the filtered seen (exact superset
-    # contract preserved by construction)
 
     delta = {}
     if docs is not None:

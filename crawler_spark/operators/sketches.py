@@ -259,12 +259,10 @@ def bloom_membership(keys: DataFrame, candidates: DataFrame,
     exact maybe-in-set answer (false positives and all) a k-hash, m-bit
     Bloom filter built from `keys` gives for every candidate.
 
-    This is the oracle-checkable twin of the engine's URL-seen prefilter
-    (operators/dedup.build_bloom_parts / bloom_maybe_col — reference:
-    scan.rs delegates the seen set to the spider crate; SURVEY.md A5):
-    the production path packs bits into per-partition numpy bitsets with
-    splitmix64, which no other engine reproduces bit-for-bit. Here the
-    bit positions come from the repo's content-stable md5 family —
+    A registry operator (SURVEY.md A5; reference: scan.rs delegates the
+    seen set to the spider crate); the wave loop itself dedups `seen` by an
+    exact anti-join and builds no Bloom filter. Bit positions come from
+    the repo's content-stable md5 family —
     pos_j(key) = int(md5(j || ':' || key)[:8], 16) mod m, j < k — so
     DuckDB computes the identical filter, and the FALSE POSITIVES
     THEMSELVES (the defining Bloom behavior) sit under the hash gate,
@@ -275,13 +273,11 @@ def bloom_membership(keys: DataFrame, candidates: DataFrame,
     maybe_seen on a candidate whose key is truly absent.
 
     Scale shape: the built filter is exactly `bits` (<= m distinct
-    positions, a few KB) — broadcast to the probe side like the
-    production bitset broadcast; probing explodes each candidate to k
-    (candidate, pos) rows, broadcast-joins, and map-side-combines the
-    per-candidate match count. One shuffle on the candidate key; the
-    key-set side is one distinct at key cardinality. m/k here are demo-
-    sized; the 10^10 design point uses the partitioned-bitset engine
-    path (A5) — same algebra, denser encoding."""
+    positions, a few KB) — broadcast to the probe side; probing explodes
+    each candidate to k (candidate, pos) rows, broadcast-joins, and
+    map-side-combines the per-candidate match count. One shuffle on the
+    candidate key; the key-set side is one distinct at key cardinality.
+    m/k here are demo-sized."""
     def positions(col):
         return _bloom_positions(col, m, k)
     bits = (keys.select(F.explode(F.array(*positions(F.col(key_col))))

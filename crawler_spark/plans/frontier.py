@@ -8,9 +8,9 @@ Mirror of the reference's drain-and-refill crawl loop
         window rank vs tokens (W2/J5) ── global budget top-k (W3)
       selected ── fetch join / UDF (S5) ── mapInPandas span parse (P2)
       200-pages ── explode link spans ── asset/blacklist/scope filters
-        (F2-F8) ── wave dedup (A2) ── bloom probe + exact anti-join vs seen
-        (F1/J1) ── robots gate (F5/J2) ── admit to frontier wave W+1
-      commit {frontier, hosts, robots, bloom} full + {documents,
+        (F2-F8) ── wave dedup (A2) ── exact anti-join vs seen (F1/J1)
+        ── robots gate (F5/J2) ── admit to frontier wave W+1
+      commit {frontier, hosts, robots} full + {documents,
         fetch_log, metrics} delta; `seen` as a `seen_delta` delta with a
         full base every spec.seen_compact_every waves, on every store
         (atomic manifest — §4.3)
@@ -22,11 +22,10 @@ single-threaded oracle in tests/test_crawl_e2e.py.
 Each wave stage has one code path. Selection shuffles on the uniform (host,
 salt) key and then on host over the pruned rows; admission shuffles once on
 the casefold key — robots/tokens joins are broadcast, the robots gate and
-every admission filter are native expressions (only the Bloom probe and the
-lazy robots-rule compile run Python), the seen anti-join is
-bloom-prefiltered (once `seen` passes spec.bloom_min_seen) and AQE-planned,
-and the fetch join's page side is the only large probe (scan-pruned by the
-selected batch's hash keys at Iceberg scale).
+every admission filter are native expressions (only the lazy robots-rule
+compile runs Python), the seen dedup is one exact AQE-planned anti-join on
+`url_hash`, and the fetch join's page side is the only large probe
+(scan-pruned by the selected batch's hash keys at Iceberg scale).
 """
 
 from __future__ import annotations
@@ -41,8 +40,9 @@ from crawler_spark.functions.canon import (
     canonicalize, canonicalize_udf, host_col, host_of,
 )
 from crawler_spark.operators import politeness
-from crawler_spark.operators.dedup import (
-    SeenBloom, anti_join_seen, build_bloom_parts,
+# build_bloom_parts is an inert stub that only perfbench/trace.py looks up
+from crawler_spark.operators.dedup import (  # noqa: F401
+    anti_join_seen, build_bloom_parts,
 )
 from crawler_spark.operators.robots import (
     build_robots_table, fetch_robots_rules, gate_frontier,
@@ -97,8 +97,7 @@ def _counted(df: DataFrame) -> tuple[DataFrame, Observation]:
     return df.observe(obs, F.count(F.lit(1)).alias("n")), obs
 
 
-def _admit(spark: SparkSession, cands: DataFrame, seen: DataFrame | None,
-           bloom: SeenBloom | None, spec: CrawlJobSpec,
+def _admit(cands: DataFrame, seen: DataFrame | None, spec: CrawlJobSpec,
            seed_hosts: list[str], wave: int,
            host_priorities: DataFrame | None = None) -> DataFrame:
     """Admission pipeline: filters -> wave dedup -> seen anti-join. The
@@ -147,9 +146,9 @@ def _admit(spark: SparkSession, cands: DataFrame, seen: DataFrame | None,
                  F.xxhash64("url_fold").alias("url_hash"),
                  F.least(F.col("m.priority"),
                          -F.col("n_refs").cast("double")).alias("priority")))
-    # F1/J1: bloom prefilter + exact anti-join against seen
+    # F1/J1: exact anti-join against seen
     if seen is not None:
-        c = anti_join_seen(c, seen, bloom, spark)
+        c = anti_join_seen(c, seen)
     # W1 host-rank dimension: per-host boost (PageRank-scaled, [-1, 0] —
     # operators/hostrank.py) folds ADDITIVELY into the representative's
     # priority AFTER the least() above: a fractional cross-host tiebreak
@@ -178,10 +177,10 @@ def run_crawl(spark: SparkSession, spec: CrawlJobSpec, fetcher,
     mode (reference streams each page as found, src/scanner/scan.rs:50-64).
     `store` — MemoryStore (default) or SnapDirStore for resumable snapshots.
     `resume` — continue from the store's latest committed wave: frontier
-    and seen reload from the last manifest; hosts, the lazy robots cache and
-    the bloom prefilter reload exactly when that manifest lists them (else:
-    no hosts, a robots re-fetch, a bloom rebuild from `seen`), and a listed
-    table that cannot be read raises; accumulated deltas
+    and seen reload from the last manifest; hosts and the lazy robots cache
+    reload exactly when that manifest lists them (else: no hosts, a robots
+    re-fetch), and a listed table that cannot be read raises; a `bloom`
+    table that older stores list is ignored; accumulated deltas
     (documents/fetch_log) are re-attached. The continued run is
     bit-identical to an uninterrupted one (north_rule; tested in
     tests/test_resume.py).
@@ -218,7 +217,7 @@ def run_crawl(spark: SparkSession, spec: CrawlJobSpec, fetcher,
         robots fetch for the admitted hosts, then the F5 robots gate on the
         deduped, novel representatives only. The gated rows keep _admit's
         column order (snapshot fingerprints hash struct(*columns))."""
-        c = _admit(spark, cands, seen_df, bloom, spec, seed_hosts, wave_no,
+        c = _admit(cands, seen_df, spec, seed_hosts, wave_no,
                    host_priorities=host_priorities)
         if lazy_robots:
             c = c.localCheckpoint(eager=True)
@@ -226,25 +225,6 @@ def run_crawl(spark: SparkSession, spec: CrawlJobSpec, fetcher,
         if spec.respect_robots_txt and robots is not None:
             c = gate_frontier(c, robots)
         return c
-
-    def _merge_bloom(delta: DataFrame | None, full: DataFrame,
-                     n_seen: int) -> None:
-        """The one Bloom activation/merge site. Below spec.bloom_min_seen the
-        filter is pure overhead (one applyInPandas + collect per wave) — the
-        exact anti-join carries dedup alone, with identical results. Once
-        `seen` (n_seen rows) crosses the threshold, build from the FULL seen
-        table once, then OR in each wave's admissions (`delta`). At the
-        10^10 design point the filter is active from minute one."""
-        nonlocal bloom_active
-        if bloom_active:
-            src = delta
-        elif n_seen >= spec.bloom_min_seen:
-            src, bloom_active = full, True
-        else:
-            return
-        if src is not None:
-            bloom.merge_from(build_bloom_parts(
-                src, bloom.n_parts, bloom.keys_per_part, bloom.fpp).collect())
 
     # seed hosts define the crawl scope (F2-F4) in both fresh and resumed runs
     if initial_frontier is not None:
@@ -265,10 +245,6 @@ def run_crawl(spark: SparkSession, spec: CrawlJobSpec, fetcher,
             "url_canon string, depth int, priority double")
         seed_hosts = sorted({host_of(c) for c in canon})
 
-    # Until _merge_bloom activates it the bloom holds no parts, and
-    # anti_join_seen runs exact.
-    bloom = SeenBloom()
-    bloom_active = False
     run = CrawlRun(spec=spec)
     docs_parts: list[DataFrame] = []
     log_parts: list[DataFrame] = []
@@ -283,8 +259,9 @@ def run_crawl(spark: SparkSession, spec: CrawlJobSpec, fetcher,
     if last is not None:
         # --- resume: reload state committed at the end of wave `last`. The
         # optional tables are read exactly when the manifest lists them; a
-        # listed table that cannot be read raises. (The wave -1 manifest
-        # has no `extra`, hence the defaults.) ---
+        # listed table that cannot be read raises. The `bloom` table that
+        # older stores list (the removed seen prefilter) is never read.
+        # (The wave -1 manifest has no `extra`, hence the defaults.) ---
         man = store.manifest(last)
         extra, tables = man.get("extra", {}), man["tables"]
         pending = store.read_full("frontier", last)
@@ -307,12 +284,6 @@ def run_crawl(spark: SparkSession, spec: CrawlJobSpec, fetcher,
                 robots = store.read_full("robots", last)
             else:
                 _ensure_robots(pending, last + 1)
-        # reload the committed prefilter bitsets; no `bloom` table (not yet
-        # active, or dropped by a forget purge) or a geometry mismatch ->
-        # rebuilt from `seen` by _merge_bloom below (identical bits)
-        if "bloom" in tables:
-            bloom_active = bloom.load_rows(
-                store.read_full("bloom", last).collect())
         docs0 = store.read_delta_union("documents", last)
         log0 = store.read_delta_union("fetch_log", last)
         if docs0 is not None:
@@ -360,8 +331,6 @@ def run_crawl(spark: SparkSession, spec: CrawlJobSpec, fetcher,
         robots = state.get("robots", robots)
         n_pending = seen_rows = n_init.get["n"]
         wave = 0
-
-    _merge_bloom(None, seen, seen_rows)
 
     while n_pending > 0 and wave < spec.max_waves:
         if spec.stop_flag_path and os.path.exists(spec.stop_flag_path):
@@ -508,27 +477,11 @@ def run_crawl(spark: SparkSession, spec: CrawlJobSpec, fetcher,
             mrows.append((JOB_END_WAVE, -1, run.n_fetched + n_sel,
                           tot_errors, tot_bytes, spec.job_id, "end"))
         metrics_df = spark.createDataFrame(mrows, METRICS_SCHEMA)
-        # Bloom merge happens BEFORE the commit so the persisted `bloom`
-        # table covers this wave's admissions — the filter must remain a
-        # superset of `seen` keys, or a resumed probe would call a seen URL
-        # "definitely new" and re-admit it (correctness, not just perf).
-        _merge_bloom(new_rows if n_new else None, seen_next, seen_rows + n_new)
         full_tables = {"frontier": pending_next, "hosts": hosts}
-        if resumable:
-            # §4.3: robots cache + bloom partitions commit with the wave so
-            # resume restores them instead of re-fetching / re-scanning seen.
-            # Both are tiny next to frontier/seen (one row per host; one
-            # bitset per bloom part).
-            if lazy_robots and robots is not None:
-                full_tables["robots"] = robots
-            if bloom_active:
-                # Geometry columns travel with the bits: load_rows refuses a
-                # snapshot built under a different (n_parts, m, k) — a wrong
-                # n_parts silently re-partitions keys and false-negatives.
-                full_tables["bloom"] = spark.createDataFrame(
-                    [(p, bytearray(b), np_, m_, k_)
-                     for p, b, np_, m_, k_ in bloom.to_rows()],
-                    "part int, bits binary, n_parts int, m long, k int")
+        if resumable and lazy_robots and robots is not None:
+            # §4.3: the robots cache commits with the wave so resume
+            # restores it instead of re-fetching (one row per host)
+            full_tables["robots"] = robots
         delta_tables = {"documents": docs, "fetch_log": flog,
                         "metrics": metrics_df}
         if (wave + 1) % spec.seen_compact_every == 0:
@@ -557,6 +510,8 @@ def run_crawl(spark: SparkSession, spec: CrawlJobSpec, fetcher,
         # which is always retained.
         if resumable and spec.snapshot_keep > 0:
             store.expire(keep_last=spec.snapshot_keep, compact_deltas=False)
+        # named for the removed Bloom merge: a key of perfbench/trace.py's
+        # LAYERS, renamed to `commit` together with perfbench
         _mark("commit_bloom")
         wave_metrics["stage_sec"] = stage_t
 

@@ -366,7 +366,7 @@ class SnapDirStore:
         spec.snapshot_keep by the wave loop): delta histories are left in
         place untouched — they ARE the output corpus and rewriting them
         every few waves would be O(total corpus) write volume — and only
-        the superseded FULL snapshots (frontier/seen/hosts/bloom/robots
+        the superseded FULL snapshots (frontier/seen/hosts/robots
         copies, the dominant storage waste of a long 10^10-URL crawl: one
         O(frontier) copy per wave) plus dead seen_delta dirs and old
         manifests are dropped. Pure directory deletes, O(1) data volume

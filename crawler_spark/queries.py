@@ -319,7 +319,7 @@ def w3_global_topk(spark, sf_dir):
 # crawl_bfs (below) exercises the full engine but its substrate (blake2b
 # synthetic web) is not SQL-derivable, so the driver can only rows-check it.
 # w4 closes that gap: the SAME per-wave admission primitives the engine runs
-# (dedup.anti_join_seen exact path + politeness.select_by_window with
+# (dedup.anti_join_seen + politeness.select_by_window with
 # leftover carry-over, frontier.py:356-413) looped over three unrolled
 # waves on an edge graph derived arithmetically from `documents` — which a
 # DuckDB twin reproduces as unrolled CTEs. This puts the north-rule
@@ -417,7 +417,7 @@ def w4_wave_admission(spark, sf_dir):
         leftover = flagged.where(~F.col("selected")).drop("selected")
         cand = (edges.join(adm.select(F.col("doc_id").alias("src")), "src")
                 .select(F.col("dst").alias("url_hash")).distinct())
-        fresh = anti_join_seen(cand, discovered, None, spark)
+        fresh = anti_join_seen(cand, discovered)
         discovered = discovered.unionByName(fresh)
         new_pending = as_pending(
             fresh.select(F.col("url_hash").alias("doc_id"))
@@ -4581,16 +4581,14 @@ _KS6_CAND_SQL = ("SELECT doc_id, source || '/' || CAST(doc_id AS VARCHAR) "
 @q("ks6_bloom_membership",
    bloom_membership_oracle_sql(_KS6_KEYS_SQL, _KS6_CAND_SQL, m=1024, k=4))
 def ks6_bloom_membership(spark, sf_dir):
-    """The URL-seen Bloom prefilter's semantics under the hash gate: build
-    a k=4/m=1024 filter from the even-doc key set, probe every doc key,
-    and emit per-candidate maybe_seen + false_positive — the false
-    positives themselves (the defining Bloom behavior, ~15 percent at
-    this fill factor) must match DuckDB exactly, which they do because
-    bit positions derive from the repo's content-stable md5 family
-    instead of the production splitmix64 bitsets (those are
-    engine-internal; soundness pytest-gated in test_bloom). See
-    operators/sketches.bloom_membership for the A5 linkage and the scale
-    shape (broadcast bits table == the engine's bitset broadcast)."""
+    """Bloom-filter membership semantics under the hash gate: build a
+    k=4/m=1024 filter from the even-doc key set, probe every doc key, and
+    emit per-candidate maybe_seen + false_positive — the false positives
+    themselves (the defining Bloom behavior, ~15 percent at this fill
+    factor) must match DuckDB exactly, which they do because bit
+    positions derive from the repo's content-stable md5 family (soundness
+    pytest-gated in test_sketches). See operators/sketches.bloom_membership
+    for the A5 linkage and the scale shape (a broadcast bits table)."""
     d = _t(spark, sf_dir, "documents")
     key = F.concat(F.col("source"), F.lit("/"),
                    F.col("doc_id").cast("string"))

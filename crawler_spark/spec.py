@@ -42,15 +42,11 @@ class CrawlJobSpec:
     token_cap: float = 16.0              # bucket capacity
 
     # -- engine knobs --
-    bloom_min_seen: int = 100_000        # build/probe the seen Bloom only once
-                                         # `seen` exceeds this — below it the
-                                         # sketch is pure overhead (anti-join
-                                         # stays exact either way, results
-                                         # identical). The filter is a fixed
-                                         # 1 MiB (dedup.SeenBloom), sized for
-                                         # ~524k keys: past a few million
-                                         # seen rows it passes nearly every
-                                         # candidate to the anti-join.
+    # No engine code reads bloom_min_seen (the seen Bloom prefilter it gated
+    # is gone) or shuffle_partitions (session.get_spark sets the shuffle
+    # partitions); both stay only because perfbench/workloads.py passes
+    # them, and go when perfbench stops passing them.
+    bloom_min_seen: int = 100_000
     shuffle_partitions: int = 32
     checkpoint_dir: str = ""             # '' = in-memory state only (no snapshots)
     seen_compact_every: int = 8          # commit `seen` as per-wave deltas
@@ -63,7 +59,7 @@ class CrawlJobSpec:
     snapshot_keep: int = 0               # >0: after each wave commit, expire
                                          # snapshots older than the last K
                                          # waves (cheap mode: superseded FULL
-                                         # frontier/seen/hosts/bloom copies +
+                                         # frontier/seen/hosts/robots copies +
                                          # dead seen deltas only; document
                                          # history untouched). 0 = keep all.
                                          # At 10^10 URLs an unexpired store

@@ -104,6 +104,36 @@ def snap_fp(spark, root: str) -> dict:
     return out
 
 
+def add_legacy_bloom(spark, root: str) -> int:
+    """Give a SnapDirStore's latest manifest the `bloom` table that stores
+    written while the seen Bloom prefilter existed list: one bitset per
+    part, each row carrying the geometry (32 parts of 2^18 bits, k = 11).
+    Returns the wave it was added to."""
+    import json
+    import os
+
+    from crawler_spark.plans.tableio import SnapDirStore, content_fingerprint
+
+    store = SnapDirStore(spark, root)
+    last = store.latest_wave()
+    bloom = spark.createDataFrame(
+        [(p, bytearray(1 << 15), 32, 1 << 18, 11) for p in range(32)],
+        "part int, bits binary, n_parts int, m long, k int")
+    path = store._snap_path("bloom", last)
+    bloom.write.parquet(path)
+    with open(store._manifest_path(last)) as fh:
+        man = json.load(fh)
+    man["tables"]["bloom"] = {
+        "mode": "full", "rows": 32,
+        "fingerprint": content_fingerprint(bloom),
+        "n_files": len([f for f in os.listdir(path)
+                        if f.endswith(".parquet")]),
+        "schema": bloom.schema.json()}
+    with open(store._manifest_path(last), "w") as fh:
+        json.dump(man, fh, indent=1)
+    return last
+
+
 # Session shapes for the environment-invariance sweeps: (shuffle partitions,
 # AQE, files.maxPartitionBytes).
 SHAPES = [("8", "false", str(128 * 1024 * 1024)),

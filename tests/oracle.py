@@ -10,7 +10,7 @@ SURVEY.md §5.3).
 The scalar leaf functions (canonicalize, extract_resolved_spans, parse_robots,
 scope predicates) are shared with the engine by design — they are
 golden-tested independently — while everything DISTRIBUTED (anti-join dedup,
-grouped token buckets, window selection, bloom prefilter, snapshot/resume) is
+grouped token buckets, window selection, snapshot/resume) is
 re-implemented here with sets and loops, so the pytest equality genuinely
 cross-checks the DataFrame logic.
 """

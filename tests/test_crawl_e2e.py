@@ -43,9 +43,7 @@ def _assert_equal(oracle, run, got):
                   "blacklist": (r"/p1[12]$",)}, id="subdomains-tld-blacklist"),
     pytest.param({"per_host_tokens": 2.0, "token_cap": 4.0}, id="tight-politeness"),
     pytest.param({"max_pages": 15}, id="global-budget"),
-    pytest.param({"delay_ms": 400, "bloom_min_seen": 1 << 62},
-                 id="delay-no-bloom"),
-    pytest.param({"bloom_min_seen": 0}, id="bloom-forced-active"),
+    pytest.param({"delay_ms": 400}, id="delay-no-bloom"),
     pytest.param({"per_host_tokens": 3.0}, id="salted-politeness"),
     pytest.param({"seen_compact_every": 2}, id="seen-delta-compact2"),
 ])

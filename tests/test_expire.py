@@ -12,8 +12,7 @@ Contracts under test (plans/tableio.py expire/gc_below, operators/purge.py):
     forward, both on the next store open;
   * purge(mode="suppress") erases page content everywhere but keeps seen
     tombstones, so a resumed crawl cannot re-admit the purged URL;
-  * purge(mode="forget") also drops the seen keys and the (non-deletable)
-    bloom table; resume rebuilds the prefilter from the filtered seen and
+  * purge(mode="forget") also drops the seen keys, so a resumed crawl
     MAY legitimately rediscover the URL;
   * purge physically deletes every pre-epoch snapshot dir and manifest.
 """
@@ -28,14 +27,14 @@ from crawler_spark.operators.purge import purge_urls
 from crawler_spark.plans.frontier import run_crawl
 from crawler_spark.plans.tableio import SnapDirStore, content_fingerprint
 from crawler_spark.spec import CrawlJobSpec
-from conftest import snap_fp
+from conftest import add_legacy_bloom, snap_fp
 
 
-def _crawl(shared_crawl, crawl_env, root, compact_every=2, **kw):
+def _crawl(shared_crawl, crawl_env, root, compact_every=2):
     """A finished crawl's committed store, copied to `root`."""
     spec = CrawlJobSpec(seeds=crawl_env.seeds, max_waves=20,
                         checkpoint_dir=root,
-                        seen_compact_every=compact_every, **kw)
+                        seen_compact_every=compact_every)
     return shared_crawl(spec), spec
 
 
@@ -186,6 +185,7 @@ def test_in_crawl_snapshot_keep(spark, crawl_env, shared_crawl, tmp_path):
 def test_purge_suppress_tombstones(spark, crawl_env, shared_crawl, tmp_path):
     d = str(tmp_path / "sup")
     run, spec = _crawl(shared_crawl, crawl_env, d)
+    add_legacy_bloom(spark, d)
     store = SnapDirStore(spark, d)
     last = store.latest_wave()
     victims = [r["doc_id"] for r in
@@ -202,6 +202,8 @@ def test_purge_suppress_tombstones(spark, crawl_env, shared_crawl, tmp_path):
     epoch = audit["epoch"]
     s2 = SnapDirStore(spark, d)
     assert s2.latest_wave() == epoch
+    # an older store's `bloom` table is not carried into the epoch
+    assert "bloom" not in s2.manifest(epoch)["tables"]
     docs = s2.read_delta_union("documents", epoch)
     assert docs.count() == n_docs0 - 3
     assert docs.where(docs["doc_id"].isin(victims)).count() == 0
@@ -228,11 +230,10 @@ def test_purge_suppress_tombstones(spark, crawl_env, shared_crawl, tmp_path):
 def test_purge_forget_erases_seen_and_bloom(spark, crawl_env, shared_crawl,
                                             tmp_path):
     d = str(tmp_path / "forget")
-    # tiny bloom threshold so the bloom table actually commits
-    run, spec = _crawl(shared_crawl, crawl_env, d, bloom_min_seen=1)
+    run, spec = _crawl(shared_crawl, crawl_env, d)
+    add_legacy_bloom(spark, d)
     store = SnapDirStore(spark, d)
     last = store.latest_wave()
-    assert "bloom" in store.manifest(last)["tables"]
     victims = [r["doc_id"] for r in
                run.documents.select("doc_id").limit(3).collect()]
     n_seen0 = store.read_seen(last).count()
@@ -244,8 +245,8 @@ def test_purge_forget_erases_seen_and_bloom(spark, crawl_env, shared_crawl,
     seen = s2.read_seen(epoch)
     assert seen.count() == n_seen0 - 3
     assert seen.where(seen["url_canon"].isin(victims)).count() == 0
-    # the non-deletable bloom table is dropped from the epoch; resume's
-    # fallback rebuilds from the filtered seen (plans/frontier.py)
+    # an older store's `bloom` table is not carried either: the filtered
+    # seen is the only dedup state a resume reads
     assert "bloom" not in s2.manifest(epoch)["tables"]
     run2 = run_crawl(spark, dataclasses.replace(spec), crawl_env[0],
                      robots_src=crawl_env[1], resume=True)

@@ -51,6 +51,15 @@ def test_resolved_spans():
                     "http://h2/y", "http://base.example.com/v.mp4"]
 
 
+def test_resolved_spans_bad_port_link_is_blank():
+    """An outlink canonicalize cannot parse (a port out of range) resolves
+    to '' like any other uncrawlable ref, instead of failing the page."""
+    html = '<a href="http://c.d:99999/x">bad</a><a href="/ok">ok</a>'
+    spans = extract_resolved_spans("http://base.example.com/p0", html)
+    assert [s[2] for s in spans if s[0] == "link"] == \
+        ["", "http://base.example.com/ok"]
+
+
 def test_empty_and_degenerate():
     assert extract_spans("") == []
     assert extract_spans("no tags at all") == [("text", "no tags at all", "", 0)]

@@ -12,7 +12,6 @@ from hypothesis import given, settings, strategies as st
 
 from crawler_spark.functions.canon import canonicalize, host_of
 from crawler_spark.operators.cuckoo import CuckooFilter, SeenCuckoo
-from crawler_spark.operators.dedup import BloomFilter
 from crawler_spark.operators.robots import parse_robots, robots_allowed
 
 settings.register_profile("ci", derandomize=True, max_examples=200,
@@ -56,36 +55,6 @@ def test_canonicalize_casefold_key_stable(href):
     if a and b:
         ha, hb = host_of(a), host_of(b)
         assert ha == hb.lower() or ha == hb      # host folds identically
-
-
-@given(keys=st.lists(st.integers(min_value=-(2**63), max_value=2**63 - 1),
-                     min_size=1, max_size=500, unique=True))
-def test_bloom_no_false_negatives(keys):
-    """The bloom prefilter admits 'definitely new' URLs WITHOUT the exact
-    anti-join — a false negative would re-admit a seen URL and break the
-    no-dup invariant, so this property is load-bearing for correctness."""
-    arr = np.array(keys, dtype=np.int64).view(np.uint64)
-    bf = BloomFilter(n_keys=len(arr), fpp=0.01)
-    bf.add(arr)
-    assert bf.contains(arr).all()
-
-
-@given(keys=st.lists(st.integers(min_value=-(2**63), max_value=2**63 - 1),
-                     min_size=1, max_size=400, unique=True))
-def test_bloom_merge_equals_bulk_build(keys):
-    """Per-wave delta merges must equal one bulk build — resume rebuilds
-    from `seen` while a live run ORs per-wave parts; both paths must yield
-    the same bitset (asserted bitwise)."""
-    arr = np.array(keys, dtype=np.int64).view(np.uint64)
-    mid = len(arr) // 2
-    bulk = BloomFilter(n_keys=64, fpp=0.01)
-    bulk.add(arr)
-    merged = BloomFilter(n_keys=64, fpp=0.01)
-    merged.add(arr[:mid])
-    other = BloomFilter(n_keys=64, fpp=0.01)
-    other.add(arr[mid:])
-    merged.merge(other)
-    assert (bulk.bits == merged.bits).all()
 
 
 @given(keys=st.lists(st.integers(min_value=-(2**63), max_value=2**63 - 1),

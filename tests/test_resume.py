@@ -23,7 +23,7 @@ from crawler_spark.plans.frontier import run_crawl
 from crawler_spark.plans.tableio import SnapDirStore, content_fingerprint
 from crawler_spark.sources.fetch import SimulatedFetcher
 from crawler_spark.spec import CrawlJobSpec
-from conftest import snap_fp
+from conftest import add_legacy_bloom, snap_fp
 
 
 def test_kill_resume_bit_identical(spark, crawl_env, shared_crawl, tmp_path):
@@ -112,18 +112,15 @@ def test_lifecycle_metrics_rows(spark, crawl_env, tmp_path):
     assert sum(r["event"] == "end" for r in rows2) == 0
 
 
-@pytest.mark.parametrize("table,spec_kw", [
-    pytest.param("hosts", {}, id="hosts"),
-    pytest.param("bloom", {"bloom_min_seen": 0}, id="bloom"),
-])
+@pytest.mark.parametrize("table", ["hosts"])
 def test_resume_refuses_missing_listed_table(spark, crawl_env, shared_crawl,
-                                             tmp_path, table, spec_kw):
+                                             tmp_path, table):
     """A table the last manifest lists but whose snapshot is gone is a
     corrupt store: resume raises instead of silently restarting that state
-    (fresh token buckets, a rebuilt bloom) and breaking bit-identity."""
+    (fresh token buckets) and breaking bit-identity."""
     fetcher, robots_df, seeds = crawl_env
     d = str(tmp_path / "kill")
-    spec = CrawlJobSpec(seeds=seeds, max_waves=2, checkpoint_dir=d, **spec_kw)
+    spec = CrawlJobSpec(seeds=seeds, max_waves=2, checkpoint_dir=d)
     shared_crawl(spec)
     store = SnapDirStore(spark, d)
     last = store.latest_wave()
@@ -321,41 +318,32 @@ def test_lazy_robots_cache_restored_not_refetched(spark, small_cfg, crawl_env,
                             .read_full("robots", last))
 
 
-def test_bloom_partitions_restored_on_resume(spark, crawl_env, shared_crawl,
-                                             tmp_path):
-    """§4.3: active bloom bitsets commit as the `bloom` table; the reloaded
-    filter is bit-equal to a from-scratch rebuild over `seen`, and a resumed
-    run keeps committing it while staying bit-identical."""
-    from crawler_spark.operators.dedup import SeenBloom, build_bloom_parts
-
+def test_resume_ignores_legacy_bloom_table(spark, crawl_env, shared_crawl,
+                                           tmp_path):
+    """Stores written while the seen Bloom prefilter existed list a `bloom`
+    table in their manifests. Resume never reads it: such a store resumes
+    bit-identically whether or not that snapshot is still on disk, and the
+    resumed commits list no `bloom`."""
     fetcher, robots_df, seeds = crawl_env
-    base = CrawlJobSpec(seeds=seeds, max_waves=20, bloom_min_seen=0)
-
-    d = str(tmp_path / "kill")
+    base = CrawlJobSpec(seeds=seeds, max_waves=20)
+    d = str(tmp_path / "legacy")
     shared_crawl(dataclasses.replace(base, checkpoint_dir=d, max_waves=2))
-    store = SnapDirStore(spark, d)
-    k = store.latest_wave()
-    assert "bloom" in store.manifest(k)["tables"]
+    last = add_legacy_bloom(spark, d)
+    d_gone = str(tmp_path / "gone")
+    shutil.copytree(d, d_gone)
+    shutil.rmtree(SnapDirStore(spark, d_gone)._snap_path("bloom", last))
 
-    restored = SeenBloom()           # the wave loop's default geometry
-    assert restored.load_rows(store.read_full("bloom", k).collect())
-    rebuilt = SeenBloom()
-    rebuilt.merge_from(build_bloom_parts(
-        store.read_seen(k), rebuilt.n_parts, rebuilt.keys_per_part,
-        rebuilt.fpp).collect())
-    # equality (not just superset): both OR exactly the seen-as-of-k keys
-    assert restored.parts == rebuilt.parts
-
-    run_crawl(spark, dataclasses.replace(base, checkpoint_dir=d),
-              fetcher, robots_src=robots_df, resume=True)
     d_full = str(tmp_path / "full")
     shared_crawl(dataclasses.replace(base, checkpoint_dir=d_full))
-    assert snap_fp(spark, d) == snap_fp(spark, d_full)
-    last = SnapDirStore(spark, d).latest_wave()
-    assert content_fingerprint(
-        SnapDirStore(spark, d).read_full("bloom", last)) == \
-        content_fingerprint(
-            SnapDirStore(spark, d_full).read_full("bloom", last))
+    want = snap_fp(spark, d_full)
+    for root in (d, d_gone):
+        run_crawl(spark, dataclasses.replace(base, checkpoint_dir=root),
+                  fetcher, robots_src=robots_df, resume=True)
+        assert snap_fp(spark, root) == want
+        s = SnapDirStore(spark, root)
+        assert s.latest_wave() > last
+        assert not any("bloom" in s.manifest(w)["tables"]
+                       for w in range(last + 1, s.latest_wave() + 1))
 
 
 def test_seen_delta_compaction_layout(spark, crawl_env, shared_crawl,

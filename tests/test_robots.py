@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import functions as F
 
 from crawler_spark.operators.robots import parse_robots, robots_allowed, path_of
@@ -227,12 +229,11 @@ def test_gate_frontier_matches_oracle_on_generated_corpus(spark):
 
 
 def test_admit_and_gate_plan_no_python(spark):
-    """With the Bloom inactive, admission (filters, scope, A2, the seen
-    anti-join) plus the robots gate plan no Python evaluation node."""
+    """Admission (filters, scope, A2, the seen anti-join) plus the robots
+    gate plan one anti-join on url_hash and no Python evaluation node."""
     import io
     from contextlib import redirect_stdout
 
-    from crawler_spark.operators.dedup import SeenBloom
     from crawler_spark.operators.robots import ROBOTS_SCHEMA, gate_frontier
     from crawler_spark.plans.frontier import _admit
     from crawler_spark.spec import CrawlJobSpec
@@ -247,10 +248,14 @@ def test_admit_and_gate_plan_no_python(spark):
         [("h0.example.com", 0, ["/p1"], ["/p*$"], 0)], ROBOTS_SCHEMA)
     spec = CrawlJobSpec(seeds=("http://h0.example.com/",))
     hosts = ["h0.example.com", "h1.example.com"]
-    admitted = _admit(spark, cands, seen, SeenBloom(), spec, hosts, 1)
+    admitted = _admit(cands, seen, spec, hosts, 1)
     buf = io.StringIO()
     with redirect_stdout(buf):
         gate_frontier(admitted, robots).explain("formatted")
     plan = buf.getvalue()
     assert "BroadcastHashJoin" in plan
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+    anti_keys = re.findall(r"Left keys \[1\]: \[(\w+)#\d+L?\]\n"
+                           r"Right keys \[1\]: \[\w+#\d+L?\]\n"
+                           r"Join type: LeftAnti", plan)
+    assert anti_keys == ["url_hash"]

@@ -163,7 +163,7 @@ only. {args.runs} run(s) per level (deterministic workload), fresh JVM each.
   scale. The measured efficiency is therefore a LOWER bound on the design's
   scaling behavior at the target scale.
 - Transferable mechanisms (what actually carries to a 1000-executor
-  cluster): per-host-salted bloom partitions ORed per wave, broadcast
+  cluster): an exact AQE-planned seen anti-join, broadcast
   robots/token joins, AQE skew-join + partition coalescing, exactly two
   wide shuffles per wave, Arrow-vectorized parse, and snapshot commits that
   bound lineage. See SURVEY.md §4.
